@@ -56,15 +56,14 @@ object Pipeline {
     val records = if (tabular.nonEmpty) Sources.unionHeterogeneous(tabular)
       else spark.emptyDataFrame
 
-    // 2-3. LLM extraction over batched records (stubbed chain here; a
-    // real deployment swaps `chain`)
+    // 2-3. LLM extraction over batched records through `chain`
     val llmTriples =
       if (records.columns.isEmpty) spark.emptyDataFrame
       else {
         val keyed = records.withColumn("__rid",
           abs(xxhash64(concat_ws("", records.columns.map(col): _*))))
         val batches = Sources.jsonBatches(keyed, "__rid", batchSize)
-        LlmChains.extractFromRecords(batches.select("batch_json").as[String])
+        LlmChains.extractFromRecords(batches.select("batch_json").as[String], chain)
       }
 
     // 3b. RDF/XML triples (already structured → no LLM pass)

@@ -159,20 +159,11 @@ object DedupQueries {
     // its offset join, so running them from two threads lets one
     // pass's jobs back-fill the other's driver round-trips. Output
     // rows unchanged: the union below is order-insensitive (groupBy).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val p1F = scala.concurrent.Future {
-      passPairs(substring(norm, 1, 16))
-        .withColumn("in_p1", lit(1)).withColumn("in_p2", lit(0))
-    }(ec)
-    val p2F = scala.concurrent.Future {
-      passPairs(substring(reverse(norm), 1, 16))
-        .withColumn("in_p1", lit(0)).withColumn("in_p2", lit(1))
-    }(ec)
-    import scala.concurrent.duration.Duration
-    val p1 = scala.concurrent.Await.result(p1F, Duration.Inf)
-    val p2 = scala.concurrent.Await.result(p2F, Duration.Inf)
-    pool.shutdown()
+    val Seq(p1, p2) = graft.Overlap(spark)(Seq(
+      () => passPairs(substring(norm, 1, 16))
+        .withColumn("in_p1", lit(1)).withColumn("in_p2", lit(0)),
+      () => passPairs(substring(reverse(norm), 1, 16))
+        .withColumn("in_p1", lit(0)).withColumn("in_p2", lit(1))))
     // checkpointed (r20): the verify input AND the provenance join
     // both consume cand — un-materialized, each re-ran BOTH SNM
     // passes (two distributed rank sorts + offset joins). Pair-scale

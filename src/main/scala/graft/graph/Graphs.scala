@@ -19,8 +19,15 @@ import org.apache.spark.sql.functions._
   *    count is the graph diameter.
   *  - PageRank/LPA/BFS shuffle once per round on the join key; ranks
   *    and frontiers are narrow two-column frames.
-  *  - Each loop localCheckpoints periodically so lineage doesn't grow
-  *    unboundedly across iterations (the classic iterative-Spark trap).
+  *  - Every loop localCheckpoints its per-round state so lineage doesn't
+  *    grow unboundedly across iterations (the classic iterative-Spark
+  *    trap). The convergence loops — connectedComponents, lubyMis,
+  *    jpColoring, maximalMatching, kTruss, dagLayers, sccColoring,
+  *    onion and boruvkaMsf — all run on one driver, [[superstep]]: it
+  *    owns the round budget, the early exit, the lazy per-round
+  *    checkpoint and its one aggregate action, and the rounds report
+  *    ([[lastRoundsExecuted]]). kCore and the fixed-iteration families
+  *    (pageRank, katz, hits, walks) keep plain `for` loops.
   */
 object Graphs {
 
@@ -111,6 +118,72 @@ object Graphs {
   }
   private def pinBySrc(edges: DataFrame): DataFrame = pin(edges, "src")
 
+  /** Rounds the last convergence loop on this thread executed — every
+    * loop that runs on [[superstep]]: [[connectedComponents]],
+    * [[lubyMis]], [[jpColoring]], [[maximalMatching]], [[kTruss]],
+    * [[dagLayers]], [[sccColoring]], [[onion]] (all of its stages) and
+    * [[boruvkaMsf]]. Observability for the early-exit contract
+    * (GraphSpec pins rounds-executed == rounds-needed, not the caller's
+    * budget). A loop that runs another loop inside its rounds
+    * (boruvkaMsf's CC fallback) reports its own rounds, not the inner
+    * loop's. */
+  private val lastRounds = new ThreadLocal[Int]
+  def lastRoundsExecuted: Int = lastRounds.get
+
+  /** The superstep driver every convergence loop runs on — one
+    * dataflow per round over a checkpointed state relation, as in
+    * Pregelix. Round i = 1..budget: `step(i, m)` builds the round's
+    * frame from the caller's state and the previous round's measure `m`
+    * (`start` before round 1). The frame is checkpointed LAZILY, so
+    * `measure` — the round's one aggregate action — materializes it in
+    * the SAME job that reads the convergence scalar (r20: an eager
+    * checkpoint + aggregate paid two jobs per round). `advance` then
+    * moves the caller's state onto the checkpoint, and the loop exits
+    * after the first round where `converged(m, m')`. The rounds report
+    * is reset to 0 before round 1, so a zero-round run (zero budget,
+    * empty input) never shows the previous loop's count, and is set
+    * after each round's `advance`, so a loop nested inside a round is
+    * overwritten by its caller's count. */
+  private def superstep[M](budget: Int, start: M)(measure: DataFrame => M,
+      converged: (M, M) => Boolean)(step: (Int, M) => DataFrame)(
+      advance: (DataFrame, M) => Unit): Unit = {
+    lastRounds.set(0)
+    var m = start
+    var i = 1
+    var done = false
+    while (i <= budget && !done) {
+      val frame = step(i, m).localCheckpoint(eager = false)
+      val next = measure(frame)
+      advance(frame, next)
+      done = converged(m, next)
+      m = next
+      lastRounds.set(i)
+      i += 1
+    }
+  }
+
+  private val rowCount: DataFrame => Long = _.count()
+  private val drained: (Long, Long) => Boolean = (_, n) => n == 0
+
+  /** Driver union-find with min-label union: every final root is the
+    * MINIMUM of its component under `ord`, whatever order the pairs
+    * arrive in — exactly the star contraction's fixed point, so labels
+    * equal [[connectedComponents]]'. Returns (member, component) for
+    * every endpoint. */
+  private def minLabelComponents[T](pairs: Seq[(T, T)])(
+      implicit ord: Ordering[T]): Seq[(T, T)] = {
+    val parent = scala.collection.mutable.Map.empty[T, T]
+    def find(x: T): T = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+    }
+    pairs.flatMap(p => Seq(p._1, p._2)).distinct.map(x => (x, find(x)))
+  }
+
   /** C2: connected components via alternating large-star / small-star.
     * Returns (id, component) where component is the lexicographic min
     * vertex id of the component. */
@@ -136,24 +209,14 @@ object Graphs {
     if (n > maxDriverRows)
       return connectedComponents(p)
     val spark = p.sparkSession
-    val rows = p.collect()
-    def lt(a: Any, b: Any): Boolean = (a, b) match {
-      case (x: java.lang.Long, y: java.lang.Long) => x < y
-      case (x: java.lang.Integer, y: java.lang.Integer) => x.intValue < y.intValue
-      case (x: String, y: String) => x < y
-      case _ => a.toString < b.toString
+    val idOrder: Ordering[Any] = (a, b) => (a, b) match {
+      case (x: java.lang.Long, y: java.lang.Long) => x.compareTo(y)
+      case (x: java.lang.Integer, y: java.lang.Integer) => x.compareTo(y)
+      case (x: String, y: String) => x.compareTo(y)
+      case _ => a.toString.compareTo(b.toString)
     }
-    val parent = scala.collection.mutable.Map.empty[Any, Any]
-    def find(x: Any): Any = {
-      val p = parent.getOrElse(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    rows.foreach { r =>
-      val (ra, rb) = (find(r.get(0)), find(r.get(1)))
-      if (ra != rb) { if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
-    }
-    val labels = rows.flatMap(r => Seq(r.get(0), r.get(1))).distinct
-      .map(x => org.apache.spark.sql.Row(x, find(x)))
+    val labels = minLabelComponents(p.collect().toSeq.map(r => (r.get(0), r.get(1))))(idOrder)
+      .map { case (x, c) => org.apache.spark.sql.Row(x, c) }
     val t = pairs.schema.head.dataType
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", t),
@@ -201,20 +264,9 @@ object Graphs {
         expr("bit_xor(xxhash64(u, v))")).first()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
-    var prevSig = sig(e)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      // r20: lazy checkpoint — the sig aggregate below materializes the
-      // round's edge set in the SAME job that reads its signature
-      // (eager + aggregate paid two jobs per round)
-      val next = smallStar(largeStar(e)).localCheckpoint(eager = false)
-      val nextSig = sig(next)
-      converged = nextSig == prevSig
-      prevSig = nextSig
-      e = next
-      i += 1
-    }
+    superstep(maxIter, sig(e))(sig, _ == _) { (_, _) =>
+      smallStar(largeStar(e))
+    } { (next, _) => e = next }
     // e is now (member, center) star edges; centers map to themselves
     val members = e.select(col("u").as("id"), col("v").as("component"))
     val centers = e.select(col("v").as("id"), col("v").as("component")).distinct()
@@ -324,15 +376,7 @@ object Graphs {
     * GRAPH/graph_builder.py builds the graph; independent-set style
     * selection is the engine-side generalization used for e.g.
     * conflict-free batch scheduling of entity updates). */
-  /** Rounds the last drained-loop primitive on this thread actually
-    * executed ([[lubyMis]] / [[jpColoring]] / [[maximalMatching]]) —
-    * observability for the early-exit contract (GraphSpec pins
-    * rounds-executed == rounds-needed, not the caller's budget). */
-  private val lastRounds = new ThreadLocal[Int]
-  def lastRoundsExecuted: Int = lastRounds.get
-
   def lubyMis(und: DataFrame, verts: DataFrame, rounds: Int): DataFrame = {
-    lastRounds.set(0) // a zero-round run (empty active set) must not leak the prior primitive's count
     val both = und.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
       .localCheckpoint(eager = true)
@@ -342,11 +386,9 @@ object Graphs {
     // early exit once the active set drains (the SCC delta-empty
     // idiom): every remaining round would join against an empty frame
     // and emit nothing, but still pay the full per-round plan floor —
-    // the fleet's #1 query was paying budget−needed empty rounds. One
-    // scalar action per round, on the already-materialized checkpoint.
-    var i = 1
-    var drained = active.isEmpty
-    while (i <= rounds && !drained) {
+    // the fleet's #1 query was paying budget−needed empty rounds. An
+    // empty active set runs no round at all.
+    superstep(if (active.isEmpty) 0 else rounds, 0L)(rowCount, drained) { (i, _) =>
       val nmin = e2
         .join(active.select(col("id").as("src"), col("p").as("sp")), "src")
         .groupBy("dst").agg(min(col("sp")).as("mp"))
@@ -363,16 +405,8 @@ object Graphs {
       val newly = mis.select(col("id"), lit(1).as("in_mis"), lit(i).as("decided_round"))
         .unionAll(dominated.select(col("id"), lit(0).as("in_mis"), lit(i).as("decided_round")))
       decided = Some(decided.map(_.unionAll(newly)).getOrElse(newly))
-      // lazy checkpoint + count: one job materializes AND decides drain
-      // (see jpColoring — the eager + isEmpty spelling paid two)
-      val nextActive = active
-        .join(mis.unionAll(dominated).select("id"), Seq("id"), "left_anti")
-        .localCheckpoint(eager = false)
-      drained = nextActive.count() == 0
-      active = nextActive
-      lastRounds.set(i)
-      i += 1
-    }
+      active.join(mis.unionAll(dominated).select("id"), Seq("id"), "left_anti")
+    } { (next, _) => active = next }
     both.unpersist()
     decided.getOrElse(verts.limit(0).select(col("id"),
       lit(1).as("in_mis"), lit(0).as("decided_round")))
@@ -393,7 +427,6 @@ object Graphs {
     * vertices only (exact for the fixed budget, the MIS convention);
     * O(E) joins per round, expected O(log n) rounds to drain. */
   def jpColoring(und: DataFrame, verts: DataFrame, rounds: Int): DataFrame = {
-    lastRounds.set(0) // see lubyMis: zero-round runs must report 0, not the prior run
     val both = und.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
       .localCheckpoint(eager = true)
@@ -401,9 +434,7 @@ object Graphs {
     var active = verts.select(col("id"), col("p")).localCheckpoint(eager = true)
     var colored: Option[DataFrame] = None
     // drained-loop early exit, same contract as lubyMis
-    var i = 1
-    var drained = active.isEmpty
-    while (i <= rounds && !drained) {
+    superstep(if (active.isEmpty) 0 else rounds, 0L)(rowCount, drained) { (i, _) =>
       val nmin = e2
         .join(active.select(col("id").as("src"), col("p").as("sp")), "src")
         .groupBy("dst").agg(min(col("sp")).as("mp"))
@@ -435,16 +466,8 @@ object Graphs {
         .select(col("id"), mexCol.as("color"),
           lit(i).as("decided_round")).localCheckpoint(eager = true)
       colored = Some(colored.map(_.unionAll(newly)).getOrElse(newly))
-      // lazy checkpoint + count: one job materializes the next active
-      // frame AND decides drain (the eager-checkpoint + isEmpty
-      // spelling paid a second, separate job per round)
-      val nextActive = active.join(m, Seq("id"), "left_anti")
-        .localCheckpoint(eager = false)
-      drained = nextActive.count() == 0
-      active = nextActive
-      lastRounds.set(i)
-      i += 1
-    }
+      active.join(m, Seq("id"), "left_anti")
+    } { (next, _) => active = next }
     both.unpersist()
     colored.getOrElse(verts.limit(0).select(col("id"),
       lit(0L).as("color"), lit(0).as("decided_round")))
@@ -465,14 +488,11 @@ object Graphs {
     * endpoint-keyed min aggregation + one join back + one semi-ish
     * retirement join — the edge frame shrinks geometrically. */
   def maximalMatching(edges: DataFrame, rounds: Int): DataFrame = {
-    lastRounds.set(0) // see lubyMis: zero-round runs must report 0, not the prior run
     var active = edges.select(col("u"), col("v"), col("pkey"))
       .localCheckpoint(eager = true)
     var out: Option[DataFrame] = None
     // drained-loop early exit, same contract as lubyMis/jpColoring
-    var r = 1
-    var drained = active.isEmpty
-    while (r <= rounds && !drained) {
+    superstep(if (active.isEmpty) 0 else rounds, 0L)(rowCount, drained) { (r, _) =>
       // one flagged checkpoint per round (the lubyMis r15 discipline)
       val byVertex = active.select(col("u").as("x"), col("pkey"))
         .unionAll(active.select(col("v").as("x"), col("pkey")))
@@ -489,20 +509,11 @@ object Graphs {
         .unionAll(matched.select(col("v").as("x"))).distinct()
       val newly = matched.select(col("u"), col("v"), lit(r).as("matched_round"))
       out = Some(out.map(_.unionAll(newly)).getOrElse(newly))
-      // lazy checkpoint + count (see jpColoring): materializes the next
-      // active frame in the SAME job that decides drain — previously
-      // the isEmpty action ran the two anti-joins and the next round's
-      // byVertex re-ran them from the flagged checkpoint
-      val nextActive = flagged.filter(!col("matched"))
+      flagged.filter(!col("matched"))
         .select(col("u"), col("v"), col("pkey"))
         .join(taken.select(col("x").as("u")), Seq("u"), "left_anti")
         .join(taken.select(col("x").as("v")), Seq("v"), "left_anti")
-        .localCheckpoint(eager = false)
-      drained = nextActive.count() == 0
-      active = nextActive
-      lastRounds.set(r)
-      r += 1
-    }
+    } { (next, _) => active = next }
     out.getOrElse(edges.limit(0).select(col("u"), col("v"),
       lit(0).as("matched_round")))
   }
@@ -836,12 +847,13 @@ object Graphs {
     * Cost per round: one two-join triangle enumeration + a keyed
     * aggregation — O(Σ d(u)·d(v) over edges), never all-pairs. */
   def kTruss(canonical: DataFrame, k: Int, iterations: Int): DataFrame = {
-    var e = canonical.select(col("u"), col("v")).localCheckpoint(eager = true)
-    var result = e.withColumn("support", lit(0L))
-    var prevEdges = -1L
-    var i = 1
-    var done = false
-    while (i <= iterations && !done) {
+    var result = canonical.select(col("u"), col("v")).localCheckpoint(eager = true)
+      .withColumn("support", lit(0L))
+    // drained-loop exit: a round that drops no edge recomputes the SAME
+    // supports next round — an unchanged edge count is the convergence
+    // certificate (round 1 compares against no edge count at all)
+    superstep(iterations, -1L)(rowCount, _ == _) { (_, _) =>
+      val e = result.select("u", "v")
       // triangles a<b<c over the current edge set
       val t = e.select(col("u").as("a"), col("v").as("b"))
         .join(e.select(col("u").as("b"), col("v").as("c")), "b")
@@ -850,22 +862,11 @@ object Graphs {
         .unionAll(t.select(col("b").as("u"), col("c").as("v")))
         .unionAll(t.select(col("a").as("u"), col("c").as("v")))
         .groupBy("u", "v").agg(count(lit(1)).as("support"))
-      result = e.join(sup, Seq("u", "v"), "left")
+      e.join(sup, Seq("u", "v"), "left")
         .select(col("u"), col("v"),
           coalesce(col("support"), lit(0L)).as("support"))
         .filter(col("support") >= k - 2)
-        // r20: lazy checkpoint + count — one job materializes the
-        // round's survivors AND reads the convergence certificate
-        .localCheckpoint(eager = false)
-      // drained-loop exit: a round that drops no edge recomputes the
-      // SAME supports next round — the count is the convergence
-      // certificate
-      val n = result.count()
-      if (n == prevEdges) done = true
-      prevEdges = n
-      e = result.select("u", "v")
-      i += 1
-    }
+    } { (next, _) => result = next }
     result
   }
 
@@ -1299,23 +1300,22 @@ object Graphs {
     // union+max over all of E: 7.3 s → frontier rounds at sf0.1.)
     val all = e.select(col("u").as("id")).unionAll(e.select(col("v").as("id")))
       .distinct().localCheckpoint(eager = true)
-    var frontier = all
+    var frontier = all.withColumn("level", lit(0))
     // guarded frontier broadcast (the SCC move, r10): with the edge
     // side u-pinned and the frontier broadcast, the hop join moves
     // NOTHING — the per-round distinct is the only shuffle left; the
     // count also buys the early exit (an empty frontier means every
     // remaining round is a no-op, so levels are already final)
-    var nF = frontier.count()
-    var acc = all.withColumn("level", lit(0))
-    var i = 1
-    while (i <= iterations && nF > 0) {
+    val n0 = all.count()
+    var acc = frontier
+    superstep(if (n0 == 0) 0 else iterations, n0)(rowCount, drained) { (i, nF) =>
       val f = if (nF < SccBroadcastRows) broadcast(frontier.select(col("id")))
               else frontier.select(col("id"))
-      frontier = e.join(f, e("u") === col("id"))
-        .select(e("v").as("id")).distinct().localCheckpoint(eager = true)
-      nF = frontier.count()
-      if (nF > 0) acc = acc.unionAll(frontier.withColumn("level", lit(i)))
-      i += 1
+      e.join(f, e("u") === col("id"))
+        .select(e("v").as("id")).distinct().withColumn("level", lit(i))
+    } { (next, nF) =>
+      frontier = next
+      if (nF > 0) acc = acc.unionAll(next)
     }
     val out = acc.groupBy("id").agg(max(col("level")).as("level"))
       .localCheckpoint(eager = true)
@@ -1401,7 +1401,7 @@ object Graphs {
     // never moves at all, and a repartition+cache would only add a
     // full-edge exchange of pure overhead
     val e2 = if (pinEdges) pin(e2raw, "send") else e2raw
-    var st = (labels match {
+    val st0 = (labels match {
       case Some(l) =>
         l.select(col("id"), col("lbl").as("fwd_min"), col("lbl").as("bwd_min"))
       case None =>
@@ -1410,69 +1410,57 @@ object Graphs {
           .distinct()
           .select(col("id"), col("id").as("fwd_min"), col("id").as("bwd_min"))
     }).localCheckpoint(eager = true)
-    // initial frontier is a 2|V|-row SELECT over the checkpointed
-    // state — no further checkpoint needed (re-scanning a checkpoint
-    // is cheap), and ONE count guards the broadcast
-    val n0 = st.count()
-    def guardedFrontier(fwdLeg: DataFrame, bwdLeg: DataFrame,
-        n: Long): DataFrame = {
-      val c = fwdLeg.unionAll(bwdLeg)
-      if (n > 0 && n < SccBroadcastRows) broadcast(c) else c
+    // the round state carries the per-side dropped flags the next
+    // round's frontier filters on; round 1's frontier is EVERY vertex
+    // on both sides — a 2|V|-row SELECT over the checkpointed state (no
+    // further checkpoint needed: re-scanning a checkpoint is cheap),
+    // and ONE count guards its broadcast
+    var merged = st0.select(col("*"), lit(true).as("fd"), lit(true).as("bd"))
+    val n0 = st0.count()
+    // coalesce: sum over an EMPTY frame is null, and getLong would
+    // NPE — an empty edge/label input must exit cleanly instead
+    def changes(df: DataFrame): (Long, Long) = {
+      val cnt = df.agg(
+        coalesce(sum(col("fd").cast("long")), lit(0L)).as("nf"),
+        coalesce(sum(col("bd").cast("long")), lit(0L)).as("nb")).collect().head
+      (cnt.getLong(0), cnt.getLong(1))
     }
-    var ch = guardedFrontier(
-      st.select(col("id").as("sid"), col("fwd_min").as("m"), lit(true).as("sfw")),
-      st.select(col("id").as("sid"), col("bwd_min").as("m"), lit(false).as("sfw")),
-      2 * n0)
-    var i = 0
-    var fixedPoint = false
-    while (i < rounds && !fixedPoint) {
-      i += 1
+    // frontier broadcast is decided EXPLICITLY from exact row counts:
+    // AQE alone can't save the edge side here — both shuffle stages of
+    // the SMJ are submitted concurrently, so by the time the
+    // materialized frontier proves tiny the edge exchange has already
+    // run. A driver-side guard (rows < SccBroadcastRows) broadcasts
+    // small frontiers statically — zero edge movement per round — and
+    // degrades to the shuffle join exactly when a frontier is big
+    // enough that broadcasting it would hurt (the 10⁹-vertex case).
+    // BOTH counts come from the round's ONE aggregate over the
+    // checkpointed frame, and the frontier frames themselves are plain
+    // filters over that checkpoint — re-scanned cheaply at use, no
+    // per-frontier checkpoint jobs (r10: 5 driver actions per round
+    // cut to 2, r20: to 1)
+    superstep(rounds, (n0, n0))(changes, (_, c) => c == ((0L, 0L))) { (_, c) =>
+      val fwdLeg = merged.filter(col("fd")).select(col("id").as("sid"),
+        col("fwd_min").as("m"), lit(true).as("sfw"))
+      val bwdLeg = merged.filter(col("bd")).select(col("id").as("sid"),
+        col("bwd_min").as("m"), lit(false).as("sfw"))
+      val n = c._1 + c._2
+      val ch = if (n > 0 && n < SccBroadcastRows) broadcast(fwdLeg.unionAll(bwdLeg))
+               else fwdLeg.unionAll(bwdLeg)
       val cand = e2.join(ch,
           e2("send") === col("sid") && e2("fw") === col("sfw"))
         .groupBy(e2("recv").as("id"))
         .agg(min(when(col("sfw"), col("m"))).as("cf"),
           min(when(!col("sfw"), col("m"))).as("cb"))
-      val merged = st.join(cand, Seq("id"), "left")
+      merged.select(col("id"), col("fwd_min"), col("bwd_min"))
+        .join(cand, Seq("id"), "left")
         .select(col("id"),
           least(col("fwd_min"), coalesce(col("cf"), col("fwd_min"))).as("fwd_min"),
           least(col("bwd_min"), coalesce(col("cb"), col("bwd_min"))).as("bwd_min"),
           (coalesce(col("cf"), col("fwd_min")) < col("fwd_min")).as("fd"),
           (coalesce(col("cb"), col("bwd_min")) < col("bwd_min")).as("bd"))
-        // r20: lazy — the cnt aggregate below materializes the
-        // checkpoint in the SAME job that reads the change counts
-        // (eager + aggregate paid two driver actions per round)
-        .localCheckpoint(eager = false)
-      st = merged.select(col("id"), col("fwd_min"), col("bwd_min"))
-      // frontier broadcast is decided EXPLICITLY from exact row
-      // counts: AQE alone can't save the edge side here — both
-      // shuffle stages of the SMJ are submitted concurrently, so by
-      // the time the materialized frontier proves tiny the edge
-      // exchange has already run. A driver-side guard (rows <
-      // SccBroadcastRows) broadcasts small frontiers statically —
-      // zero edge movement per round — and degrades to the shuffle
-      // join exactly when a frontier is big enough that broadcasting
-      // it would hurt (the 10⁹-vertex case). BOTH counts come from
-      // ONE aggregate over the checkpointed frame, and the frontier
-      // frames themselves are plain filters over that checkpoint —
-      // re-scanned cheaply at use, no per-frontier checkpoint jobs
-      // (r10: 5 driver actions per round cut to 2)
-      // coalesce: sum over an EMPTY frame is null, and getLong would
-      // NPE — an empty edge/label input must exit cleanly instead
-      val cnt = merged.agg(
-        coalesce(sum(col("fd").cast("long")), lit(0L)).as("nf"),
-        coalesce(sum(col("bd").cast("long")), lit(0L)).as("nb")).collect().head
-      val nF = cnt.getLong(0)
-      val nB = cnt.getLong(1)
-      ch = guardedFrontier(
-        merged.filter(col("fd")).select(col("id").as("sid"),
-          col("fwd_min").as("m"), lit(true).as("sfw")),
-        merged.filter(col("bd")).select(col("id").as("sid"),
-          col("bwd_min").as("m"), lit(false).as("sfw")),
-        nF + nB)
-      fixedPoint = nF == 0 && nB == 0
-    }
+    } { (next, _) => merged = next }
     if (pinEdges) e2.unpersist()
-    st
+    merged.select(col("id"), col("fwd_min"), col("bwd_min"))
   }
 
   /** C25: neighborhood function N(r) = Σ_v |B(v, r)| — the HyperBall
@@ -1617,47 +1605,41 @@ object Graphs {
     // and nothing is removed to orphan one), so its rounds are pure
     // barrier cost; coreness semantics are unchanged (nobody can carry
     // coreness < kMin − 1)
-    lastRounds.set(0)
-    var executed = 0
-    for (k <- kMin to kMax) {
-      var r = 1
-      var drained = false
-      while (r <= roundsPerK && !drained) {
+    // ONE superstep runs the whole (k, r) schedule, so the rounds
+    // report covers every stage; per round the measure is the count of
+    // vertices below k, read in the job that materializes the degrees
+    var k = kMin
+    var r = 1
+    superstep((kMax - kMin + 1) * roundsPerK, 0L)(
+        _.filter(col("deg") < k).count(), (_, _) => k > kMax) { (_, _) =>
+      verts.join(degreesOf(e), Seq("id"), "left")
+        .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg"))
+    } { (deg, dropped) =>
+      if (dropped == 0) {
+        // degrees are unchanged for the rest of this stage — rounds
+        // r+1..roundsPerK provably drop nothing (the MIS/coloring
+        // drained-loop idiom): skip their barriers; the output is
+        // identical by construction because empty rounds CONTRIBUTE
+        // nothing and survivor/later layers are schedule literals
+        k += 1
+        r = 1
+      } else {
         // layer indices are SCHEDULE-fixed, not execution-fixed, so a
         // drained stage's skipped rounds change nothing downstream
         val layer = (k - kMin) * roundsPerK + r
-        executed += 1
-        // r20: lazy checkpoint + dropped-count — ONE job materializes
-        // the round's degree frame and decides the drain (the eager
-        // checkpoint + isEmpty spelling paid a second job per round)
-        val deg = verts.join(degreesOf(e), Seq("id"), "left")
-          .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg"))
-          .localCheckpoint(eager = false)
-        val dropped = deg.filter(col("deg") < k)
-        if (dropped.count() == 0) {
-          // degrees are unchanged for the rest of this stage — rounds
-          // r+1..roundsPerK provably drop nothing (the MIS/coloring
-          // drained-loop idiom): skip their barriers; the output is
-          // identical by construction because empty rounds CONTRIBUTE
-          // nothing and survivor/later layers are schedule literals
-          drained = true
-        } else {
-          // out stays un-checkpointed: each dropped frame is a filter
-          // of ITS round's checkpointed deg, so the union's lineage is
-          // already flat and O(V) total
-          out = out.unionAll(dropped
-            .select(col("id"), lit(k - 1).as("coreness"),
-              lit(layer).as("layer")))
-          verts = deg.filter(col("deg") >= k).select(col("id"))
-          e = checkpointEvery(
-            e.join(verts.withColumnRenamed("id", "u"), Seq("u"), "left_semi")
-              .join(verts.withColumnRenamed("id", "v"), Seq("v"), "left_semi")
-              .select(col("u"), col("v")), layer, every = 2)
-          r += 1
-        }
+        // out stays un-checkpointed: each dropped frame is a filter of
+        // ITS round's checkpointed deg, so the union's lineage is
+        // already flat and O(V) total
+        out = out.unionAll(deg.filter(col("deg") < k)
+          .select(col("id"), lit(k - 1).as("coreness"), lit(layer).as("layer")))
+        verts = deg.filter(col("deg") >= k).select(col("id"))
+        e = checkpointEvery(
+          e.join(verts.withColumnRenamed("id", "u"), Seq("u"), "left_semi")
+            .join(verts.withColumnRenamed("id", "v"), Seq("v"), "left_semi")
+            .select(col("u"), col("v")), layer, every = 2)
+        if (r == roundsPerK) { k += 1; r = 1 } else r += 1
       }
     }
-    lastRounds.set(executed)
     out.unionAll(verts.select(col("id"), lit(kMax).as("coreness"),
       lit((kMax - kMin + 1) * roundsPerK + 1).as("layer")))
   }
@@ -1709,26 +1691,22 @@ object Graphs {
     var comp = vertices.select(col("id"), col("id").cast("string").as("c"))
       .localCheckpoint(eager = true)
     var forest: DataFrame = null
-    var done = false
-    var round = 0
-    while (!done && round < maxRounds) {
+    // a round that picks no edge is the fixed point
+    superstep(maxRounds, 0L)(rowCount, drained) { (_, _) =>
       val ce = e0
         .join(comp.select(col("id").as("u"), col("c").as("cu")), "u")
         .join(comp.select(col("id").as("v"), col("c").as("cv")), "v")
         .filter(col("cu") =!= col("cv"))
       val pick = struct(col("w"), col("u"), col("v"),
         col("cu"), col("cv"))
-      val chosen = ce.select(col("cu").as("c"), pick.as("e"))
+      ce.select(col("cu").as("c"), pick.as("e"))
         .unionAll(ce.select(col("cv").as("c"), pick.as("e")))
         .groupBy("c").agg(min(col("e")).as("e"))
         .select(col("e.u").as("u"), col("e.v").as("v"), col("e.w").as("w"),
           col("e.cu").as("cu"), col("e.cv").as("cv"))
-        // r20: lazy checkpoint + count — ONE job materializes the
-        // round's picks and guards emptiness (eager + count paid two)
-        .distinct().localCheckpoint(eager = false)
-      val nChosen = chosen.count() // the round's one scalar guard action
-      if (nChosen == 0) done = true
-      else {
+        .distinct()
+    } { (chosen, nChosen) =>
+      if (nChosen > 0) {
         val picked = chosen.select(col("u"), col("v"), col("w"))
         // r20: the forest union needs no per-round checkpoint — each
         // leg is a narrow select over ITS round's checkpointed picks,
@@ -1747,23 +1725,10 @@ object Graphs {
         // for a first round on a graph with ≥ millions of components.
         val merged: DataFrame =
           if (nChosen <= MsfLocalMergeMax) {
-            val pairs = chosen.select(col("cu"), col("cv"))
-              .collect().map(r => (r.getString(0), r.getString(1)))
-            val parent = scala.collection.mutable.Map.empty[String, String]
-            def find(x: String): String = {
-              val p = parent.getOrElse(x, x)
-              if (p == x) x else { val r = find(p); parent(x) = r; r }
-            }
-            pairs.sortBy(identity).foreach { case (a, b) =>
-              val (ra, rb) = (find(a), find(b))
-              if (ra != rb) { // min-label union: deterministic labels
-                if (ra < rb) parent(rb) = ra else parent(ra) = rb
-              }
-            }
-            val labels = pairs.flatMap(p => Seq(p._1, p._2)).distinct
-              .map(x => (x, find(x)))
+            val labels = minLabelComponents(chosen.select(col("cu"), col("cv"))
+              .collect().toSeq.map(r => (r.getString(0), r.getString(1))))
             import e0.sparkSession.implicits._
-            broadcast(labels.toSeq.toDF("c_str", "component"))
+            broadcast(labels.toDF("c_str", "component"))
           } else {
             connectedComponents(chosen.select(col("cu").as("u"), col("cv").as("v")))
               .select(col("id").as("c_str"), col("component"))
@@ -1772,7 +1737,6 @@ object Graphs {
           .join(merged, comp("c") === merged("c_str"), "left")
           .select(col("id"), coalesce(col("component"), col("c")).as("c"))
           .localCheckpoint(eager = true)
-        round += 1
       }
     }
     if (forest == null) e0.limit(0) else forest

@@ -68,7 +68,7 @@ object KgQueries {
   def kgExtractJson(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     LlmChains.extractFromRecords(
-      Tables.documents(spark, dir).select("text").as[String])
+      Tables.documents(spark, dir).select("text").as[String], LlmChains.StubChain)
   }
 
   def kgNormalizeEntities(spark: SparkSession, dir: String): DataFrame = {

@@ -44,6 +44,7 @@ object LlmChains {
     * whole partition. */
   final case class RetryingChain(inner: Chain, maxAttempts: Int = 3,
       baseDelayMs: Long = 100) extends Chain {
+    require(maxAttempts > 0, s"RetryingChain needs maxAttempts >= 1, got $maxAttempts")
     def invoke(prompts: Iterator[String]): Iterator[String] =
       prompts.map { p =>
         var attempt = 0
@@ -100,8 +101,8 @@ object LlmChains {
       .select(col("t.subject"), col("t.subject_type"), col("t.relation"),
         col("t.object"), col("t.object_type"))
 
-  /** End-to-end stub extraction pipeline: records (as JSON strings) →
-    * stub chain → recovered triplet rows. */
-  def extractFromRecords(records: Dataset[String]): DataFrame =
-    extractTripletRows(invokePartitionwise(records, StubChain).toDF(), col("value"))
+  /** End-to-end extraction: records (as JSON strings) → `chain` →
+    * recovered triplet rows. */
+  def extractFromRecords(records: Dataset[String], chain: Chain): DataFrame =
+    extractTripletRows(invokePartitionwise(records, chain).toDF(), col("value"))
 }

@@ -214,9 +214,9 @@ object SimQueries {
     beamTopK(beamVisited(spark, emb, g, entry, BeamWidth, BeamHops))
   }
 
-  /** Materialize the exact-truth (brute) frame on a side thread while
-    * the caller's beam chain executes its inherently sequential hop
-    * checkpoints on this one (r20, guide §2.6: the two subtrees are
+  /** Materialize the exact-truth (brute) frame on one [[graft.Overlap]]
+    * thread while the caller's beam chain executes its inherently
+    * sequential hop checkpoints on another (r20: the two subtrees are
     * independent, so the brute job back-fills the idle cores the hop
     * jobs leave; previously the brute subtree evaluated INSIDE the
     * final join's job, after the whole chain had finished).
@@ -224,16 +224,10 @@ object SimQueries {
     * materialization overlaps. */
   private def exactOverlapped(spark: SparkSession, dir: String)
       (chain: => DataFrame): (DataFrame, DataFrame) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val exactF = scala.concurrent.Future {
-      simTopkBrute(spark, dir).select(col("q_id"), col("n_id"))
-        .localCheckpoint(eager = true)
-    }(ec)
-    val h = chain
-    val exact = scala.concurrent.Await.result(exactF,
-      scala.concurrent.duration.Duration.Inf)
-    pool.shutdown()
+    val Seq(exact, h) = graft.Overlap(spark)(Seq(
+      () => simTopkBrute(spark, dir).select(col("q_id"), col("n_id"))
+        .localCheckpoint(eager = true),
+      () => chain))
     (exact, h)
   }
 
@@ -441,31 +435,21 @@ object SimQueries {
       .crossJoin(emb.agg(min(col("vec_id")).as("n_id")))
     // the widths are INDEPENDENT sweeps over the same stored graph —
     // run their hop loops (each a chain of driver-blocking eager
-    // checkpoints) from a small thread pool (guide §2.6: overlap
-    // independent jobs) so one width's job tail back-fills the
-    // others' scheduling gaps; the result union keeps the original
-    // deterministic width order, so output rows are unchanged
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      BeamSweepWidths.size)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val futures = BeamSweepWidths.map { wd =>
-      scala.concurrent.Future {
-        val beam = beamTopK(beamVisited(spark, emb, g, entry, wd, BeamHops))
-          .select("q_id", "n_id")
-        val hits = beam.join(brute, Seq("q_id", "n_id"), "left_semi")
-          .groupBy("q_id").agg(count(lit(1)).as("hits"))
-        qs.join(hits, Seq("q_id"), "left")
-          .select(lit(wd).as("beam_width"), col("q_id"),
-            coalesce(col("hits"), lit(0L)).as("hits"),
-            round(coalesce(col("hits"), lit(0L)).cast("double") / K, 4)
-              .as("recall"))
-      }
-    }
-    val frames = futures.map(f => scala.concurrent.Await.result(
-      f, scala.concurrent.duration.Duration.Inf))
-    pool.shutdown()
-    frames.reduce(_ unionAll _)
+    // checkpoints) from [[graft.Overlap]]'s pool so one width's job
+    // tail back-fills the others' scheduling gaps; the result union
+    // keeps the original deterministic width order, so output rows are
+    // unchanged
+    graft.Overlap(spark)(BeamSweepWidths.map { wd => () =>
+      val beam = beamTopK(beamVisited(spark, emb, g, entry, wd, BeamHops))
+        .select("q_id", "n_id")
+      val hits = beam.join(brute, Seq("q_id", "n_id"), "left_semi")
+        .groupBy("q_id").agg(count(lit(1)).as("hits"))
+      qs.join(hits, Seq("q_id"), "left")
+        .select(lit(wd).as("beam_width"), col("q_id"),
+          coalesce(col("hits"), lit(0L)).as("hits"),
+          round(coalesce(col("hits"), lit(0L)).cast("double") / K, 4)
+            .as("recall"))
+    }).reduce(_ unionAll _)
   }
 
   /** F24: MMR selection depth and candidate-pool width. */

@@ -112,25 +112,72 @@ object IngestQueries {
     Sources.unionHeterogeneous(Seq(n, r))
   }
 
-  def ingRdf(spark: SparkSession, dir: String): DataFrame =
-    RdfXml.rdfTriples(spark, "/root/reference/data/*.xml")
+  /** A5 wire face: nation and region written out as SKOS/DC RDF/XML,
+    * one document per region file, and read back through the
+    * binaryFile extractor (the ing_csv round-trip pattern). Each file
+    * exercises the reference's rules: a region Concept labelled by
+    * skos:prefLabel with an xml:lang note; nations labelled by
+    * skos:altLabel (even keys) or only rdfs:label (odd keys), so the
+    * isRelatedTo subject resolves through the fallback chain while the
+    * object resolves through the per-FILE label map; a wikidata sameAs
+    * that falls back to its URI fragment; and a hexBinary note that is
+    * dropped by datatype. */
+  def ingRdf(spark: SparkSession, dir: String): DataFrame = {
+    def text(c: org.apache.spark.sql.Column) =
+      regexp_replace(regexp_replace(regexp_replace(c, "&", "&amp;"), "<", "&lt;"), ">", "&gt;")
+    val nk = col("n_nationkey").cast("string")
+    val nationXml = concat(
+      lit("""<edm:Place rdf:about="g/nation/"""), nk, lit("\">"),
+      when(col("n_nationkey") % 2 === 0,
+        concat(lit("<skos:altLabel>"), text(col("n_name")), lit("</skos:altLabel>")))
+        .otherwise(concat(lit("<rdfs:label>"), text(col("n_name")), lit("</rdfs:label>"))),
+      lit("""<edm:isRelatedTo rdf:resource="g/region/"""),
+      col("n_regionkey").cast("string"), lit("\"/>"),
+      lit("""<owl:sameAs rdf:resource="http://www.wikidata.org/entity/N"""), nk, lit("\"/>"),
+      lit("""<skos:note rdf:datatype="http://www.w3.org/2001/XMLSchema#hexBinary">"""),
+      hex(col("n_name")), lit("</skos:note>"),
+      lit("</edm:Place>"))
+    val nations = Tables.nation(spark, dir)
+      .select(col("n_regionkey"), col("n_nationkey"), nationXml.as("x"))
+      .groupBy(col("n_regionkey"))
+      .agg(expr("array_join(transform(sort_array(collect_list(struct(n_nationkey, x))), s -> s.x), '')")
+        .as("body"))
+      .withColumnRenamed("n_regionkey", "r_regionkey")
+    val files = Tables.region(spark, dir).join(nations, Seq("r_regionkey"), "left")
+      .select(col("r_regionkey"), concat(
+        lit("""<?xml version="1.0" encoding="UTF-8"?>"""),
+        lit("""<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#""""),
+        lit(""" xmlns:rdfs="http://www.w3.org/2000/01/rdf-schema#""""),
+        lit(""" xmlns:skos="http://www.w3.org/2004/02/skos/core#""""),
+        lit(""" xmlns:owl="http://www.w3.org/2002/07/owl#""""),
+        lit(""" xmlns:edm="http://www.europeana.eu/schemas/edm/">"""),
+        lit("""<skos:Concept rdf:about="g/region/"""), col("r_regionkey").cast("string"),
+        lit("\"><skos:prefLabel xml:lang=\"en\">"), text(col("r_name")),
+        lit("""</skos:prefLabel><skos:note xml:lang="en">region """), text(col("r_name")),
+        lit("</skos:note></skos:Concept>"),
+        coalesce(col("body"), lit("")), lit("</rdf:RDF>")).as("xml"))
+    val path = tmp(s"rdf_${graft.store.GraftStore.dirKey(dir)}")
+    // one task per region key, so every region's file holds ONE document
+    files.repartition(col("r_regionkey"))
+      .write.mode("overwrite").partitionBy("r_regionkey").text(path)
+    RdfXml.rdfTriples(spark, s"$path/*.txt")
+  }
 
-  /** A5's ORACLE face (ing_rdf_synth): the real-file face (ing_rdf)
-    * can only ever be rows-only — the expected triples of an external
-    * XML file are not SQL-expressible — but the PARSER can be value
-    * checked end-to-end by feeding it documents whose expected output
-    * is a formula (the mm-parser / dHash convention). Each document row
-    * becomes one RDF description pair exercising the reference
-    * semantics in one place: label PRECEDENCE (prefLabel beats a
-    * coexisting title), a non-kept predicate (isShownBy → dropped), a
-    * kept literal with and without xml:lang, a hexBinary-typed kept
-    * predicate (→ dropped by datatype), resource resolution through
-    * the per-file label map (creator → the artist node's dc:title),
-    * and the URI-fragment fallback (sameAs → a node with no
-    * description). Docs batch 50 to a file-equivalent string so the
-    * label map is genuinely per-FILE, artists shared within a batch.
-    * The full [[RdfXml.parseFile]] runs — only the binaryFile read
-    * (covered by ing_rdf + IngestSpec) is bypassed. */
+  /** A5's ORACLE face (ing_rdf_synth): the file face (ing_rdf) is
+    * rows-only — DuckDB can't read the RDF/XML files it writes — but
+    * the PARSER can be value checked end-to-end by feeding it documents
+    * whose expected output is a formula (the mm-parser / dHash
+    * convention). Each document row becomes one RDF description pair
+    * exercising the reference semantics in one place: label PRECEDENCE
+    * (prefLabel beats a coexisting title), a non-kept predicate
+    * (isShownBy → dropped), a kept literal with and without xml:lang, a
+    * hexBinary-typed kept predicate (→ dropped by datatype), resource
+    * resolution through the per-file label map (creator → the artist
+    * node's dc:title), and the URI-fragment fallback (sameAs → a node
+    * with no description). Docs batch 50 to a file-equivalent string so
+    * the label map is genuinely per-FILE, artists shared within a
+    * batch. The full [[RdfXml.parseFile]] runs — only the binaryFile
+    * read (covered by ing_rdf + IngestSpec) is bypassed. */
   def ingRdfSynth(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val id = col("doc_id").cast("string")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 class PipelineSpec extends SparkSpec {
 
   test("end-to-end pipeline builds a KG from the reference data directory") {
-    val out = Pipeline.run(spark, "/root/reference/data")
+    val out = Pipeline.run(spark, kgDataDir)
     // tabular: artists.csv + artists2.csv load; the malformed JSON is skipped
     assert(out.records.count() > 0)
     val triples = out.triples.cache()
@@ -38,5 +38,35 @@ class PipelineSpec extends SparkSpec {
     assert(c.invoke(Iterator("x")).toSeq == Seq("ok:x"))
     val tooFlaky = LlmChains.RetryingChain(new Flaky(5), maxAttempts = 3, baseDelayMs = 1)
     intercept[RuntimeException] { tooFlaky.invoke(Iterator("x")).toSeq }
+  }
+
+  test("RetryingChain rejects a non-positive attempt budget at construction") {
+    Seq(0, -1).foreach { n =>
+      val e = intercept[IllegalArgumentException] {
+        LlmChains.RetryingChain(LlmChains.StubChain, maxAttempts = n)
+      }
+      assert(e.getMessage.contains(s"maxAttempts >= 1, got $n"), e.getMessage)
+    }
+  }
+
+  test("Pipeline.run extracts through the chain it is given") {
+    val out = Pipeline.run(spark, kgDataDir, chain = CountingChain)
+    val subjects = out.triples.filter(col("relation") === "counted")
+      .select("subject").collect().map(_.getString(0))
+    assert(CountingChain.calls.get() > 0, "the chain was never invoked")
+    assert(subjects.nonEmpty && subjects.forall(_.startsWith("call ")),
+      s"the chain's triples are missing: ${subjects.toSeq}")
+    assert(out.triples.filter(col("relation") === "mentions").isEmpty,
+      "stub triples leaked in place of the given chain's")
+  }
+}
+
+/** Counts its invocations (local mode: tasks share the driver JVM) and
+  * answers every prompt with one `counted` triple. */
+object CountingChain extends LlmChains.Chain {
+  val calls = new java.util.concurrent.atomic.AtomicInteger
+  def invoke(prompts: Iterator[String]): Iterator[String] = prompts.map { _ =>
+    val n = calls.incrementAndGet()
+    s"""[{"subject":"call $n","subject_type":"call","relation":"counted","object":"batch","object_type":"entity"}]"""
   }
 }

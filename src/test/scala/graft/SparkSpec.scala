@@ -20,6 +20,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val sfDir = "/root/testdata/sf0.001"
 
+  /** Sample landing directory in the formats of the reference's data
+    * files: quoted CSV, a trailing-comma JSON array, one malformed JSON
+    * file and SKOS/DC RDF/XML (src/test/resources/kgdata). */
+  lazy val kgDataDir: String =
+    new java.io.File(getClass.getResource("/kgdata").toURI).getPath
+
   /** Shuffle count of the EXECUTED plan — delegates to the J5
     * PlanAudit library walk (the AQE stage-recursion lesson lives in
     * ONE place now; audit also materializes through the frame's own

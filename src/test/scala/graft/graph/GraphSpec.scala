@@ -969,6 +969,25 @@ class GraphSpec extends SparkSpec {
     val (x6, xNeeded) = matchRun(6)
     val (x64, xAt64) = matchRun(64)
     assert(xAt64 == xNeeded && x64 == x6)
+    // the fixed-point loops report through the same superstep driver:
+    // k-truss (edge count unchanged), CC (edge-set signature unchanged)
+    // and SCC coloring (both change counts zero)
+    def rowsAndRounds(run: => org.apache.spark.sql.DataFrame) = {
+      val df = run
+      val rounds = Graphs.lastRoundsExecuted
+      (df.collect().toSet, rounds)
+    }
+    val k4 = edgesDf("a" -> "b", "a" -> "c", "a" -> "d", "b" -> "c",
+      "b" -> "d", "c" -> "d", "d" -> "e", "d" -> "f", "e" -> "f")
+    Seq[Int => org.apache.spark.sql.DataFrame](
+      b => Graphs.kTruss(k4, 4, b),
+      b => Graphs.connectedComponents(e, b),
+      b => Graphs.sccColoring(e, b)).foreach { loop =>
+      val (r6, needed) = rowsAndRounds(loop(6))
+      val (r64, at64) = rowsAndRounds(loop(64))
+      assert(needed > 0 && needed < 6, s"$needed rounds")
+      assert(at64 == needed && r64 == r6, s"$at64 != $needed")
+    }
     // r15 advice: a ZERO-round run (empty input) must report 0, not
     // leak the previous primitive's count through the ThreadLocal
     assert(xNeeded > 0)
@@ -1009,5 +1028,74 @@ class GraphSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getString(1)))
     edges.foreach { case (u, v) =>
       assert(!(mis(u) && mis(v)), s"adjacent MIS pair $u-$v") }
+  }
+
+  /** Spark jobs launched by `body`: its jobs carry a job tag, so jobs
+    * of earlier work whose events are still queued on the async listener
+    * bus are not counted; the count is read once it has settled. */
+  private def countJobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = s"jobcount-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag))) n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try {
+      body
+      var last = -1
+      var stable = 0
+      while (stable < 3) {
+        Thread.sleep(100)
+        val c = n.get()
+        if (c == last) stable += 1 else { stable = 0; last = c }
+      }
+      n.get()
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("C17/C28/C29/C38/C40 convergence loops pin their Spark jobs per executed round") {
+    import spark.implicits._
+    // a 12-vertex path with priorities rising along it: MIS, coloring
+    // and matching decide one end per round, and the onion's k = 2
+    // stage peels one vertex off each end per round, so none of them
+    // drains within the budgets below — every budgeted round executes
+    // and the job difference between two budgets is exactly that many
+    // rounds' jobs (set-up and pre-loop guards cancel out)
+    val n = 12
+    val path = (1 until n).map(i => (f"v$i%02d", f"v${i + 1}%02d")).toDF("u", "v")
+    val verts = path.select(col("u").as("id")).unionAll(path.select(col("v").as("id")))
+      .distinct().select(col("id"), substring(col("id"), 2, 2).cast("long").as("p"))
+    val keyed = path.select(col("u"), col("v"),
+      concat(col("u"), lit("|"), col("v")).as("pkey"))
+    val k4 = edgesDf("a" -> "b", "a" -> "c", "a" -> "d", "b" -> "c",
+      "b" -> "d", "c" -> "d", "d" -> "e", "d" -> "f", "e" -> "f")
+    def perBudget(lo: Int, hi: Int)(run: Int => Unit): Int = {
+      run(lo) // warm-up: first-use planning must not land in either count
+      countJobs(run(hi)) - countJobs(run(lo))
+    }
+    val got = Map(
+      "lubyMis" -> perBudget(1, 3)(b => Graphs.lubyMis(path, verts, b)),
+      "jpColoring" -> perBudget(1, 3)(b => Graphs.jpColoring(path, verts, b)),
+      "maximalMatching" -> perBudget(1, 3)(b => Graphs.maximalMatching(keyed, b)),
+      // kTruss never converges in round 1 (it compares against the
+      // previous round's edge count) and this fixture converges in 2
+      "kTruss" -> perBudget(1, 2)(b => Graphs.kTruss(k4, 4, b)),
+      // two onion rounds: one plain, one that also checkpoints the
+      // surviving edges (every second layer)
+      "onion" -> perBudget(2, 4)(b => Graphs.onion(path, 2, b, kMin = 2)))
+    // Spark jobs, not driver actions: AQE submits every shuffle
+    // stage as its own job, so a round's count is its actions plus
+    // their exchanges (the unit the benchmark's graph.jobs_per_round
+    // reads)
+    assert(got == Map("lubyMis" -> 22, "jpColoring" -> 27,
+      "maximalMatching" -> 16, "kTruss" -> 10, "onion" -> 12), s"$got")
   }
 }

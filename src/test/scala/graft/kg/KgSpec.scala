@@ -80,7 +80,7 @@ class KgSpec extends SparkSpec {
     val prompts = spark.createDataset(Seq("alpha beta", "gamma delta")).repartition(2)
     val out = LlmChains.invokePartitionwise(prompts, LlmChains.StubChain).collect()
     assert(out.length == 2 && out.forall(_.contains("hope this helps!")))
-    val parsed = LlmChains.extractFromRecords(prompts).collect()
+    val parsed = LlmChains.extractFromRecords(prompts, LlmChains.StubChain).collect()
     assert(parsed.map(_.getAs[String]("subject")).toSet == Set("alpha beta", "gamma delta"))
   }
 

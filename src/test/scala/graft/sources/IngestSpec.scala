@@ -7,7 +7,7 @@ import java.nio.file.{Files, Paths}
 class IngestSpec extends SparkSpec {
 
   test("A5 RDF/XML extractor: KEEP filter, label resolution, lang, dedup") {
-    val df = RdfXml.rdfTriples(spark, "/root/reference/data/FRA_280_003.xml").cache()
+    val df = RdfXml.rdfTriples(spark, s"$kgDataDir/FRA_280_003.xml").cache()
     val rows = df.collect()
     assert(rows.nonEmpty)
     // only KEEP predicates survive
@@ -30,21 +30,21 @@ class IngestSpec extends SparkSpec {
   }
 
   test("A1/A3/A29 reference data-file parity: the reference's own CSV and JSON samples load with the reference loader's row counts and shapes") {
-    // artists.csv — 15091 data rows under the header (pandas
+    // artists.csv — 60 data rows under the header (pandas
     // read_csv dtype=str parity incl. the quoting rules)
-    val a1 = Sources.csv(spark, "/root/reference/data/artists.csv")
-    assert(a1.count() == 15091L, "pandas reads 15091 artists")
+    val a1 = Sources.csv(spark, s"$kgDataDir/artists.csv")
+    assert(a1.count() == 60L, "pandas reads 60 artists")
     assert(a1.columns.toSeq == Seq("Artist ID", "Name", "Nationality",
       "Gender", "Birth Year", "Death Year"))
     assert(a1.schema.fields.forall(_.dataType ==
       org.apache.spark.sql.types.StringType), "string-typed like dtype=str")
-    // artists2.csv — 50 rows with heavily quoted/comma-laden bios
-    val a2 = Sources.csv(spark, "/root/reference/data/artists2.csv")
-    assert(a2.count() == 50L, "pandas reads 50 artists2 rows")
+    // artists2.csv — 12 rows with heavily quoted/comma-laden bios
+    val a2 = Sources.csv(spark, s"$kgDataDir/artists2.csv")
+    assert(a2.count() == 12L, "pandas reads 12 artists2 rows")
     assert(a2.columns.length == 8)
     // COLLEZIONI_PALAZZO_MADAMA.json — a JSON ARRAY with TRAILING
     // COMMAS after every object's last field: the reference's pandas
-    // loader accepts it (11 records), strict Jackson refuses; the
+    // loader accepts it (5 records), strict Jackson refuses; the
     // lenient reader is the parity face
     val schema = org.apache.spark.sql.types.StructType(
       Seq("Inventario", "Autore", "Ambito culturale", "Datazione",
@@ -52,9 +52,9 @@ class IngestSpec extends SparkSpec {
         .map(n => org.apache.spark.sql.types.StructField(n,
           org.apache.spark.sql.types.StringType)))
     val j = Sources.jsonArrayLenient(spark,
-      "/root/reference/data/COLLEZIONI_PALAZZO_MADAMA.json", schema)
+      s"$kgDataDir/COLLEZIONI_PALAZZO_MADAMA.json", schema)
     val rows = j.collect()
-    assert(rows.length == 11, s"pandas reads 11 records, got ${rows.length}")
+    assert(rows.length == 5, s"pandas reads 5 records, got ${rows.length}")
     assert(rows.head.getAs[String]("Inventario") == "1110/B")
     assert(rows.forall(_.getAs[String]("Inventario") != null),
       "every record must parse — a failed lenient pass yields nulls")
@@ -62,7 +62,7 @@ class IngestSpec extends SparkSpec {
     // the lenient face exists to close): PERMISSIVE mode yields no
     // parsed Inventario values
     val strict = Sources.json(spark,
-      "/root/reference/data/COLLEZIONI_PALAZZO_MADAMA.json",
+      s"$kgDataDir/COLLEZIONI_PALAZZO_MADAMA.json",
       multiLine = true, schema = Some(schema))
     assert(strict.filter(col("Inventario").isNotNull).count() == 0L,
       "strict Jackson must NOT parse the trailing-comma file — if it " +
@@ -70,7 +70,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("A5 all reference samples parse with nonzero triples") {
-    val df = RdfXml.rdfTriples(spark, "/root/reference/data/*.xml")
+    val df = RdfXml.rdfTriples(spark, s"$kgDataDir/*.xml")
     val bySrc = df.count()
     assert(bySrc > 100, s"expected hundreds of triples, got $bySrc")
   }
