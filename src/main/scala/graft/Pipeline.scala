@@ -60,8 +60,9 @@ object Pipeline {
     val llmTriples =
       if (records.columns.isEmpty) spark.emptyDataFrame
       else {
-        val keyed = records.withColumn("__rid",
-          abs(xxhash64(concat_ws("", records.columns.map(col): _*))))
+        // batches of `batchSize` consecutive records of one partition,
+        // like the reference's get_batches; the id adds no job or shuffle
+        val keyed = records.withColumn("__rid", monotonically_increasing_id())
         val batches = Sources.jsonBatches(keyed, "__rid", batchSize)
         LlmChains.extractFromRecords(batches.select("batch_json").as[String], chain)
       }

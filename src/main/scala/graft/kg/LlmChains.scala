@@ -1,5 +1,12 @@
 package graft.kg
 
+import java.nio.ByteBuffer
+import java.util.concurrent.{ExecutionException, ExecutorService, Executors, Future}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.collection.mutable
+import scala.util.control.NonFatal
+import org.apache.spark.{SparkEnv, TaskContext}
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,14 +18,24 @@ import org.apache.spark.sql.functions._
   * with `df.rdd.mapPartitions`
   * (Art-Knowledge-Graph-AWS/LLM/main-llm-triplets-extraction.py:16).
   * Inference is external to the engine, so here it is a trait invoked
-  * partition-wise over a Dataset[String]; `StubChain` is the
-  * deterministic stand-in used by tests (echoes input fields as triplet
-  * JSON with trailing prose noise, like a chatty model).
+  * partition-wise over a Dataset[String]. A model call is latency-bound,
+  * not CPU-bound, so each partition keeps up to `CallsInFlight` calls
+  * outstanding on an ordered window (`invokePartitionwise`), each on its
+  * own copy of the chain. `StubChain` is the deterministic stand-in used
+  * by tests (echoes input fields as triplet JSON with trailing prose
+  * noise, like a chatty model).
   */
 object LlmChains {
 
-  /** One prompt→completion chain, applied to a partition's prompts.
-    * Implementations must be serializable (executed on executors). */
+  /** One prompt→completion chain. Implementations must be serializable
+    * (executed on executors).
+    *
+    * Threading contract: `invokePartitionwise` deserializes one copy of
+    * the chain per call slot of a partition's window and hands each copy
+    * to one thread at a time, so a class chain may keep unsynchronized
+    * per-instance state (caches, retry counts). A Scala `object` chain
+    * is one shared singleton in the JVM, used by every slot at once: it
+    * must be stateless or thread-safe, as `StubChain` is. */
   trait Chain extends Serializable {
     def invoke(prompts: Iterator[String]): Iterator[String]
   }
@@ -51,9 +68,12 @@ object LlmChains {
         var out: Option[String] = None
         var last: Throwable = null
         while (out.isEmpty && attempt < maxAttempts) {
+          // NonFatal lets an interrupt through: a cancelled task's
+          // window interrupts its calls, and a retry would bill the model
+          // for a task that is gone
           try out = Some(inner.invoke(Iterator(p)).next())
           catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               last = e
               attempt += 1
               if (attempt < maxAttempts)
@@ -64,12 +84,80 @@ object LlmChains {
       }
   }
 
+  /** Calls outstanding per partition. */
+  val CallsInFlight = 16
+
   /** Distribute a chain over a Dataset of prompts — the Spark-native
-    * equivalent of the reference's rdd.mapPartitions(process_partition).
-    */
+    * equivalent of the reference's rdd.mapPartitions(process_partition),
+    * with up to `CallsInFlight` calls outstanding per partition. The
+    * chain is serialized once here, on the Spark driver; see `CallWindow`. */
   def invokePartitionwise(prompts: Dataset[String], chain: Chain): Dataset[String] = {
     import prompts.sparkSession.implicits._
-    prompts.mapPartitions(chain.invoke)
+    val serialized = JavaUtils.bufferToArray(
+      SparkEnv.get.closureSerializer.newInstance().serialize(chain))
+    prompts.mapPartitions(new CallWindow(_, serialized))
+  }
+
+  /** A partition's completions, in prompt order, with up to
+    * `CallsInFlight` calls outstanding on a pool of daemon threads.
+    *
+    * The prompts are read only on the task thread. Prompt k runs on slot
+    * k % CallsInFlight; its previous prompt, k - CallsInFlight, left the
+    * window before prompt k entered it, so a slot's chain is used by one
+    * thread at a time. Each slot's chain is deserialized from the
+    * serialized chain on the task thread: only a copy serialized by the
+    * Spark driver registers its accumulators with the task, so a copy
+    * made on the executor would drop its counts. The pool exists only once a prompt
+    * arrives, and is shut down (interrupting calls still running) when
+    * the prompts drain or the task ends, which covers a `limit`, a
+    * cancel and a failure. A failing call fails the task with its own
+    * exception. */
+  private final class CallWindow(prompts: Iterator[String], chainBytes: Array[Byte])
+      extends Iterator[String] {
+    private val slots = new Array[Chain](CallsInFlight)
+    private val window = mutable.Queue.empty[Future[String]]
+    private var submitted = 0L
+    private var pool: ExecutorService = _
+
+    private def start(): Unit = {
+      val task = TaskContext.get()
+      val threads = new AtomicInteger
+      pool = Executors.newFixedThreadPool(CallsInFlight, (r: Runnable) => {
+        val t = new Thread(r, s"graft-llm-${task.taskAttemptId()}-${threads.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+      task.addTaskCompletionListener[Unit](_ => pool.shutdownNow())
+    }
+
+    private def slot(i: Int): Chain = {
+      if (slots(i) == null)
+        slots(i) = SparkEnv.get.closureSerializer.newInstance()
+          .deserialize[Chain](ByteBuffer.wrap(chainBytes))
+      slots(i)
+    }
+
+    def hasNext: Boolean = {
+      while (window.size < CallsInFlight && prompts.hasNext) {
+        if (pool == null) start()
+        val chain = slot((submitted % CallsInFlight).toInt)
+        val p = prompts.next()
+        window.enqueue(pool.submit[String](() => chain.invoke(Iterator(p)).next()))
+        submitted += 1
+      }
+      if (window.isEmpty && pool != null) pool.shutdownNow()
+      window.nonEmpty
+    }
+
+    def next(): String = {
+      if (!hasNext) throw new NoSuchElementException("no more completions")
+      // a call leaves the window only once it is done, freeing its slot
+      val completion =
+        try window.head.get()
+        catch { case e: ExecutionException => throw e.getCause }
+      window.dequeue()
+      completion
+    }
   }
 
   /** Schema of one recovered triplet. */

@@ -9,9 +9,15 @@ class PipelineSpec extends SparkSpec {
   test("end-to-end pipeline builds a KG from the reference data directory") {
     val out = Pipeline.run(spark, kgDataDir)
     // tabular: artists.csv + artists2.csv load; the malformed JSON is skipped
-    assert(out.records.count() > 0)
+    val records = out.records.count()
+    assert(records > 0)
     val triples = out.triples.cache()
     assert(triples.count() > 100)
+    // one completion per batch of up to 100 records of one partition
+    val completions = triples.filter(col("relation") === "mentions").count()
+    val bound = (records + 99) / 100 + out.records.rdd.getNumPartitions
+    assert(completions > 0 && completions <= bound,
+      s"$completions completions for $records records (at most $bound)")
     // both sources contribute: stub-LLM triples + RDF triples
     val rels = triples.select("relation").distinct().collect().map(_.getString(0)).toSet
     assert(rels.contains("mentions"), "stub-LLM triples missing")
@@ -38,6 +44,31 @@ class PipelineSpec extends SparkSpec {
     assert(c.invoke(Iterator("x")).toSeq == Seq("ok:x"))
     val tooFlaky = LlmChains.RetryingChain(new Flaky(5), maxAttempts = 3, baseDelayMs = 1)
     intercept[RuntimeException] { tooFlaky.invoke(Iterator("x")).toSeq }
+  }
+
+  test("RetryingChain lets an interrupt through after one attempt") {
+    val attempts = new java.util.concurrent.atomic.AtomicInteger
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    object Blocking extends LlmChains.Chain {
+      def invoke(ps: Iterator[String]): Iterator[String] = ps.map { p =>
+        attempts.incrementAndGet()
+        entered.countDown()
+        Thread.sleep(60000)
+        p
+      }
+    }
+    val thrown = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val caller = new Thread(() =>
+      try LlmChains.RetryingChain(Blocking, maxAttempts = 3, baseDelayMs = 1).invoke(Iterator("x")).toSeq
+      catch { case t: Throwable => thrown.set(t) })
+    caller.setDaemon(true)
+    caller.start()
+    entered.await()
+    caller.interrupt()
+    caller.join(10000)
+    assert(!caller.isAlive, "the interrupted call was retried")
+    assert(thrown.get().isInstanceOf[InterruptedException], s"threw ${thrown.get()}")
+    assert(attempts.get() == 1)
   }
 
   test("RetryingChain rejects a non-positive attempt budget at construction") {

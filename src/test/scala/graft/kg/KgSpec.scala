@@ -1,6 +1,7 @@
 package graft.kg
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -10,6 +11,54 @@ import org.apache.spark.sql.functions._
 object RecordingTransport extends Neo4jUpsert.CypherTransport {
   val got = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
   def send(bs: Iterator[(String, String)]): Unit = bs.foreach(got.add)
+}
+
+/** Answers each prompt after a seeded random pause of up to 5 ms, so
+  * calls finish out of prompt order. */
+final case class JitteryChain(seed: Int) extends LlmChains.Chain {
+  def invoke(prompts: Iterator[String]): Iterator[String] = prompts.map { p =>
+    Thread.sleep(new scala.util.Random(seed ^ p.hashCode).nextInt(6).toLong)
+    s"done:$p"
+  }
+}
+
+/** Records the most calls it has seen running at once (one JVM-static
+  * counter: local-mode tasks share it). */
+object OverlapProbe extends LlmChains.Chain {
+  val running = new java.util.concurrent.atomic.AtomicInteger
+  val most = new java.util.concurrent.atomic.AtomicInteger
+  def invoke(prompts: Iterator[String]): Iterator[String] = prompts.map { p =>
+    most.accumulateAndGet(running.incrementAndGet(), math.max)
+    try { Thread.sleep(20); p } finally running.decrementAndGet()
+  }
+}
+
+/** Shaped like a simulated model: unsynchronized per-instance state and
+  * an accumulator. It fails if two threads ever use one copy at once, or
+  * if a copy sees a prompt twice. */
+final case class CountingCopyChain(done: org.apache.spark.util.LongAccumulator)
+    extends LlmChains.Chain {
+  @transient private lazy val seen = scala.collection.mutable.HashSet.empty[String]
+  @transient private lazy val busy = new java.util.concurrent.atomic.AtomicBoolean
+  def invoke(prompts: Iterator[String]): Iterator[String] = prompts.map { p =>
+    if (!busy.compareAndSet(false, true)) throw new IllegalStateException("copy shared by two threads")
+    try {
+      Thread.sleep(1)
+      if (!seen.add(p)) throw new IllegalStateException(s"prompt $p sent twice")
+      done.add(1)
+      p
+    } finally busy.set(false)
+  }
+}
+
+/** Fails on the prompt "boom"; every other call takes 30 s unless
+  * interrupted. */
+object FailingChain extends LlmChains.Chain {
+  def invoke(prompts: Iterator[String]): Iterator[String] = prompts.map { p =>
+    if (p == "boom") throw new IllegalStateException("model refused: boom")
+    Thread.sleep(30000)
+    p
+  }
 }
 
 class KgSpec extends SparkSpec {
@@ -82,6 +131,45 @@ class KgSpec extends SparkSpec {
     assert(out.length == 2 && out.forall(_.contains("hope this helps!")))
     val parsed = LlmChains.extractFromRecords(prompts, LlmChains.StubChain).collect()
     assert(parsed.map(_.getAs[String]("subject")).toSet == Set("alpha beta", "gamma delta"))
+  }
+
+  test("B9 call window: completions come back once each, in prompt order") {
+    import spark.implicits._
+    val prompts = (0 until 200).map(i => s"prompt $i")
+    val one = spark.createDataset(prompts).coalesce(1)
+    val out = LlmChains.invokePartitionwise(one, JitteryChain(7)).collect().toSeq
+    assert(out == prompts.map(p => s"done:$p"))
+  }
+
+  test("B9 call window: calls overlap, at most CallsInFlight at once") {
+    import spark.implicits._
+    OverlapProbe.most.set(0)
+    val one = spark.createDataset((0 until 64).map(_.toString)).coalesce(1)
+    assert(LlmChains.invokePartitionwise(one, OverlapProbe).count() == 64)
+    val most = OverlapProbe.most.get()
+    assert(most >= 2 && most <= LlmChains.CallsInFlight, s"$most calls ran at once")
+  }
+
+  test("B9 call window: every slot copy's accumulator updates reach the Spark driver") {
+    import spark.implicits._
+    val done = spark.sparkContext.longAccumulator("window.done")
+    val prompts = spark.createDataset((0 until 150).map(_.toString)).repartition(2)
+    assert(LlmChains.invokePartitionwise(prompts, CountingCopyChain(done)).count() == 150)
+    assert(done.value == 150)
+  }
+
+  test("B9 call window: a failing call fails the job and no pool thread survives") {
+    import spark.implicits._
+    val prompts = spark.createDataset("boom" +: (1 to 40).map(_.toString)).coalesce(1)
+    val e = intercept[Exception] {
+      LlmChains.invokePartitionwise(prompts, FailingChain).collect()
+    }
+    assert(e.getMessage.contains("model refused: boom"), e.getMessage)
+    def poolThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith("graft-llm-") && t.isAlive)
+    val deadline = System.nanoTime() + 5000000000L
+    while (poolThreads.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(poolThreads.isEmpty, s"pool threads alive: $poolThreads")
   }
 
   test("B2 one-sided triples survive the tolerant parser") {

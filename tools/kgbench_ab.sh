@@ -1,0 +1,94 @@
+#!/bin/bash
+# Paired A/B run of the repository benchmark (kgbench/run.py --trace 0):
+# a commit against the checkout this script runs in, on one workload.
+#
+# Usage: tools/kgbench_ab.sh <commit> <workload> <pairs> [first-seed]
+#
+# Pair i runs seed first-seed+i (default first seed 5001) on both sides,
+# for BENCHMARK.json's run_seconds, alternating which side runs first.
+# The commit side runs from a fresh `git archive` export of <commit> in a
+# temporary directory (nothing is registered in .git; the benchmark
+# builds it there); the other side runs in this checkout, HEAD plus any
+# uncommitted edits. Each run's result line is printed as it finishes.
+# The summary gives, per end-to-end metric, each side's median and
+# quartiles, how many pairs the checkout wins (by the metric's "better"
+# direction; ties count for neither), and whether that is a gain: a win
+# in at least nine tenths of the pairs and medians further apart than
+# the distance between the commit side's quartiles.
+set -euo pipefail
+BASE=${1:?commit to compare against (e.g. the parent commit)}
+WORKLOAD=${2:?workload name from BENCHMARK.json}
+PAIRS=${3:?number of pairs}
+SEED0=${4:-5001}
+ROOT=$(git rev-parse --show-toplevel)
+SECONDS_PER_RUN=$(python3 -c 'import json,sys; print(json.load(open(sys.argv[1]))["run_seconds"])' \
+  "$ROOT/BENCHMARK.json")
+
+WORK=$(mktemp -d "${TMPDIR:-/tmp}/kgbench_ab_XXXXXX")
+trap 'rm -rf "$WORK"' EXIT
+mkdir "$WORK/base"
+git -C "$ROOT" archive "$BASE" | tar -x -C "$WORK/base"
+echo "== $WORKLOAD, $PAIRS pairs, ${SECONDS_PER_RUN} s runs: base $(git -C "$ROOT" rev-parse --short "$BASE") vs checkout $(git -C "$ROOT" rev-parse --short HEAD)$(git -C "$ROOT" diff --quiet HEAD || echo '+edits') =="
+
+run() {  # <side> <dir> <seed>
+  local line
+  line=$(cd "$2" && python3 kgbench/run.py --workload "$WORKLOAD" --seed "$3" \
+    --seconds "$SECONDS_PER_RUN" --trace 0 2>>"$WORK/$1.log" | tail -n 1) || true
+  if [[ "$line" != "{"* ]]; then
+    tail -n 20 "$WORK/$1.log" >&2
+    line='{"correct": false, "attempted": 0, "failed": 0, "metrics": {}}'
+  fi
+  echo "$1 seed=$3 $line"
+  echo "{\"side\": \"$1\", \"seed\": $3, \"result\": $line}" >>"$WORK/results.jsonl"
+}
+
+for ((i = 0; i < PAIRS; i++)); do
+  seed=$((SEED0 + i))
+  if ((i % 2 == 0)); then
+    run base "$WORK/base" "$seed"; run change "$ROOT" "$seed"
+  else
+    run change "$ROOT" "$seed"; run base "$WORK/base" "$seed"
+  fi
+done
+
+python3 - "$ROOT/BENCHMARK.json" "$WORK/results.jsonl" <<'EOF'
+import json, sys
+
+spec = json.load(open(sys.argv[1]))
+runs = [json.loads(l) for l in open(sys.argv[2])]
+side = {s: {r["seed"]: r["result"] for r in runs if r["side"] == s} for s in ("base", "change")}
+seeds = sorted(side["base"])
+
+
+def quartiles(xs):
+    xs = sorted(xs)
+    def q(p):
+        k = (len(xs) - 1) * p
+        lo = int(k)
+        hi = min(lo + 1, len(xs) - 1)
+        return xs[lo] + (xs[hi] - xs[lo]) * (k - lo)
+    return q(0.25), q(0.5), q(0.75)
+
+
+for s in ("base", "change"):
+    bad = [seed for seed, r in side[s].items() if not r["correct"]]
+    failed = sum(r["failed"] for r in side[s].values())
+    attempted = sum(r["attempted"] for r in side[s].values())
+    print(f"{s}: {len(side[s]) - len(bad)}/{len(side[s])} runs correct"
+          f"{' (failing seeds ' + str(bad) + ')' if bad else ''}, {failed}/{attempted} operations failed")
+print(f"{'metric':<20} {'base q1/med/q3':>26} {'change q1/med/q3':>26} {'wins':>6}  gain")
+for m in spec["end_to_end"]:
+    name, higher = m["name"], m["better"] == "higher"
+    pairs = [(side["base"][s]["metrics"][name]["value"], side["change"][s]["metrics"][name]["value"])
+             for s in seeds
+             if name in side["base"][s]["metrics"] and name in side["change"][s]["metrics"]]
+    if not pairs:
+        print(f"{name:<20} no paired values")
+        continue
+    b, c = quartiles([p[0] for p in pairs]), quartiles([p[1] for p in pairs])
+    wins = sum((y > x) if higher else (y < x) for x, y in pairs)
+    gain = wins >= 0.9 * len(pairs) and abs(c[1] - b[1]) > b[2] - b[0]
+    fmt = lambda q: "/".join(f"{v:.4g}" for v in q)
+    print(f"{name:<20} {fmt(b):>26} {fmt(c):>26} {wins:>3}/{len(pairs):<2}  {'yes' if gain else 'no'}"
+          f"  ({m['unit']}, {m['better']} is better)")
+EOF
