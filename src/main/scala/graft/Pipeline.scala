@@ -19,13 +19,36 @@ import graft.kg.{GraphBuilder, LlmChains, Normalize}
   *  4. normalize entities + standardize relations;
   *  5. MERGE-build nodes/edges; optionally export neo4j bulk CSVs.
   *
-  * Every stage is a narrow or single-shuffle transformation — the whole
-  * pipeline is one lazy plan per output, no driver-side loops.
+  * Every stage is a narrow or single-shuffle transformation, with no
+  * driver-side loops. The standardized triples are persisted and `nodes`
+  * and `edges` are built over that one frame, so the first action on any
+  * of them fills the cache and every later one reads it: sources,
+  * batching, the chain, recovery and normalization run once per run, the
+  * chain once per prompt. The caller releases the cache
+  * (`KgOutputs.unpersist()`).
   */
 object Pipeline {
 
-  final case class KgOutputs(records: DataFrame, triples: DataFrame,
-      nodes: DataFrame, edges: DataFrame)
+  /** The pipeline's outputs. `triples` is the standardized triples,
+    * persisted (MEMORY_AND_DISK, no job) when `triples`, `nodes` or
+    * `edges` is first asked for, and `nodes` and `edges` read that one
+    * frame: the outputs hold the cache until `unpersist()`, which the
+    * caller owns. `records` is a plain lazy frame, so a caller that reads
+    * only the records plans and caches nothing more. */
+  final class KgOutputs private[Pipeline] (val records: DataFrame, standardized: DataFrame) {
+    // persist() keeps the analyzed plan (a checkpoint would replace it),
+    // so the pipeline's stages stay visible in it. A plan without the
+    // chain's closure (RDF/XML only) compares equal to an earlier run's
+    // over the same files, whose cache would serve that run's rows: drop
+    // it first, so these outputs read their files
+    lazy val triples: DataFrame = { standardized.unpersist(); standardized.persist() }
+    lazy val nodes: DataFrame = GraphBuilder.nodes(triples)
+    lazy val edges: DataFrame = GraphBuilder.edges(triples)
+
+    /** Releases the triples cache; the outputs stay usable and recompute
+      * from the files when read again. */
+    def unpersist(): Unit = standardized.unpersist()
+  }
 
   /** Driver-side listing of top-level inputs (per-file frames are
     * required because each file has its own schema); the per-file READS
@@ -61,8 +84,14 @@ object Pipeline {
       if (records.columns.isEmpty) spark.emptyDataFrame
       else {
         // batches of `batchSize` consecutive records of one partition,
-        // like the reference's get_batches; the id adds no job or shuffle
-        val keyed = records.withColumn("__rid", monotonically_increasing_id())
+        // like the reference's get_batches; the id adds no job or shuffle.
+        // Partition p's ids start at p·2^33, which is not a multiple of
+        // `batchSize`: spreading partitions batchSize·2^33 apart keeps
+        // each partition's first batch full
+        val id = monotonically_increasing_id()
+        val rowBits = (1L << 33) - 1
+        val keyed = records.withColumn("__rid",
+          shiftright(id, 33) * (batchSize.toLong << 33) + id.bitwiseAND(rowBits))
         val batches = Sources.jsonBatches(keyed, "__rid", batchSize)
         LlmChains.extractFromRecords(batches.select("batch_json").as[String], chain)
       }
@@ -89,8 +118,7 @@ object Pipeline {
       .standardizeRelations(normalized, "relation", "relation_std")
       .drop("relation").withColumnRenamed("relation_std", "relation")
 
-    // 5. MERGE-build
-    KgOutputs(records, standardized,
-      GraphBuilder.nodes(standardized), GraphBuilder.edges(standardized))
+    // 5. MERGE-build, over the one persisted triples frame
+    new KgOutputs(records, standardized)
   }
 }

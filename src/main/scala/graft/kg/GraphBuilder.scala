@@ -1,5 +1,7 @@
 package graft.kg
 
+import java.nio.charset.StandardCharsets
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -73,13 +75,18 @@ object GraphBuilder {
     // neo4j-admin import expects ONE header, not one per CSV part:
     // write headerless data parts plus a separate single-line header
     // file per group (the neo4j-admin `--nodes=header.csv,data/` form),
-    // so multi-part exports at scale stay parallel AND importable.
+    // so multi-part exports at scale stay parallel AND importable. The
+    // header is one line the driver already knows: it is written through
+    // the Hadoop FileSystem in the text writer's layout (header/part-00000)
+    // instead of by a Spark job.
     def writeGroup(df: DataFrame, sub: String): Unit = {
       df.write.mode("overwrite").option("header", "false").csv(s"$outDir/$sub/data")
-      val spark = df.sparkSession
-      import spark.implicits._
-      Seq(df.columns.mkString(",")).toDF("h").coalesce(1)
-        .write.mode("overwrite").text(s"$outDir/$sub/header")
+      val dir = new Path(s"$outDir/$sub/header")
+      val fs = dir.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+      fs.delete(dir, true)
+      val os = fs.create(new Path(dir, "part-00000"))
+      try os.write((df.columns.mkString(",") + "\n").getBytes(StandardCharsets.UTF_8))
+      finally os.close()
     }
     writeGroup(n, "nodes")
     writeGroup(e, "relationships")

@@ -1,8 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Path, StandardCopyOption}
 import graft.SparkSpec
-import graft.kg.LlmChains
+import graft.kg.{GraphBuilder, LlmChains, Neo4jUpsert}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 class PipelineSpec extends SparkSpec {
 
@@ -11,11 +13,13 @@ class PipelineSpec extends SparkSpec {
     // tabular: artists.csv + artists2.csv load; the malformed JSON is skipped
     val records = out.records.count()
     assert(records > 0)
-    val triples = out.triples.cache()
+    val triples = out.triples
     assert(triples.count() > 100)
     // one completion per batch of up to 100 records of one partition
     val completions = triples.filter(col("relation") === "mentions").count()
-    val bound = (records + 99) / 100 + out.records.rdd.getNumPartitions
+    val perPartition = out.records.select(spark_partition_id().as("p"))
+      .groupBy("p").count().collect().map(_.getLong(1))
+    val bound = perPartition.map(n => (n + 99) / 100).sum
     assert(completions > 0 && completions <= bound,
       s"$completions completions for $records records (at most $bound)")
     // both sources contribute: stub-LLM triples + RDF triples
@@ -27,7 +31,7 @@ class PipelineSpec extends SparkSpec {
     val joined = out.edges.join(out.nodes,
       col("src_label") === col("label") && col("src") === col("name"), "left_anti")
     assert(joined.count() == 0, "every edge source must exist as a node")
-    triples.unpersist()
+    out.unpersist()
   }
 
   test("RetryingChain retries transient failures with backoff then succeeds") {
@@ -89,7 +93,57 @@ class PipelineSpec extends SparkSpec {
       s"the chain's triples are missing: ${subjects.toSeq}")
     assert(out.triples.filter(col("relation") === "mentions").isEmpty,
       "stub triples leaked in place of the given chain's")
+    out.unpersist()
   }
+
+  test("Pipeline.run calls the chain once per prompt across all its outputs") {
+    val out = Pipeline.run(spark, kgDataDir, chain = CountingChain)
+    try {
+      val before = CountingChain.calls.get()
+      out.nodes.count()
+      out.edges.count()
+      GraphBuilder.exportNeo4jBulk(out.triples, Files.createTempDirectory("graft_pipeline").toString)
+      Neo4jUpsert.run(Neo4jUpsert.edgeUpsertBatchesBySize(out.edges, 500), DiscardingTransport)
+      val calls = CountingChain.calls.get() - before
+      // one `counted` triple per completion, i.e. per prompt
+      val prompts = out.triples.filter(col("relation") === "counted").count()
+      assert(prompts > 0 && calls == prompts, s"$calls chain calls for $prompts prompts")
+    } finally out.unpersist()
+  }
+
+  test("KgOutputs.unpersist releases the triples cache") {
+    val out = Pipeline.run(spark, kgDataDir)
+    assert(out.triples.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    out.nodes.count()
+    out.unpersist()
+    assert(out.triples.storageLevel == StorageLevel.NONE)
+  }
+
+  test("a second Pipeline.run over changed files reads the new rows, not the first run's cache") {
+    // the whole landing directory, and its RDF/XML alone (no chain in the plan)
+    Seq[String => Boolean](_ => true, _.endsWith(".xml")).foreach { keep =>
+      val dir = Files.createTempDirectory("graft_kgdata")
+      Files.list(Path.of(kgDataDir)).filter(f => keep(f.getFileName.toString)).forEach(f =>
+        Files.copy(f, dir.resolve(f.getFileName), StandardCopyOption.REPLACE_EXISTING))
+      def labels(out: Pipeline.KgOutputs) =
+        out.triples.select("subject").union(out.triples.select("object"))
+          .collect().map(_.getString(0)).toSet
+      val first = Pipeline.run(spark, dir.toString)
+      assert(labels(first).contains("The Port of Saint-Tropez"))
+      val xml = dir.resolve("ITA_130_027.xml")
+      Files.writeString(xml, Files.readString(xml).replace("Saint-Tropez", "Collioure"))
+      val second = Pipeline.run(spark, dir.toString)
+      val seen = labels(second)
+      assert(seen.contains("The Port of Collioure") && !seen.contains("The Port of Saint-Tropez"),
+        s"the second run over $dir read the first run's cached triples")
+      Seq(first, second).foreach(_.unpersist())
+    }
+  }
+}
+
+/** Consumes every batch and sends nothing. */
+object DiscardingTransport extends Neo4jUpsert.CypherTransport {
+  def send(batches: Iterator[(String, String)]): Unit = batches.foreach(_ => ())
 }
 
 /** Counts its invocations (local mode: tasks share the driver JVM) and

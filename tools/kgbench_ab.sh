@@ -1,11 +1,13 @@
 #!/bin/bash
-# Paired A/B run of the repository benchmark (kgbench/run.py --trace 0):
-# a commit against the checkout this script runs in, on one workload.
+# Paired A/B run of the repository benchmark (kgbench/run.py): a commit
+# against the checkout this script runs in, on one workload.
 #
 # Usage: tools/kgbench_ab.sh <commit> <workload> <pairs> [first-seed]
+#        tools/kgbench_ab.sh --layers <commit> <workload> [seed]
 #
-# Pair i runs seed first-seed+i (default first seed 5001) on both sides,
-# for BENCHMARK.json's run_seconds, alternating which side runs first.
+# End-to-end mode (--trace 0): pair i runs seed first-seed+i (default
+# first seed 5001) on both sides, for BENCHMARK.json's run_seconds,
+# alternating which side runs first.
 # The commit side runs from a fresh `git archive` export of <commit> in a
 # temporary directory (nothing is registered in .git; the benchmark
 # builds it there); the other side runs in this checkout, HEAD plus any
@@ -15,11 +17,23 @@
 # direction; ties count for neither), and whether that is a gain: a win
 # in at least nine tenths of the pairs and medians further apart than
 # the distance between the commit side's quartiles.
+#
+# Per-layer mode (--layers, --trace 1): one traced run per side on the
+# same seed (default 1001), commit side first. It prints every per-layer
+# metric of BENCHMARK.json side by side with the change, and flags with
+# `!` the deterministic counters that differ (Spark jobs, stages and
+# tasks, the reread factor, model calls, build and upsert counts): those
+# name the layer a timing change came from.
 set -euo pipefail
+LAYERS=0
+if [[ "${1:-}" == "--layers" ]]; then LAYERS=1; shift; fi
 BASE=${1:?commit to compare against (e.g. the parent commit)}
 WORKLOAD=${2:?workload name from BENCHMARK.json}
-PAIRS=${3:?number of pairs}
-SEED0=${4:-5001}
+if ((LAYERS)); then
+  PAIRS=1 TRACE=1 SEED0=${3:-1001}
+else
+  PAIRS=${3:?number of pairs} TRACE=0 SEED0=${4:-5001}
+fi
 ROOT=$(git rev-parse --show-toplevel)
 SECONDS_PER_RUN=$(python3 -c 'import json,sys; print(json.load(open(sys.argv[1]))["run_seconds"])' \
   "$ROOT/BENCHMARK.json")
@@ -28,12 +42,12 @@ WORK=$(mktemp -d "${TMPDIR:-/tmp}/kgbench_ab_XXXXXX")
 trap 'rm -rf "$WORK"' EXIT
 mkdir "$WORK/base"
 git -C "$ROOT" archive "$BASE" | tar -x -C "$WORK/base"
-echo "== $WORKLOAD, $PAIRS pairs, ${SECONDS_PER_RUN} s runs: base $(git -C "$ROOT" rev-parse --short "$BASE") vs checkout $(git -C "$ROOT" rev-parse --short HEAD)$(git -C "$ROOT" diff --quiet HEAD || echo '+edits') =="
+echo "== $WORKLOAD, $PAIRS pairs, --trace $TRACE, ${SECONDS_PER_RUN} s runs: base $(git -C "$ROOT" rev-parse --short "$BASE") vs checkout $(git -C "$ROOT" rev-parse --short HEAD)$(git -C "$ROOT" diff --quiet HEAD || echo '+edits') =="
 
 run() {  # <side> <dir> <seed>
   local line
   line=$(cd "$2" && python3 kgbench/run.py --workload "$WORKLOAD" --seed "$3" \
-    --seconds "$SECONDS_PER_RUN" --trace 0 2>>"$WORK/$1.log" | tail -n 1) || true
+    --seconds "$SECONDS_PER_RUN" --trace "$TRACE" 2>>"$WORK/$1.log" | tail -n 1) || true
   if [[ "$line" != "{"* ]]; then
     tail -n 20 "$WORK/$1.log" >&2
     line='{"correct": false, "attempted": 0, "failed": 0, "metrics": {}}'
@@ -51,7 +65,7 @@ for ((i = 0; i < PAIRS; i++)); do
   fi
 done
 
-python3 - "$ROOT/BENCHMARK.json" "$WORK/results.jsonl" <<'EOF'
+python3 - "$ROOT/BENCHMARK.json" "$WORK/results.jsonl" "$LAYERS" <<'EOF'
 import json, sys
 
 spec = json.load(open(sys.argv[1]))
@@ -76,6 +90,23 @@ for s in ("base", "change"):
     attempted = sum(r["attempted"] for r in side[s].values())
     print(f"{s}: {len(side[s]) - len(bad)}/{len(side[s])} runs correct"
           f"{' (failing seeds ' + str(bad) + ')' if bad else ''}, {failed}/{attempted} operations failed")
+
+if sys.argv[3] == "1":
+    # counters that do not depend on timing (timings end in _s): a
+    # difference is a change in work
+    exact = ("spark.jobs", "spark.stages", "spark.tasks", "pipeline.reread_factor",
+             "llm.calls", "build.", "upsert.")
+    b, c = side["base"][seeds[0]]["metrics"], side["change"][seeds[0]]["metrics"]
+    fmt = lambda m, k: f"{m[k]['value']:.4g}" if k in m else "-"
+    print(f"  {'metric':<28} {'base':>12} {'change':>12}")
+    for m in spec["per_layer"]:
+        k = m["name"]
+        if k not in b and k not in c:
+            continue
+        differs = k.startswith(exact) and not k.endswith("_s") and fmt(b, k) != fmt(c, k)
+        print(f"{'!' if differs else ' '} {k:<28} {fmt(b, k):>12} {fmt(c, k):>12}  ({m['unit']}, {m['better']} is better)")
+    sys.exit(0)
+
 print(f"{'metric':<20} {'base q1/med/q3':>26} {'change q1/med/q3':>26} {'wins':>6}  gain")
 for m in spec["end_to_end"]:
     name, higher = m["name"], m["better"] == "higher"
