@@ -113,11 +113,6 @@ object Multimodal {
         round(col("col").cast("double"), 4).as("value"))
   }
 
-  /** Big-endian u32 at 1-based byte offset `off` of a binary column —
-    * pure codegen'd slicing (substring on binary + hex + conv). */
-  def beU32(bin: org.apache.spark.sql.Column, off: Int): org.apache.spark.sql.Column =
-    conv(hex(substring(bin, off, 4)), 16, 10).cast("long")
-
   /** PNG 8-byte signature, lowercase hex. */
   val PngSigHex = "89504e470d0a1a0a"
 
@@ -127,8 +122,8 @@ object Multimodal {
     * metadata-extraction pass an image pipeline runs before any decode. */
   def pngHeader(bin: org.apache.spark.sql.Column): (org.apache.spark.sql.Column,
       org.apache.spark.sql.Column, org.apache.spark.sql.Column) =
-    ((lower(hex(substring(bin, 1, 8))) === PngSigHex).cast("int"),
-      beU32(bin, 17), beU32(bin, 21))
+    (Bytes.magic(bin, lit(1), PngSigHex).cast("int"),
+      Bytes.be(bin, lit(17), 4), Bytes.be(bin, lit(21), 4))
 
   /** H4 driver query: synthesize a REAL PNG signature+IHDR prefix per
     * asset (dims derived from metadata — the container has no images,
@@ -141,18 +136,13 @@ object Multimodal {
     val h = (col("doc_id") % 768 + 1).cast("int")
     val ihdrHex = concat(lit(PngSigHex),
       lit("0000000d"), lit("49484452"), // IHDR chunk length 13 + type
-      lpad(lower(hex(w)), 8, "0"), lpad(lower(hex(h)), 8, "0"),
+      Bytes.beHex(w, 4), Bytes.beHex(h, 4),
       lit("0806000000")) // bit depth 8, RGBA, deflate/adam7 defaults
     val bin = unhex(ihdrHex)
     val (sig, width, height) = pngHeader(bin)
     d.select(col("doc_id"), sig.as("valid_sig"),
       width.as("width"), height.as("height"))
   }
-
-  /** Big-endian u16 at a COLUMN byte offset (1-based) — the variable-
-    * offset sibling of beU32 for marker-structured formats. */
-  def beU16(bin: org.apache.spark.sql.Column, off: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    conv(hex(bin.substr(off, lit(2))), 16, 10).cast("int")
 
   /** JPEG SOF markers that carry frame dimensions (baseline,
     * extended-sequential, progressive, lossless). */
@@ -185,12 +175,11 @@ object Multimodal {
       maxSegments: Int = JpegMaxSegments): DataFrame = {
     val bin = col(binCol)
     var out = df
-      .withColumn("valid_soi", (lower(hex(substring(bin, 1, 2))) === "ffd8").cast("int"))
+      .withColumn("valid_soi", Bytes.magic(bin, lit(1), "ffd8").cast("int"))
       .withColumn("sof_off", lit(0))
       .withColumn("_cur", lit(3))
     for (_ <- 1 to maxSegments) {
-      val marker = lower(hex(bin.substr(col("_cur"), lit(2))))
-      val isSof = marker.isin(SofMarkers: _*)
+      val isSof = Bytes.hexAt(bin, col("_cur"), 2).isin(SofMarkers: _*)
       out = out
         .withColumn("sof_off",
           when(col("sof_off") > 0, col("sof_off"))
@@ -198,7 +187,7 @@ object Multimodal {
         // next marker sits 2 (marker bytes) + declared length past this
         .withColumn("_cur",
           when(col("sof_off") > 0, col("_cur"))
-            .otherwise(col("_cur") + lit(2) + beU16(bin, col("_cur") + lit(2))))
+            .otherwise(col("_cur") + lit(2) + Bytes.be(bin, col("_cur") + lit(2), 2)))
     }
     out.drop("_cur")
   }
@@ -207,8 +196,8 @@ object Multimodal {
     * height u16 at +5, width u16 at +7 (1-based, marker at sof_off). */
   def jpegDims(bin: org.apache.spark.sql.Column, sofOff: org.apache.spark.sql.Column)
       : (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =
-    (when(sofOff > 0, beU16(bin, sofOff + lit(7))),
-      when(sofOff > 0, beU16(bin, sofOff + lit(5))))
+    (when(sofOff > 0, Bytes.be(bin, sofOff + lit(7), 2)),
+      when(sofOff > 0, Bytes.be(bin, sofOff + lit(5), 2)))
 
   /** H5 driver query: synthesize a structurally REAL JPEG header per
     * asset — SOI, fixed APP0/JFIF, an OPTIONAL COM segment (present for
@@ -230,42 +219,19 @@ object Multimodal {
       lit("ffd8"),
       lit("ffe0" + "0010" + "4a46494600010100000100010000"), // APP0/JFIF, len 16
       when(col("doc_id") % 3 =!= 0,
-        concat(lit("fffe"), lpad(lower(hex(comLen + 2)), 4, "0"),
+        concat(lit("fffe"), Bytes.beHex(comLen + 2, 2),
           repeat(lit("78"), comLen))).otherwise(lit("")),
-      lit("ffe1"), lpad(lower(hex(app1Len + 2)), 4, "0"),
+      lit("ffe1"), Bytes.beHex(app1Len + 2, 2),
       repeat(lit("45"), app1Len),
       sofMarker, lit("0011" + "08"),
-      lpad(lower(hex(h)), 4, "0"), lpad(lower(hex(w)), 4, "0"),
+      Bytes.beHex(h, 2), Bytes.beHex(w, 2),
       lit("03" + "011100021101031101")) // 3 components, len 17 total
     val withBin = d.select(col("doc_id"), unhex(hx).as("_bin"))
     val scanned = withJpegSof(withBin, "_bin")
     val (width, height) = jpegDims(col("_bin"), col("sof_off"))
     scanned.select(col("doc_id"), col("valid_soi"),
-      lower(hex(col("_bin").substr(col("sof_off"), lit(2)))).as("sof_marker"),
+      Bytes.hexAt(col("_bin"), col("sof_off"), 2).as("sof_marker"),
       col("sof_off"), width.as("width"), height.as("height"))
-  }
-
-  /** Little-endian u16/u32 at a COLUMN byte offset (1-based) — RIFF
-    * containers (WAV/AVI) store multi-byte fields least-significant
-    * byte first, so the bytes are combined arithmetically rather than
-    * via a hex-concat (which would read big-endian). */
-  def leU16(bin: org.apache.spark.sql.Column, off: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    (conv(hex(bin.substr(off, lit(1))), 16, 10).cast("int") +
-      conv(hex(bin.substr(off + lit(1), lit(1))), 16, 10).cast("int") * 256)
-
-  def leU32(bin: org.apache.spark.sql.Column, off: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    (0 to 3).map(i => conv(hex(bin.substr(off + lit(i), lit(1))), 16, 10)
-      .cast("long") * (1L << (8 * i))).reduce(_ + _)
-
-  /** Little-endian lowercase-hex encodings of 16/32-bit ints — used to
-    * SYNTHESIZE RIFF bytes (the parse side uses leU16/leU32). */
-  private def leHex16(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    def b(x: org.apache.spark.sql.Column) = lpad(lower(hex(x.bitwiseAND(lit(255)))), 2, "0")
-    concat(b(c), b(shiftright(c, 8)))
-  }
-  private def leHex32(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    def b(x: org.apache.spark.sql.Column) = lpad(lower(hex(x.bitwiseAND(lit(255)))), 2, "0")
-    concat(b(c), b(shiftright(c, 8)), b(shiftright(c, 16)), b(shiftright(c, 24)))
   }
 
   /** Max RIFF chunks the WAV walk visits before giving up. */
@@ -287,14 +253,14 @@ object Multimodal {
     val bin = col(binCol)
     var out = df
       .withColumn("valid_riff",
-        (lower(hex(substring(bin, 1, 4))) === "52494646" && // "RIFF"
-          lower(hex(substring(bin, 9, 4))) === "57415645").cast("int")) // "WAVE"
+        (Bytes.magic(bin, lit(1), "52494646") && // "RIFF"
+          Bytes.magic(bin, lit(9), "57415645")).cast("int")) // "WAVE"
       .withColumn("fmt_off", lit(0))
       .withColumn("data_size", lit(0L))
       .withColumn("_cur", lit(13))
     for (_ <- 1 to maxChunks) {
-      val ckId = lower(hex(bin.substr(col("_cur"), lit(4))))
-      val ckSize = leU32(bin, col("_cur") + lit(4))
+      val ckId = Bytes.hexAt(bin, col("_cur"), 4)
+      val ckSize = Bytes.le(bin, col("_cur") + lit(4), 4)
       out = out
         .withColumn("fmt_off",
           when(col("fmt_off") > 0, col("fmt_off"))
@@ -337,13 +303,14 @@ object Multimodal {
     val hasList = col("doc_id") % 3 =!= 0
     val riffSize = lit(4 + 24 + 8) + when(hasList, listLen + 8).otherwise(0) + dataLen
     val hx = concat(
-      lit("52494646"), leHex32(riffSize), lit("57415645"), // RIFF size WAVE
-      when(hasList, concat(lit("4c495354"), leHex32(listLen), // "LIST"
+      lit("52494646"), Bytes.leHex(riffSize, 4), lit("57415645"), // RIFF size WAVE
+      when(hasList, concat(lit("4c495354"), Bytes.leHex(listLen, 4), // "LIST"
         repeat(lit("69"), listLen))).otherwise(lit("")),
-      lit("666d7420"), leHex32(lit(16)), // "fmt " + PCM payload size
-      leHex16(lit(1)), leHex16(channels), leHex32(rate),
-      leHex32(rate * blockAlign), leHex16(blockAlign), leHex16(lit(16)),
-      lit("64617461"), leHex32(dataLen)) // "data" header (payload elided)
+      lit("666d7420"), Bytes.leHex(lit(16), 4), // "fmt " + PCM payload size
+      Bytes.leHex(lit(1), 2), Bytes.leHex(channels, 2), Bytes.leHex(rate, 4),
+      Bytes.leHex(rate * blockAlign, 4), Bytes.leHex(blockAlign, 2),
+      Bytes.leHex(lit(16), 2),
+      lit("64617461"), Bytes.leHex(dataLen, 4)) // "data" header (payload elided)
     val withBin = d.select(col("doc_id"), unhex(hx).as("_bin"))
     val scanned = withWavChunks(withBin, "_bin")
     val fmtOff = col("fmt_off")
@@ -352,10 +319,10 @@ object Multimodal {
     // whose walk found no fmt within maxChunks yields nulls, not a
     // garbage read at offset 0
     def ifFmt(c: org.apache.spark.sql.Column) = when(fmtOff > 0, c)
-    val pChannels = ifFmt(leU16(bin, fmtOff + lit(2)))
-    val pRate = ifFmt(leU32(bin, fmtOff + lit(4)))
-    val pBlock = ifFmt(leU16(bin, fmtOff + lit(12)))
-    val pBits = ifFmt(leU16(bin, fmtOff + lit(14)))
+    val pChannels = ifFmt(Bytes.le(bin, fmtOff + lit(2), 2))
+    val pRate = ifFmt(Bytes.le(bin, fmtOff + lit(4), 4))
+    val pBlock = ifFmt(Bytes.le(bin, fmtOff + lit(12), 2))
+    val pBits = ifFmt(Bytes.le(bin, fmtOff + lit(14), 2))
     val pFrames = when(pBlock > 0, (col("data_size") / pBlock).cast("long"))
     scanned.select(col("doc_id"), col("valid_riff"), fmtOff.as("fmt_off"),
       pChannels.as("channels"), pRate.as("sample_rate"),
@@ -380,14 +347,14 @@ object Multimodal {
     val bin = col(binCol)
     var out = df
       .withColumn("valid_avi",
-        (lower(hex(substring(bin, 1, 4))) === "52494646" && // "RIFF"
-          lower(hex(substring(bin, 9, 4))) === "41564920").cast("int")) // "AVI "
+        (Bytes.magic(bin, lit(1), "52494646") && // "RIFF"
+          Bytes.magic(bin, lit(9), "41564920")).cast("int")) // "AVI "
       .withColumn("hdrl_off", lit(0))
       .withColumn("_cur", lit(13))
     for (_ <- 1 to maxChunks) {
-      val ckId = lower(hex(bin.substr(col("_cur"), lit(4))))
-      val listType = lower(hex(bin.substr(col("_cur") + lit(8), lit(4))))
-      val ckSize = leU32(bin, col("_cur") + lit(4))
+      val ckId = Bytes.hexAt(bin, col("_cur"), 4)
+      val listType = Bytes.hexAt(bin, col("_cur") + lit(8), 4)
+      val ckSize = Bytes.le(bin, col("_cur") + lit(4), 4)
       out = out
         .withColumn("hdrl_off",
           when(col("hdrl_off") > 0, col("hdrl_off"))
@@ -419,32 +386,31 @@ object Multimodal {
     val hasJunk = col("doc_id") % 3 =!= 0
     val junkLen = ((col("doc_id") % 12) * 2 + 2).cast("int")
     val avihPayload = concat(
-      leHex32(usec), leHex32(lit(0)), leHex32(lit(0)), leHex32(lit(16)),
-      leHex32(frames), leHex32(lit(0)), leHex32(streams), leHex32(lit(0)),
-      leHex32(w), leHex32(h), repeat(lit("00"), 16)) // 4 reserved dwords
+      Seq(usec, lit(0), lit(0), lit(16), frames, lit(0), streams, lit(0), w, h)
+        .map(Bytes.leHex(_, 4)) :+ repeat(lit("00"), 16): _*) // 4 reserved dwords
     val listLen = lit(4 + 8 + 56) // "hdrl" + avih header + payload
     val riffSize = lit(4) + when(hasJunk, junkLen + 8).otherwise(0) + listLen + 8
     val hx = concat(
-      lit("52494646"), leHex32(riffSize), lit("41564920"), // RIFF … "AVI "
-      when(hasJunk, concat(lit("4a554e4b"), leHex32(junkLen), // "JUNK"
+      lit("52494646"), Bytes.leHex(riffSize, 4), lit("41564920"), // RIFF … "AVI "
+      when(hasJunk, concat(lit("4a554e4b"), Bytes.leHex(junkLen, 4), // "JUNK"
         repeat(lit("00"), junkLen))).otherwise(lit("")),
-      lit("4c495354"), leHex32(listLen), lit("6864726c"), // LIST … "hdrl"
-      lit("61766968"), leHex32(lit(56)), avihPayload) // "avih" + cb
+      lit("4c495354"), Bytes.leHex(listLen, 4), lit("6864726c"), // LIST … "hdrl"
+      lit("61766968"), Bytes.leHex(lit(56), 4), avihPayload) // "avih" + cb
     val withBin = d.select(col("doc_id"), unhex(hx).as("_bin"))
     val scanned = withAviHdrl(withBin, "_bin")
     val bin = col("_bin")
     val off = col("hdrl_off")
     // avih must be the first hdrl entry (spec-mandatory) — guard on it
     val hasAvih = off > 0 &&
-      lower(hex(bin.substr(off + lit(12), lit(4)))) === "61766968"
+      Bytes.magic(bin, off + lit(12), "61766968")
     def ifAvih(c: org.apache.spark.sql.Column) = when(hasAvih, c)
-    val pUsec = ifAvih(leU32(bin, off + lit(20)))
-    val pFrames = ifAvih(leU32(bin, off + lit(36)))
+    val pUsec = ifAvih(Bytes.le(bin, off + lit(20), 4))
+    val pFrames = ifAvih(Bytes.le(bin, off + lit(36), 4))
     scanned.select(col("doc_id"), col("valid_avi"), off.as("hdrl_off"),
       pUsec.as("usec_per_frame"), pFrames.as("total_frames"),
-      ifAvih(leU32(bin, off + lit(44))).cast("int").as("n_streams"),
-      ifAvih(leU32(bin, off + lit(52))).cast("int").as("width"),
-      ifAvih(leU32(bin, off + lit(56))).cast("int").as("height"),
+      ifAvih(Bytes.le(bin, off + lit(44), 4)).cast("int").as("n_streams"),
+      ifAvih(Bytes.le(bin, off + lit(52), 4)).cast("int").as("width"),
+      ifAvih(Bytes.le(bin, off + lit(56), 4)).cast("int").as("height"),
       round(lit(1000000.0) / pUsec, 4).as("fps"),
       round((pUsec * pFrames).cast("double") / 1000.0, 4).as("duration_ms"))
   }
@@ -458,7 +424,7 @@ object Multimodal {
     * payloads). Returns null width for a reserved/oversized lead
     * byte, so callers' guards freeze instead of misparsing. */
   def ebmlVintLen(bin: org.apache.spark.sql.Column, off: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val b = conv(hex(bin.substr(off, lit(1))), 16, 10).cast("int")
+    val b = Bytes.u8(bin, off)
     when(b >= 128, 1).when(b >= 64, 2).when(b >= 32, 3).when(b >= 16, 4)
   }
 
@@ -468,56 +434,26 @@ object Multimodal {
       len: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     val marker = when(len === 1, 128L).when(len === 2, 16384L)
       .when(len === 3, 2097152L).when(len === 4, 268435456L) // 2^(7·len)
-    (conv(hex(bin.substr(off, len)), 16, 10).cast("long") - marker).cast("long")
+    Bytes.be(bin, off, len, "long") - marker
   }
 
   /** Max EBML header elements the walk visits. */
   val EbmlMaxElements = 7
 
-  /** H27 driver query: synthesize a structurally REAL EBML header per
-    * asset — the 0x1A45DFA3 magic, the header payload size as a vint
-    * (every 4th asset uses the WIDER 2-byte encoding of the same
-    * value — legal per spec, and the case that breaks fixed-offset
-    * parsers), then the standard element run (EBMLVersion,
-    * ReadVersion, MaxIDLength, MaxSizeLength, DocType, DocTypeVersion,
-    * DocTypeReadVersion) — and walk it back from the BYTES: each hop
-    * decodes a 2-byte element ID plus a GENERAL vint size (not the
-    * 1-byte shortcut the synthesizer happens to emit), capturing the
-    * DocType string ("matroska" | "webm") and the version fields. */
-  def mmEbmlMeta(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    val isWebm = col("doc_id") % 2 === 1
-    val docType = when(isWebm, "7765626d") // "webm"
-      .otherwise(lit("6d6174726f736b61")) // "matroska"
-    val dtLen = when(isWebm, 4).otherwise(8)
-    val ebmlVer = (col("n_chars") % 2 + 1).cast("int")
-    val dtVer = (col("doc_id") % 4 + 1).cast("int")
-    val paySize = lit(23) + dtLen
-    val wideVint = col("doc_id") % 4 === 0
-    val sizeVintHex = when(wideVint,
-        concat(lit("40"), lpad(lower(hex(paySize)), 2, "0")))
-      .otherwise(lpad(lower(hex(paySize + 128)), 2, "0"))
-    def b1(v: org.apache.spark.sql.Column) = lpad(lower(hex(v)), 2, "0")
-    // corrupt leg (every 9th doc): wrong magic — the parser must null
-    // every field rather than misread, the mm-family convention
-    val magic = when(col("doc_id") % 9 === 0, "deadbeef").otherwise(lit("1a45dfa3"))
-    val hx = concat(
-      magic, sizeVintHex,
-      lit("4286"), lit("81"), b1(ebmlVer), // EBMLVersion
-      lit("42f7"), lit("81"), lit("01"), // EBMLReadVersion
-      lit("42f2"), lit("81"), lit("04"), // EBMLMaxIDLength
-      lit("42f3"), lit("81"), lit("08"), // EBMLMaxSizeLength
-      lit("4282"), b1(dtLen + 128), docType, // DocType
-      lit("4287"), lit("81"), b1(dtVer), // DocTypeVersion
-      lit("4285"), lit("81"), lit("01")) // DocTypeReadVersion
-    val withBin = d.select(col("doc_id"), unhex(hx).as("_bin"))
-    val bin = col("_bin")
-    val validC = (lower(hex(substring(bin, 1, 4))) === "1a45dfa3").cast("int")
+  /** H27: EBML header walk (Matroska/WebM) — the 0x1A45DFA3 magic,
+    * the header payload size as a vint, then up to [[EbmlMaxElements]]
+    * elements, each a 2-byte element ID plus a GENERAL vint size,
+    * capturing the DocType string and the version fields. Adds
+    * `valid_ebml`, `hdr_vint_len`, `header_size`, `ebml_version`,
+    * `doctype` and `doctype_version` to `df`. */
+  def withEbmlHeader(df: DataFrame, binCol: String): DataFrame = {
+    val bin = col(binCol)
+    val validC = Bytes.magic(bin, lit(1), "1a45dfa3").cast("int")
     // guard every parsed field on the magic (the jpegDims convention):
     // a corrupt stream yields nulls, never a structural misread
     val hdrLen = when(validC === 1, ebmlVintLen(bin, lit(5)))
     val hdrSize = when(validC === 1, ebmlVintVal(bin, lit(5), ebmlVintLen(bin, lit(5))))
-    var out = withBin
+    var out = df
       .withColumn("valid_ebml", validC)
       .withColumn("hdr_vint_len", hdrLen)
       .withColumn("header_size", hdrSize)
@@ -532,31 +468,70 @@ object Multimodal {
       // across 7 hops and the generated method blows the 64KB
       // JIT/codegen limit (caught by CodegenFallbackSpec at birth)
       out = out
-        .withColumn("_id", lower(hex(bin.substr(col("_cur"), lit(2)))))
+        .withColumn("_id", Bytes.hexAt(bin, col("_cur"), 2))
         .withColumn("_slen", ebmlVintLen(bin, col("_cur") + lit(2)))
         .withColumn("_sval", ebmlVintVal(bin, col("_cur") + lit(2), col("_slen")))
-      out = out.withColumn("_poff", (col("_cur") + lit(2) + col("_slen")).cast("int"))
+      // the payload offset and its unsigned value, read once per hop
+      val poff = (col("_cur") + lit(2) + col("_slen")).cast("int")
+      out = out.withColumns(Map("_poff" -> poff,
+        "_uval" -> Bytes.be(bin, poff, col("_sval").cast("int"), "int")))
       out = out
         .withColumn("ebml_version",
           when(col("ebml_version").isNotNull, col("ebml_version"))
-            .when(col("_id") === "4286",
-              conv(hex(bin.substr(col("_poff"), col("_sval").cast("int"))), 16, 10).cast("int")))
+            .when(col("_id") === "4286", col("_uval")))
         .withColumn("doctype",
           when(col("doctype").isNotNull, col("doctype"))
             .when(col("_id") === "4282",
               bin.substr(col("_poff"), col("_sval").cast("int")).cast("string")))
         .withColumn("doctype_version",
           when(col("doctype_version").isNotNull, col("doctype_version"))
-            .when(col("_id") === "4287",
-              conv(hex(bin.substr(col("_poff"), col("_sval").cast("int"))), 16, 10).cast("int")))
+            .when(col("_id") === "4287", col("_uval")))
         .withColumn("_cur",
           when(col("_slen").isNotNull && col("_poff") + col("_sval") <= Int.MaxValue,
             (col("_poff") + col("_sval")).cast("int")))
     }
-    out.select(col("doc_id"), col("valid_ebml"), col("hdr_vint_len"),
-      col("header_size"), col("ebml_version"), col("doctype"),
-      col("doctype_version"),
-      (col("doctype") === "webm").cast("int").as("is_webm"))
+    out.drop("_id", "_slen", "_sval", "_poff", "_uval", "_cur")
+  }
+
+  /** H27 driver query: synthesize a structurally REAL EBML header per
+    * asset — the magic, the header payload size as a vint (every 4th
+    * asset uses the WIDER 2-byte encoding of the same value — legal
+    * per spec, and the case that breaks fixed-offset parsers), then
+    * the standard element run (EBMLVersion, ReadVersion, MaxIDLength,
+    * MaxSizeLength, DocType, DocTypeVersion, DocTypeReadVersion) — and
+    * walk it back from the BYTES with [[withEbmlHeader]], whose general
+    * vint decode is not the 1-byte shortcut the synthesizer happens to
+    * emit. */
+  def mmEbmlMeta(spark: SparkSession, dir: String): DataFrame = {
+    val d = Tables.documents(spark, dir)
+    val isWebm = col("doc_id") % 2 === 1
+    val docType = when(isWebm, "7765626d") // "webm"
+      .otherwise(lit("6d6174726f736b61")) // "matroska"
+    val dtLen = when(isWebm, 4).otherwise(8)
+    val ebmlVer = (col("n_chars") % 2 + 1).cast("int")
+    val dtVer = (col("doc_id") % 4 + 1).cast("int")
+    val paySize = lit(23) + dtLen
+    val wideVint = col("doc_id") % 4 === 0
+    val sizeVintHex = when(wideVint,
+        concat(lit("40"), Bytes.beHex(paySize, 1)))
+      .otherwise(Bytes.beHex(paySize + 128, 1))
+    // corrupt leg (every 9th doc): wrong magic — the parser must null
+    // every field rather than misread, the mm-family convention
+    val magic = when(col("doc_id") % 9 === 0, "deadbeef").otherwise(lit("1a45dfa3"))
+    val hx = concat(
+      magic, sizeVintHex,
+      lit("4286"), lit("81"), Bytes.beHex(ebmlVer, 1), // EBMLVersion
+      lit("42f7"), lit("81"), lit("01"), // EBMLReadVersion
+      lit("42f2"), lit("81"), lit("04"), // EBMLMaxIDLength
+      lit("42f3"), lit("81"), lit("08"), // EBMLMaxSizeLength
+      lit("4282"), Bytes.beHex(dtLen + 128, 1), docType, // DocType
+      lit("4287"), lit("81"), Bytes.beHex(dtVer, 1), // DocTypeVersion
+      lit("4285"), lit("81"), lit("01")) // DocTypeReadVersion
+    withEbmlHeader(d.select(col("doc_id"), unhex(hx).as("_bin")), "_bin")
+      .select(col("doc_id"), col("valid_ebml"), col("hdr_vint_len"),
+        col("header_size"), col("ebml_version"), col("doctype"),
+        col("doctype_version"),
+        (col("doctype") === "webm").cast("int").as("is_webm"))
   }
 
   /** ELF machine ids → names for the common ISAs (the triage subset;
@@ -564,15 +539,36 @@ object Multimodal {
   val ElfMachines: Seq[(Int, String)] = Seq(
     3 -> "x86", 40 -> "arm", 62 -> "x86_64", 183 -> "aarch64", 243 -> "riscv")
 
-  /** H28 driver query: ELF identification triage — the parser a CODE
-    * corpus runs over its binary blobs ("what did the crawler drag
-    * in: which ISA, 32/64-bit, relocatable or executable?") before
-    * any real toolchain touches them. The e_ident block is
-    * endianness-FREE (single bytes); e_type/e_machine honor
-    * EI_DATA — the parse dispatches LE/BE per row, the detail naive
-    * fixed-endian parsers get wrong on big-endian objects.
-    * Synthesized streams vary class/endianness/type/machine from
-    * metadata; every 11th doc is corrupt (bad magic → all null). */
+  /** H28: ELF identification triage — the parser a CODE corpus runs
+    * over its binary blobs ("what did the crawler drag in: which ISA,
+    * 32/64-bit, relocatable or executable?") before any real toolchain
+    * touches them. The e_ident block is endianness-FREE (single
+    * bytes); e_type/e_machine honor EI_DATA — the parse dispatches
+    * LE/BE per row, the detail naive fixed-endian parsers get wrong on
+    * big-endian objects. Adds `valid_elf`, `bits`, `endianness`,
+    * `elf_type`, `machine_id` and `machine`. */
+  def withElfIdent(df: DataFrame, binCol: String): DataFrame = {
+    val bin = col(binCol)
+    val valid = Bytes.magic(bin, lit(1), "7f454c46").cast("int")
+    def ifV(c: org.apache.spark.sql.Column) = when(valid === 1, c)
+    val pData = ifV(Bytes.u8(bin, lit(6)))
+    val pType = ifV(Bytes.uint(bin, lit(17), 2, pData === 1))
+    val pMach = ifV(Bytes.uint(bin, lit(19), 2, pData === 1))
+    val machName = ElfMachines.foldLeft(lit(null).cast("string")) {
+      case (acc, (id, nm)) => when(pMach === id, nm).otherwise(acc)
+    }
+    df.select(col("*"), valid.as("valid_elf"),
+      ifV(when(Bytes.u8(bin, lit(5)) === 2, 64).otherwise(32)).cast("int").as("bits"),
+      ifV(when(pData === 2, "BE").otherwise(lit("LE"))).as("endianness"),
+      ifV(when(pType === 1, "REL").when(pType === 2, "EXEC")
+        .when(pType === 3, "DYN").when(pType === 4, "CORE")
+        .otherwise(lit("OTHER"))).as("elf_type"),
+      pMach.as("machine_id"), ifV(machName).as("machine"))
+  }
+
+  /** H28 driver query: synthesized streams vary class/endianness/type/
+    * machine from metadata; every 11th doc is corrupt (bad magic → all
+    * null). */
   def mmElfMeta(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir)
     val cls = (col("doc_id") % 2 + 1).cast("int") // 1=32-bit, 2=64-bit
@@ -581,48 +577,57 @@ object Multimodal {
     val mach = element_at(
       array(ElfMachines.map(m => lit(m._1)): _*),
       (col("doc_id") % ElfMachines.size + 1).cast("int"))
-    def b1(v: org.apache.spark.sql.Column) = lpad(lower(hex(v)), 2, "0")
-    def u16e(v: org.apache.spark.sql.Column) = // honor EI_DATA
-      when(dat === 1, concat(b1(v % 256), b1(v / 256)))
-        .otherwise(concat(b1(v / 256), b1(v % 256)))
     val magic = when(col("doc_id") % 11 === 0, "deadc0de").otherwise(lit("7f454c46"))
     val hx = concat(
-      magic, b1(cls), b1(dat), lit("01"), // EI_VERSION
+      magic, Bytes.beHex(cls, 1), Bytes.beHex(dat, 1), lit("01"), // EI_VERSION
       repeat(lit("00"), 9), // padding to byte 16
-      u16e(etype), u16e(mach), // e_type, e_machine
+      // e_type, e_machine in the byte order EI_DATA names
+      Bytes.hexField(etype, 2, dat === 1), Bytes.hexField(mach, 2, dat === 1),
       when(dat === 1, "01000000").otherwise(lit("00000001"))) // e_version
-    val withBin = d.select(col("doc_id"), unhex(hx).as("_bin"))
-    val bin = col("_bin")
-    val valid = (lower(hex(substring(bin, 1, 4))) === "7f454c46").cast("int")
-    def ifV(c: org.apache.spark.sql.Column) = when(valid === 1, c)
-    val pData = ifV(conv(hex(substring(bin, 6, 1)), 16, 10).cast("int"))
-    def u16At(off: Int) = when(pData === 1, leU16(bin, lit(off)))
-      .otherwise(conv(hex(substring(bin, off, 2)), 16, 10).cast("long"))
-    val pType = ifV(u16At(17).cast("int"))
-    val pMach = ifV(u16At(19).cast("int"))
-    val machName = ElfMachines.foldLeft(lit(null).cast("string")) {
-      case (acc, (id, nm)) => when(pMach === id, nm).otherwise(acc)
-    }
-    withBin.select(col("doc_id"), valid.as("valid_elf"),
-      ifV(when(conv(hex(substring(bin, 5, 1)), 16, 10) === 2, 64).otherwise(32))
-        .cast("int").as("bits"),
-      ifV(when(pData === 2, "BE").otherwise(lit("LE"))).as("endianness"),
-      ifV(when(pType === 1, "REL").when(pType === 2, "EXEC")
-        .when(pType === 3, "DYN").when(pType === 4, "CORE")
-        .otherwise(lit("OTHER"))).as("elf_type"),
-      pMach.as("machine_id"), ifV(machName).as("machine"))
+    withElfIdent(d.select(col("doc_id"), unhex(hx).as("_bin")), "_bin")
+      .select("doc_id", "valid_elf", "bits", "endianness", "elf_type",
+        "machine_id", "machine")
   }
 
   /** PE machine ids → names (COFF header subset). */
   val PeMachines: Seq[(Long, String)] = Seq(
     0x14cL -> "x86", 0x8664L -> "x86_64", 0xaa64L -> "aarch64")
 
-  /** H29 driver query: PE/COFF triage — the Windows sibling of H28:
-    * 'MZ' DOS header, the e_lfanew pointer at 0x3C (VARIABLE — real
-    * DOS stubs differ in length, so the PE signature has no fixed
-    * offset; the synthesizer varies it), 'PE\0\0', then the COFF
-    * machine/section-count/timestamp and the optional-header magic
-    * distinguishing PE32 from PE32+. Every 13th doc corrupt. */
+  /** H29: PE/COFF triage — the Windows sibling of H28: 'MZ' DOS
+    * header, the e_lfanew pointer at 0x3C (VARIABLE — real DOS stubs
+    * differ in length, so the PE signature has no fixed offset),
+    * 'PE\0\0', then the COFF machine/section-count/timestamp and the
+    * optional-header magic distinguishing PE32 from PE32+. An e_lfanew
+    * pointing past the stream finds no PE header. Adds `valid_mz`,
+    * `valid_pe`, `pe_off`, `machine_id`, `machine`, `n_sections`,
+    * `timestamp` and `format`. */
+  def withPeHeader(df: DataFrame, binCol: String): DataFrame = {
+    val bin = col(binCol)
+    val valid = Bytes.magic(bin, lit(1), "4d5a").cast("int")
+    // staged: the PE signature position feeds every COFF read
+    val staged = df.withColumn("_pe", Bytes.pos(bin, Bytes.le(bin, lit(61), 4) + 1))
+    val hasPe = valid === 1 && Bytes.magic(bin, col("_pe"), "50450000")
+    def ifPe(c: org.apache.spark.sql.Column) = when(hasPe, c)
+    val coff = col("_pe") + 4 // 1-based offset of the COFF header
+    val pMach = ifPe(Bytes.le(bin, coff, 2))
+    val machName = PeMachines.foldLeft(lit(null).cast("string")) {
+      case (acc, (id, nm)) => when(pMach === id, nm).otherwise(acc)
+    }
+    val optMagic = ifPe(Bytes.le(bin, coff + lit(20), 2))
+    staged.select(col("*"), valid.as("valid_mz"),
+      ifPe(lit(1)).otherwise(lit(0)).cast("int").as("valid_pe"),
+      ifPe(col("_pe") - 1).as("pe_off"),
+      pMach.cast("int").as("machine_id"), ifPe(machName).as("machine"),
+      ifPe(Bytes.le(bin, coff + lit(2), 2)).cast("int").as("n_sections"),
+      ifPe(Bytes.le(bin, coff + lit(4), 4)).as("timestamp"),
+      ifPe(when(optMagic === 0x20b, "PE32+").when(optMagic === 0x10b, "PE32")
+        .otherwise(lit("UNKNOWN"))).as("format"))
+      .drop("_pe")
+  }
+
+  /** H29 driver query: the synthesizer varies the DOS stub length (so
+    * e_lfanew), machine, section count and PE32/PE32+; every 13th doc
+    * corrupt. */
   def mmPeMeta(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir)
     val stub = ((col("doc_id") % 8) * 4).cast("int") // extra DOS stub bytes
@@ -633,46 +638,18 @@ object Multimodal {
     val nsect = (col("n_chars") % 12 + 1).cast("long")
     val stamp = (col("doc_id") * 7 % 100000000L).cast("long")
     val pe32plus = col("doc_id") % 2 === 0
-    def le16(v: org.apache.spark.sql.Column) =
-      concat(lpad(lower(hex(v % 256)), 2, "0"), lpad(lower(hex(v / 256)), 2, "0"))
     val magic = when(col("doc_id") % 13 === 0, "0000").otherwise(lit("4d5a"))
     val hx = concat(
-      magic, repeat(lit("00"), 58), leHex32(lfanew), // DOS header
+      magic, repeat(lit("00"), 58), Bytes.leHex(lfanew, 4), // DOS header
       repeat(lit("00"), stub), // variable DOS stub
       lit("50450000"), // "PE\0\0"
-      le16(mach), le16(nsect), leHex32(stamp),
+      Bytes.leHex(mach, 2), Bytes.leHex(nsect, 2), Bytes.leHex(stamp, 4),
       repeat(lit("00"), 10), // symtab ptr (4), sym count (4), opt size (2)
-      le16(lit(0)), // characteristics
+      Bytes.leHex(lit(0), 2), // characteristics
       when(pe32plus, "0b02").otherwise(lit("0b01"))) // optional magic LE
-    val withBin = d.select(col("doc_id"), unhex(hx).as("_bin"))
-    val bin = col("_bin")
-    val valid = (lower(hex(substring(bin, 1, 2))) === "4d5a").cast("int")
-    val pLfanew = leU32(bin, lit(61)).cast("int")
-    val hasPe = valid === 1 &&
-      lower(hex(bin.substr(pLfanew + 1, lit(4)))) === "50450000"
-    def ifPe(c: org.apache.spark.sql.Column) = when(hasPe, c)
-    val coff = pLfanew + 5 // 1-based offset of the COFF header
-    val pMach = ifPe(leU16(bin, coff))
-    val machName = PeMachines.foldLeft(lit(null).cast("string")) {
-      case (acc, (id, nm)) => when(pMach === id, nm).otherwise(acc)
-    }
-    val optMagic = ifPe(leU16(bin, coff + lit(20)))
-    withBin.select(col("doc_id"), valid.as("valid_mz"),
-      ifPe(lit(1)).otherwise(lit(0)).cast("int").as("valid_pe"),
-      ifPe(pLfanew).as("pe_off"),
-      pMach.cast("int").as("machine_id"), ifPe(machName).as("machine"),
-      ifPe(leU16(bin, coff + lit(2))).cast("int").as("n_sections"),
-      ifPe(leU32(bin, coff + lit(4))).as("timestamp"),
-      ifPe(when(optMagic === 0x20b, "PE32+").when(optMagic === 0x10b, "PE32")
-        .otherwise(lit("UNKNOWN"))).as("format"))
-  }
-
-  /** Signed little-endian i32 (two's complement) at a COLUMN byte
-    * offset — BMP's biHeight is NEGATIVE for top-down row order, the
-    * classic header quirk naive parsers truncate to garbage. */
-  def leI32(bin: org.apache.spark.sql.Column, off: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val u = leU32(bin, off)
-    when(u >= 2147483648L, u - 4294967296L).otherwise(u)
+    withPeHeader(d.select(col("doc_id"), unhex(hx).as("_bin")), "_bin")
+      .select("doc_id", "valid_mz", "valid_pe", "pe_off", "machine_id",
+        "machine", "n_sections", "timestamp", "format")
   }
 
   /** H8: BITMAPFILEHEADER + BITMAPINFOHEADER parse — fixed offsets
@@ -682,32 +659,18 @@ object Multimodal {
     * the negative-height encoding. Pure codegen'd projections. */
   def withBmpHeader(df: DataFrame, binCol: String): DataFrame = {
     val bin = col(binCol)
-    val validBmp = (lower(hex(substring(bin, 1, 2))) === "424d").cast("int") // "BM"
+    val validBmp = Bytes.magic(bin, lit(1), "424d").cast("int") // "BM"
     def ifBmp(c: org.apache.spark.sql.Column) = when(validBmp === 1, c)
-    val hRaw = ifBmp(leI32(bin, lit(23)))
+    val hRaw = ifBmp(Bytes.i32le(bin, lit(23)))
     df.withColumn("valid_bmp", validBmp)
-      .withColumn("width", ifBmp(leI32(bin, lit(19))))
+      .withColumn("width", ifBmp(Bytes.i32le(bin, lit(19))))
       .withColumn("height", abs(hRaw))
       .withColumn("top_down", (hRaw < 0).cast("int"))
-      .withColumn("bpp", ifBmp(leU16(bin, lit(29))))
+      .withColumn("bpp", ifBmp(Bytes.le(bin, lit(29), 2)))
   }
-
-  /** Big-endian u32 at a COLUMN byte offset (1-based) — the variable-
-    * offset sibling of beU32 for box-structured formats (ISO-BMFF). */
-  def beU32c(bin: org.apache.spark.sql.Column, off: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    conv(hex(bin.substr(off, lit(4))), 16, 10).cast("long")
-
-  private def beHex32(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    lpad(lower(hex(c)), 8, "0")
 
   /** Max top-level boxes the MP4 walk visits before giving up. */
   val Mp4MaxBoxes = 4
-
-  /** Big-endian u64 at a COLUMN byte offset (1-based) — for ISO-BMFF
-    * `largesize` fields. conv(hex, 16, 10) is exact through 2^63-1;
-    * real box sizes fit comfortably. */
-  def beU64c(bin: org.apache.spark.sql.Column, off: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    conv(hex(bin.substr(off, lit(8))), 16, 10).cast("long")
 
   /** Walk the top-level box chain of an ISO-BMFF (MP4) byte stream:
     * each box is a big-endian u32 size + 4cc type, the next box sits
@@ -727,14 +690,14 @@ object Multimodal {
     val bin = col(binCol)
     var out = df
       .withColumn("valid_ftyp",
-        (lower(hex(substring(bin, 5, 4))) === "66747970").cast("int")) // "ftyp"
+        Bytes.magic(bin, lit(5), "66747970").cast("int")) // "ftyp"
       .withColumn("moov_off", lit(0))
       .withColumn("mdat_size", lit(0L))
       .withColumn("_cur", lit(1))
     for (_ <- 1 to maxBoxes) {
-      val boxType = lower(hex(bin.substr(col("_cur") + lit(4), lit(4))))
-      val size32 = beU32c(bin, col("_cur"))
-      val boxSize = when(size32 === 1, beU64c(bin, col("_cur") + lit(8)))
+      val boxType = Bytes.hexAt(bin, col("_cur") + lit(4), 4)
+      val size32 = Bytes.be(bin, col("_cur"), 4)
+      val boxSize = when(size32 === 1, Bytes.be(bin, col("_cur") + lit(8), 8))
         .when(size32 === 0, (length(bin) - col("_cur") + 1).cast("long"))
         .otherwise(size32)
       val headerLen = when(size32 === 1, lit(16L)).otherwise(lit(8L))
@@ -756,9 +719,6 @@ object Multimodal {
     }
     out.drop("_cur")
   }
-
-  private def beHex64(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    lpad(lower(hex(c)), 16, "0")
 
   /** H7 driver query: synthesize a structurally REAL MP4 prefix per
     * asset — ftyp (isom brand), an OPTIONAL variable-length free box
@@ -785,18 +745,18 @@ object Multimodal {
     val hx = concat(
       // ftyp: size 20, brand isom, minor 512, compat mp41
       lit("00000014" + "66747970" + "69736f6d" + "00000200" + "6d703431"),
-      when(hasFree, concat(beHex32(freeLen + 8), lit("66726565"), // "free"
+      when(hasFree, concat(Bytes.beHex(freeLen + 8, 4), lit("66726565"), // "free"
         repeat(lit("00"), freeLen))).otherwise(lit("")),
       lit("00000074" + "6d6f6f76"), // moov: size 116
       lit("0000006c" + "6d766864" + "00000000"), // mvhd: size 108, v0
       lit("00000001" + "00000002"), // creation/modification stamps
-      beHex32(timescale), beHex32(durTicks),
+      Bytes.beHex(timescale, 4), Bytes.beHex(durTicks, 4),
       lit("00" * 80), // rate/volume/reserved/matrix/next_track zeroed
       // mdat header (payload elided): size==1 + largesize (16-byte
       // header) for every 5th asset, plain u32 size otherwise
       when(useLargesize, concat(lit("00000001" + "6d646174"),
-        beHex64((dataLen + 16).cast("long"))))
-        .otherwise(concat(beHex32(dataLen + 8), lit("6d646174"))))
+        Bytes.beHex((dataLen + 16).cast("long"), 8)))
+        .otherwise(concat(Bytes.beHex(dataLen + 8, 4), lit("6d646174"))))
     val withBin = d.select(col("doc_id"), unhex(hx).as("_bin"))
     val scanned = withMp4Boxes(withBin, "_bin")
     val moovOff = col("moov_off")
@@ -804,10 +764,10 @@ object Multimodal {
     // mvhd sits first in moov: type at moov_off+12, payload at +16,
     // timescale at +28, duration at +32 (guarded like jpegDims/wav)
     val hasMvhd = moovOff > 0 &&
-      lower(hex(bin.substr(moovOff + lit(12), lit(4)))) === "6d766864"
+      Bytes.magic(bin, moovOff + lit(12), "6d766864")
     def ifMvhd(c: org.apache.spark.sql.Column) = when(hasMvhd, c)
-    val pTimescale = ifMvhd(beU32c(bin, moovOff + lit(28)))
-    val pDuration = ifMvhd(beU32c(bin, moovOff + lit(32)))
+    val pTimescale = ifMvhd(Bytes.be(bin, moovOff + lit(28), 4))
+    val pDuration = ifMvhd(Bytes.be(bin, moovOff + lit(32), 4))
     scanned.select(col("doc_id"), col("valid_ftyp"), moovOff.as("moov_off"),
       pTimescale.as("timescale"), pDuration.as("duration_ticks"),
       col("mdat_size"),
@@ -835,24 +795,14 @@ object Multimodal {
     val bpp = when(col("doc_id") % 2 === 0, 24).otherwise(32)
     val heightStored = when(topDown, lit(4294967296L) - height).otherwise(height)
     val hx = concat(
-      lit("424d"), leHex32(lit(54)), lit("00000000"), leHex32(lit(54)), // BM, size, reserved, data offset
-      leHex32(lit(40)), // biSize
-      leHex32(width), leHex32(heightStored),
-      lit("0100"), leHex16(bpp), // planes=1, bitCount
+      // BM, size, reserved, data offset
+      lit("424d"), Bytes.leHex(lit(54), 4), lit("00000000"), Bytes.leHex(lit(54), 4),
+      Bytes.leHex(lit(40), 4), // biSize
+      Bytes.leHex(width, 4), Bytes.leHex(heightStored, 4),
+      lit("0100"), Bytes.leHex(bpp, 2), // planes=1, bitCount
       lit("00" * 24)) // compression/sizeImage/ppm/clr fields zeroed
     withBmpHeader(d.select(col("doc_id"), unhex(hx).as("_bin")), "_bin")
       .select("doc_id", "valid_bmp", "width", "height", "top_down", "bpp")
-  }
-
-  /** Little-endian u24 at a COLUMN byte offset — WebP VP8X canvas
-    * fields are 24-bit (the format outgrew the lossy 14-bit limit). */
-  def leU24(bin: org.apache.spark.sql.Column, off: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    (0 to 2).map(i => conv(hex(bin.substr(off + lit(i), lit(1))), 16, 10)
-      .cast("long") * (1L << (8 * i))).reduce(_ + _)
-
-  private def leHex24(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    def b(x: org.apache.spark.sql.Column) = lpad(lower(hex(x.bitwiseAND(lit(255)))), 2, "0")
-    concat(b(c), b(shiftright(c, 8)), b(shiftright(c, 16)))
   }
 
   /** H9: WebP dims — RIFF container ("RIFF" size "WEBP"), then ONE of
@@ -866,9 +816,9 @@ object Multimodal {
     * rather than reading garbage. */
   def withWebpDims(df: DataFrame, binCol: String): DataFrame = {
     val bin = col(binCol)
-    val valid = (lower(hex(substring(bin, 1, 4))) === "52494646" && // "RIFF"
-      lower(hex(substring(bin, 9, 4))) === "57454250").cast("int")  // "WEBP"
-    val cc = lower(hex(substring(bin, 13, 4)))
+    val valid = (Bytes.magic(bin, lit(1), "52494646") && // "RIFF"
+      Bytes.magic(bin, lit(9), "57454250")).cast("int")  // "WEBP"
+    val cc = Bytes.hexAt(bin, lit(13), 4)
     val isLossy = cc === "56503820"    // "VP8 "
     val isLossless = cc === "5650384c" // "VP8L"
     val isX = cc === "56503858"        // "VP8X"
@@ -876,16 +826,16 @@ object Multimodal {
       .when(isX, "VP8X")
     // lossy: sync code guards the read; dims mask to 14 bits (the top
     // 2 bits are the rescale hint, not size)
-    val sync = lower(hex(substring(bin, 24, 3))) === "9d012a"
-    val lossyW = when(sync, leU16(bin, lit(27)).bitwiseAND(lit(16383)).cast("long"))
-    val lossyH = when(sync, leU16(bin, lit(29)).bitwiseAND(lit(16383)).cast("long"))
+    val sync = Bytes.magic(bin, lit(24), "9d012a")
+    val lossyW = when(sync, Bytes.le(bin, lit(27), 2).bitwiseAND(lit(16383)).cast("long"))
+    val lossyH = when(sync, Bytes.le(bin, lit(29), 2).bitwiseAND(lit(16383)).cast("long"))
     // lossless: 0x2f signature, then (w-1) | (h-1)<<14 LE-packed
-    val sig = lower(hex(substring(bin, 21, 1))) === "2f"
-    val bits = leU32(bin, lit(22))
+    val sig = Bytes.magic(bin, lit(21), "2f")
+    val bits = Bytes.le(bin, lit(22), 4)
     val llW = when(sig, bits.bitwiseAND(lit(16383L)) + 1L)
     val llH = when(sig, shiftright(bits, 14).bitwiseAND(lit(16383L)) + 1L)
-    val xW = leU24(bin, lit(25)) + 1L
-    val xH = leU24(bin, lit(28)) + 1L
+    val xW = Bytes.le(bin, lit(25), 3) + 1L
+    val xH = Bytes.le(bin, lit(28), 3) + 1L
     def ifValid(c: org.apache.spark.sql.Column) = when(valid === 1, c)
     df.withColumn("valid_webp", valid)
       .withColumn("variant", ifValid(variant))
@@ -907,18 +857,18 @@ object Multimodal {
     val h = (col("doc_id") % 512 + 16).cast("long")
     val variant = col("doc_id") % 3
     val vp8Payload = concat(lit("000000"), lit("9d012a"),
-      leHex16(w), leHex16(h)) // frame tag + sync + 14-bit dims
+      Bytes.leHex(w, 2), Bytes.leHex(h, 2)) // frame tag + sync + 14-bit dims
     val vp8lPayload = concat(lit("2f"),
-      leHex32((w - 1) + (h - 1) * 16384L)) // bit-packed dims-1
+      Bytes.leHex((w - 1) + (h - 1) * 16384L, 4)) // bit-packed dims-1
     val vp8xPayload = concat(lit("00"), lit("000000"),
-      leHex24(w - 1), leHex24(h - 1)) // flags + reserved + canvas-1
+      Bytes.leHex(w - 1, 3), Bytes.leHex(h - 1, 3)) // flags + reserved + canvas-1
     val chunk = when(variant === 0,
-        concat(lit("56503820"), leHex32(lit(10)), vp8Payload))
+        concat(lit("56503820"), Bytes.leHex(lit(10), 4), vp8Payload))
       .when(variant === 1, // declared size 5 is odd → one pad byte
-        concat(lit("5650384c"), leHex32(lit(5)), vp8lPayload, lit("00")))
-      .otherwise(concat(lit("56503858"), leHex32(lit(10)), vp8xPayload))
+        concat(lit("5650384c"), Bytes.leHex(lit(5), 4), vp8lPayload, lit("00")))
+      .otherwise(concat(lit("56503858"), Bytes.leHex(lit(10), 4), vp8xPayload))
     val chunkBytes = when(variant === 1, 8 + 5 + 1).otherwise(8 + 10)
-    val hx = concat(lit("52494646"), leHex32(lit(4) + chunkBytes),
+    val hx = concat(lit("52494646"), Bytes.leHex(lit(4) + chunkBytes, 4),
       lit("57454250"), chunk)
     withWebpDims(d.select(col("doc_id"), unhex(hx).as("_bin")), "_bin")
       .select("doc_id", "valid_webp", "variant", "width", "height")
@@ -932,15 +882,15 @@ object Multimodal {
     * BMP-family shape with a bit-field unpack on top. */
   def withGifHeader(df: DataFrame, binCol: String): DataFrame = {
     val bin = col(binCol)
-    val v87 = lower(hex(substring(bin, 1, 6))) === "474946383761" // GIF87a
-    val v89 = lower(hex(substring(bin, 1, 6))) === "474946383961" // GIF89a
+    val v87 = Bytes.magic(bin, lit(1), "474946383761") // GIF87a
+    val v89 = Bytes.magic(bin, lit(1), "474946383961") // GIF89a
     val valid = (v87 || v89).cast("int")
     def ifGif(c: org.apache.spark.sql.Column) = when(valid === 1, c)
-    val packed = conv(hex(substring(bin, 11, 1)), 16, 10).cast("int")
+    val packed = Bytes.u8(bin, lit(11))
     df.withColumn("valid_gif", valid)
       .withColumn("version", ifGif(when(v87, "87a").otherwise("89a")))
-      .withColumn("width", ifGif(leU16(bin, lit(7))))
-      .withColumn("height", ifGif(leU16(bin, lit(9))))
+      .withColumn("width", ifGif(Bytes.le(bin, lit(7), 2)))
+      .withColumn("height", ifGif(Bytes.le(bin, lit(9), 2)))
       .withColumn("has_gct", ifGif(shiftright(packed, 7).bitwiseAND(lit(1))))
       .withColumn("gct_bits", ifGif(packed.bitwiseAND(lit(7)) + 1))
   }
@@ -957,8 +907,8 @@ object Multimodal {
     val packed = when(v89, lit(0x93)).otherwise(lit(0x70)) // GCT,16-entry | none
     val hx = concat(
       lit("47494638"), when(v89, lit("39")).otherwise(lit("37")), lit("61"),
-      leHex16(w), leHex16(h),
-      lpad(lower(hex(packed)), 2, "0"), lit("00"), lit("00")) // bg + aspect
+      Bytes.leHex(w, 2), Bytes.leHex(h, 2),
+      Bytes.beHex(packed, 1), lit("00"), lit("00")) // bg + aspect
     withGifHeader(d.select(col("doc_id"), unhex(hx).as("_bin")), "_bin")
       .select("doc_id", "valid_gif", "version", "width", "height",
         "has_gct", "gct_bits")
@@ -988,30 +938,25 @@ object Multimodal {
     // attribute (CollapseProject does not inline multi-referenced
     // non-cheap aliases): 0.2 s after, same rows. The endianness
     // dispatch and left-justified-SHORT semantics are unchanged.
-    def u16At(le: org.apache.spark.sql.Column, off: org.apache.spark.sql.Column) =
-      when(le, leU16(bin, off))
-        .otherwise(conv(hex(bin.substr(off, lit(2))), 16, 10).cast("int"))
-    def u32At(le: org.apache.spark.sql.Column, off: org.apache.spark.sql.Column) =
-      when(le, leU32(bin, off)).otherwise(beU32c(bin, off))
     var out = df
-      .withColumn("_le", lower(hex(substring(bin, 1, 4))) === "49492a00")
-      .withColumn("_be", lower(hex(substring(bin, 1, 4))) === "4d4d002a")
-    out = out.withColumn("_ifd",
-      (u32At(col("_le"), lit(5)) + 1).cast("int")) // 0-based → 1-based
-    out = out.withColumn("_n", u16At(col("_le"), col("_ifd")))
+      .withColumn("_le", Bytes.magic(bin, lit(1), "49492a00"))
+      .withColumn("_be", Bytes.magic(bin, lit(1), "4d4d002a"))
+    out = out.withColumn("_ifd", // 0-based → 1-based
+      Bytes.pos(bin, Bytes.uint(bin, lit(5), 4, col("_le")) + 1))
+    out = out.withColumn("_n", Bytes.uint(bin, col("_ifd"), 2, col("_le")))
     for (i <- 0 until maxEntries) {
       val eOff = col("_ifd") + lit(2 + i * 12)
       out = out
-        .withColumn(s"_tag$i", u16At(col("_le"), eOff))
-        .withColumn(s"_tpe$i", u16At(col("_le"), eOff + lit(2)))
+        .withColumn(s"_tag$i", Bytes.uint(bin, eOff, 2, col("_le")))
+        .withColumn(s"_tpe$i", Bytes.uint(bin, eOff + lit(2), 2, col("_le")))
     }
     for (i <- 0 until maxEntries) {
       val eOff = col("_ifd") + lit(2 + i * 12)
       // inline value: SHORT (3) reads the first 2 bytes of the value
       // field, LONG (4) all 4 — in the file's byte order either way
       out = out.withColumn(s"_val$i",
-        when(col(s"_tpe$i") === 3, u16At(col("_le"), eOff + lit(8)).cast("long"))
-          .when(col(s"_tpe$i") === 4, u32At(col("_le"), eOff + lit(8))))
+        when(col(s"_tpe$i") === 3, Bytes.uint(bin, eOff + lit(8), 2, col("_le")).cast("long"))
+          .when(col(s"_tpe$i") === 4, Bytes.uint(bin, eOff + lit(8), 4, col("_le"))))
     }
     // first matching entry per tag == the freeze-chain semantics
     def firstTag(wanted: Int) = coalesce((0 until maxEntries).map(i =>
@@ -1031,25 +976,24 @@ object Multimodal {
     * otherwise; parse dims back from the BYTES; formula oracle. */
   def mmTiffDims(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir)
-    def beHex16(c: org.apache.spark.sql.Column) = lpad(lower(hex(c)), 4, "0")
     val w = (col("n_chars") % 1024 + 16).cast("long")
     val h = (col("doc_id") % 512 + 16).cast("long")
     val isLe = col("doc_id") % 2 === 0
     val wShort = col("doc_id") % 3 === 0
-    def x16(c: org.apache.spark.sql.Column) = when(isLe, leHex16(c)).otherwise(beHex16(c))
-    def x32(c: org.apache.spark.sql.Column) = when(isLe, leHex32(c)).otherwise(beHex32(c))
     def entry(tag: Int, tpe: org.apache.spark.sql.Column, value: org.apache.spark.sql.Column) =
-      concat(x16(lit(tag)), x16(tpe), x32(lit(1)), value)
-    val wField = when(wShort, concat(x16(w), lit("0000"))).otherwise(x32(w))
+      concat(Bytes.hexField(lit(tag), 2, isLe), Bytes.hexField(tpe, 2, isLe),
+        Bytes.hexField(lit(1), 4, isLe), value)
+    val wField = when(wShort, concat(Bytes.hexField(w, 2, isLe), lit("0000")))
+      .otherwise(Bytes.hexField(w, 4, isLe))
     val wType = when(wShort, lit(3)).otherwise(lit(4))
     val hx = concat(
       when(isLe, lit("49492a00")).otherwise(lit("4d4d002a")),
-      x32(lit(8)), // first IFD at file offset 8
-      x16(lit(3)), // 3 entries
-      entry(254, lit(4), x32(lit(0))),
+      Bytes.hexField(lit(8), 4, isLe), // first IFD at file offset 8
+      Bytes.hexField(lit(3), 2, isLe), // 3 entries
+      entry(254, lit(4), Bytes.hexField(lit(0), 4, isLe)),
       entry(256, wType, wField),
-      entry(257, lit(4), x32(h)),
-      x32(lit(0))) // no next IFD
+      entry(257, lit(4), Bytes.hexField(h, 4, isLe)),
+      Bytes.hexField(lit(0), 4, isLe)) // no next IFD
     withTiffDims(d.select(col("doc_id"), unhex(hx).as("_bin")), "_bin")
       .select("doc_id", "valid_tiff", "byte_order", "width", "height")
   }
@@ -1069,7 +1013,7 @@ object Multimodal {
   def withPngChunks(df: DataFrame, binCol: String,
       maxChunks: Int = PngMaxChunks): DataFrame = {
     val bin = col(binCol)
-    val valid = (lower(hex(substring(bin, 1, 8))) === PngSigHex).cast("int")
+    val valid = Bytes.magic(bin, lit(1), PngSigHex).cast("int")
     // first chunk after the 8-byte signature is IHDR at 9; next = 9 +
     // (len 13) + 12 = 34
     var out = df.withColumn("_c0", when(valid === 1, lit(34)))
@@ -1079,20 +1023,20 @@ object Multimodal {
       .withColumn("_tl", lit(null).cast("long"))
     for (i <- 0 until maxChunks) {
       val off = col(s"_c$i")
-      val len = beU32c(bin, off)
-      val typ = lower(hex(bin.substr(off + 4, lit(4))))
+      val len = Bytes.be(bin, off, 4)
+      val typ = Bytes.hexAt(bin, off + 4, 4)
       out = out
         .withColumn("_px", coalesce(col("_px"),
-          when(typ === "70485973", beU32c(bin, off + 8)))) // pHYs
+          when(typ === "70485973", Bytes.be(bin, off + 8, 4)))) // pHYs
         .withColumn("_py", coalesce(col("_py"),
-          when(typ === "70485973", beU32c(bin, off + 12))))
+          when(typ === "70485973", Bytes.be(bin, off + 12, 4))))
         .withColumn("_pu", coalesce(col("_pu"),
           when(typ === "70485973",
-            conv(hex(bin.substr(off + 16, lit(1))), 16, 10).cast("int"))))
+            Bytes.u8(bin, off + 16))))
         .withColumn("_tl", coalesce(col("_tl"),
           when(typ === "74455874", len))) // tEXt
         .withColumn(s"_c${i + 1}",
-          when(typ =!= "49454e44", (off + len + 12).cast("int"))) // stop at IEND
+          when(typ =!= "49454e44", Bytes.pos(bin, off + len + 12))) // stop at IEND
     }
     out.withColumn("valid_png", valid)
       .withColumn("phys_x", when(valid === 1, col("_px")))
@@ -1112,14 +1056,14 @@ object Multimodal {
     val py = (col("doc_id") % 5000 + 72).cast("long")
     val textLen = (col("doc_id") % 40 + 6).cast("long")
     val phys = concat(lit("00000009"), lit("70485973"),
-      lpad(lower(hex(px)), 8, "0"), lpad(lower(hex(py)), 8, "0"),
+      Bytes.beHex(px, 4), Bytes.beHex(py, 4),
       lit("01"), lit("00000000")) // unit 1 (metre) + dummy crc
-    val text = concat(lpad(lower(hex(textLen)), 8, "0"), lit("74455874"),
+    val text = concat(Bytes.beHex(textLen, 4), lit("74455874"),
       repeat(lit("61"), textLen.cast("int")), lit("00000000"))
     val physFirst = col("doc_id") % 2 === 0
     val hx = concat(lit(PngSigHex),
-      lit("0000000d" + "49484452"), lpad(lower(hex(lit(640))), 8, "0"),
-      lpad(lower(hex(lit(480))), 8, "0"), lit("0806000000"), lit("00000000"),
+      lit("0000000d" + "49484452"), Bytes.beHex(lit(640), 4),
+      Bytes.beHex(lit(480), 4), lit("0806000000"), lit("00000000"),
       when(physFirst, concat(phys, text)).otherwise(concat(text, phys)),
       lit("00000000" + "49444154" + "00000000")) // empty IDAT
     withPngChunks(d.select(col("doc_id"), unhex(hx).as("_bin")), "_bin")
@@ -1150,15 +1094,15 @@ object Multimodal {
     * absent or when a non-marker byte pair froze the walk). */
   private def locateApp1(df: DataFrame,
       bin: org.apache.spark.sql.Column, maxSegments: Int): DataFrame = {
-    val soi = lower(hex(substring(bin, 1, 2))) === "ffd8"
+    val soi = Bytes.magic(bin, lit(1), "ffd8")
     var out = df
       .withColumn("_app1", lit(null).cast("int"))
       .withColumn("_cur", when(soi, lit(3)))
     for (_ <- 0 until maxSegments) {
       val off = col("_cur")
-      val marker = lower(hex(bin.substr(off, lit(2))))
+      val marker = Bytes.hexAt(bin, off, 2)
       val isExif = marker === "ffe1" &&
-        lower(hex(bin.substr(off + 4, lit(6)))) === "457869660000"
+        Bytes.magic(bin, off + 4, "457869660000")
       out = out
         .withColumn("_app1",
           when(col("_app1").isNotNull, col("_app1")).when(isExif, off))
@@ -1166,7 +1110,7 @@ object Multimodal {
         .withColumn("_cur",
           when(col("_app1").isNotNull, col("_cur"))
             .when(marker.startsWith("ff"),
-              off + lit(2) + beU16(bin, off + lit(2))))
+              off + lit(2) + Bytes.be(bin, off + lit(2), 2)))
     }
     out.withColumn("_soi", soi).drop("_cur")
   }
@@ -1178,23 +1122,23 @@ object Multimodal {
     val out = locateApp1(df, bin, maxSegments)
     val soi = col("_soi")
     val base = col("_app1") + 10 // marker(2) + len(2) + "Exif\0\0"(6)
-    val le = lower(hex(bin.substr(base, lit(4)))) === "49492a00"
-    val be = lower(hex(bin.substr(base, lit(4)))) === "4d4d002a"
-    def u16(off: org.apache.spark.sql.Column) = when(le, leU16(bin, off))
-      .otherwise(conv(hex(bin.substr(off, lit(2))), 16, 10).cast("int"))
-    def u32(off: org.apache.spark.sql.Column) = when(le, leU32(bin, off))
-      .otherwise(beU32c(bin, off))
-    val ifdPos = base + u32(base + 4).cast("int") // rel offset → abs pos
-    val nEntries = u16(ifdPos)
-    var o = out.withColumn("_orient", lit(null).cast("int"))
+    val le = Bytes.magic(bin, base, "49492a00")
+    val be = Bytes.magic(bin, base, "4d4d002a")
+    // the IFD position feeds every entry read: staged as an aliased
+    // column, so the per-entry reads do not each re-derive it
+    var o = out
+      .withColumn("_ifd", Bytes.pos(bin, base + Bytes.uint(bin, base + 4, 4, le))) // rel → abs
+      .withColumn("_orient", lit(null).cast("int"))
+    val ifdPos = col("_ifd")
+    val nEntries = Bytes.uint(bin, ifdPos, 2, le)
     for (i <- 0 until maxEntries) {
       val eOff = ifdPos + lit(2 + i * 12)
-      val tag = u16(eOff)
-      val tpe = u16(eOff + lit(2))
+      val tag = Bytes.uint(bin, eOff, 2, le)
+      val tpe = Bytes.uint(bin, eOff + lit(2), 2, le)
       o = o.withColumn("_orient",
         when(col("_orient").isNotNull, col("_orient"))
           .when(lit(i) < nEntries && tag === 274 && tpe === 3,
-            u16(eOff + lit(8))))
+            Bytes.uint(bin, eOff + lit(8), 2, le)))
     }
     val valid = (soi && col("_app1").isNotNull && (le || be)).cast("int")
     o.withColumn("valid_exif", valid)
@@ -1202,7 +1146,7 @@ object Multimodal {
       .withColumn("byte_order",
         when(valid === 1, when(le, "II").otherwise("MM")))
       .withColumn("orientation", when(valid === 1, col("_orient")))
-      .drop("_app1", "_soi", "_orient")
+      .drop("_app1", "_soi", "_ifd", "_orient")
   }
 
   /** H13 driver query: synthesize SOI + optional variable-length APP0
@@ -1216,20 +1160,20 @@ object Multimodal {
     val d = Tables.documents(spark, dir)
     val isLe = col("doc_id") % 2 === 0
     val orient = (col("doc_id") % 8 + 1).cast("int")
-    def beHex16(c: org.apache.spark.sql.Column) = lpad(lower(hex(c)), 4, "0")
-    def x16(c: org.apache.spark.sql.Column) = when(isLe, leHex16(c)).otherwise(beHex16(c))
-    def x32(c: org.apache.spark.sql.Column) = when(isLe, leHex32(c)).otherwise(beHex32(c))
     val app0Len = (col("doc_id") % 16 + 4).cast("int") // payload bytes
     val hasApp0 = col("doc_id") % 3 =!= 0
     val app0 = when(hasApp0,
-      concat(lit("ffe0"), beHex16(app0Len + 2), repeat(lit("4a"), app0Len)))
+      concat(lit("ffe0"), Bytes.beHex(app0Len + 2, 2), repeat(lit("4a"), app0Len)))
       .otherwise(lit(""))
+    def entry(tag: Int, tpe: Int, cnt: Int, value: org.apache.spark.sql.Column) =
+      concat(Bytes.hexField(lit(tag), 2, isLe), Bytes.hexField(lit(tpe), 2, isLe),
+        Bytes.hexField(lit(cnt), 4, isLe), value)
     val tiff = concat(
       when(isLe, lit("49492a00")).otherwise(lit("4d4d002a")),
-      x32(lit(8)), x16(lit(2)),
-      x16(lit(270)), x16(lit(2)), x32(lit(4)), x32(lit(38)), // desc ptr
-      x16(lit(274)), x16(lit(3)), x32(lit(1)), x16(orient), lit("0000"),
-      x32(lit(0)))
+      Bytes.hexField(lit(8), 4, isLe), Bytes.hexField(lit(2), 2, isLe),
+      entry(270, 2, 4, Bytes.hexField(lit(38), 4, isLe)), // desc ptr
+      entry(274, 3, 1, concat(Bytes.hexField(orient, 2, isLe), lit("0000"))),
+      Bytes.hexField(lit(0), 4, isLe))
     val hx = concat(lit("ffd8"), app0,
       lit("ffe1"), lit("002e"), lit("457869660000"), tiff)
     withExifOrientation(d.select(col("doc_id"), unhex(hx).as("_bin")), "_bin")
@@ -1269,27 +1213,23 @@ object Multimodal {
       gpsEntries: Int = GpsMaxEntries): DataFrame = {
     val bin = col(binCol)
     var out = locateApp1(df, bin, maxSegments)
-    def u16At(off: org.apache.spark.sql.Column) =
-      when(col("_gle"), leU16(bin, off))
-        .otherwise(conv(hex(bin.substr(off, lit(2))), 16, 10).cast("int"))
-    def u32At(off: org.apache.spark.sql.Column) =
-      when(col("_gle"), leU32(bin, off)).otherwise(beU32c(bin, off))
     out = out
       .withColumn("_gbase", col("_app1") + 10) // marker(2)+len(2)+"Exif\0\0"(6)
       .withColumn("_gle",
-        lower(hex(bin.substr(col("_app1") + 10, lit(4)))) === "49492a00")
+        Bytes.magic(bin, col("_app1") + 10, "49492a00"))
       .withColumn("_gbe",
-        lower(hex(bin.substr(col("_app1") + 10, lit(4)))) === "4d4d002a")
+        Bytes.magic(bin, col("_app1") + 10, "4d4d002a"))
     // IFD0 scan: stage entry count + per-entry tag/type/value once;
     // every selector below references them by attribute
     out = out
-      .withColumn("_ifd0", (col("_gbase") + u32At(col("_gbase") + 4)).cast("int"))
-      .withColumn("_n0", u16At(col("_ifd0")))
+      .withColumn("_ifd0",
+        Bytes.pos(bin, col("_gbase") + Bytes.uint(bin, col("_gbase") + 4, 4, col("_gle"))))
+      .withColumn("_n0", Bytes.uint(bin, col("_ifd0"), 2, col("_gle")))
     for (i <- 0 until maxEntries) {
       val eOff = col("_ifd0") + lit(2 + i * 12)
-      out = out.withColumn(s"_0t$i", u16At(eOff))
-        .withColumn(s"_0y$i", u16At(eOff + lit(2)))
-        .withColumn(s"_0v$i", u32At(eOff + lit(8)))
+      out = out.withColumn(s"_0t$i", Bytes.uint(bin, eOff, 2, col("_gle")))
+        .withColumn(s"_0y$i", Bytes.uint(bin, eOff + lit(2), 2, col("_gle")))
+        .withColumn(s"_0v$i", Bytes.uint(bin, eOff + lit(8), 4, col("_gle")))
     }
     def firstIfd0(wanted: Int) = coalesce((0 until maxEntries).map(i =>
       when(lit(i) < col("_n0") && col(s"_0t$i") === wanted &&
@@ -1298,13 +1238,13 @@ object Multimodal {
       .withColumn("_gpsp", firstIfd0(34853))
     // Exif sub-IFD: DateTimeOriginal's pointer, then the dereference
     out = out
-      .withColumn("_eifd", (col("_gbase") + col("_exifp")).cast("int"))
-      .withColumn("_ne", u16At(col("_eifd")))
+      .withColumn("_eifd", Bytes.pos(bin, col("_gbase") + col("_exifp")))
+      .withColumn("_ne", Bytes.uint(bin, col("_eifd"), 2, col("_gle")))
     for (i <- 0 until gpsEntries) {
       val eOff = col("_eifd") + lit(2 + i * 12)
-      out = out.withColumn(s"_et$i", u16At(eOff))
-        .withColumn(s"_ey$i", u16At(eOff + lit(2)))
-        .withColumn(s"_ev$i", u32At(eOff + lit(8)))
+      out = out.withColumn(s"_et$i", Bytes.uint(bin, eOff, 2, col("_gle")))
+        .withColumn(s"_ey$i", Bytes.uint(bin, eOff + lit(2), 2, col("_gle")))
+        .withColumn(s"_ev$i", Bytes.uint(bin, eOff + lit(8), 4, col("_gle")))
     }
     out = out.withColumn("_dtp", coalesce((0 until gpsEntries).map(i =>
       when(lit(i) < col("_ne") && col(s"_et$i") === 36867 &&
@@ -1312,13 +1252,13 @@ object Multimodal {
     // GPS sub-IFD: hemisphere refs (inline ASCII, never byte-swapped)
     // + coordinate pointers, from the same staged tag/type columns
     out = out
-      .withColumn("_gifd", (col("_gbase") + col("_gpsp")).cast("int"))
-      .withColumn("_ng", u16At(col("_gifd")))
+      .withColumn("_gifd", Bytes.pos(bin, col("_gbase") + col("_gpsp")))
+      .withColumn("_ng", Bytes.uint(bin, col("_gifd"), 2, col("_gle")))
     for (i <- 0 until gpsEntries) {
       val eOff = col("_gifd") + lit(2 + i * 12)
-      out = out.withColumn(s"_gt$i", u16At(eOff))
-        .withColumn(s"_gy$i", u16At(eOff + lit(2)))
-        .withColumn(s"_gv$i", u32At(eOff + lit(8)))
+      out = out.withColumn(s"_gt$i", Bytes.uint(bin, eOff, 2, col("_gle")))
+        .withColumn(s"_gy$i", Bytes.uint(bin, eOff + lit(2), 2, col("_gle")))
+        .withColumn(s"_gv$i", Bytes.uint(bin, eOff + lit(8), 4, col("_gle")))
         .withColumn(s"_gr$i", bin.substr(eOff + lit(8), lit(1)).cast("string"))
     }
     def gpsRef(wanted: Int) = coalesce((0 until gpsEntries).map(i =>
@@ -1332,11 +1272,10 @@ object Multimodal {
     // dereference the three num/den rational pairs per coordinate,
     // staged, then fold to exact integer milli-arcseconds
     for ((pfx, ptr) <- Seq("_la" -> "_latp", "_lo" -> "_lonp")) {
-      out = out.withColumn(s"${pfx}q",
-        (col("_gbase") + col(ptr)).cast("int"))
+      out = out.withColumn(s"${pfx}q", Bytes.pos(bin, col("_gbase") + col(ptr)))
       for ((f, o) <- Seq("dn" -> 0, "dd" -> 4, "mn" -> 8, "md" -> 12,
           "sn" -> 16, "sd" -> 20))
-        out = out.withColumn(s"$pfx$f", u32At(col(s"${pfx}q") + lit(o)))
+        out = out.withColumn(s"$pfx$f", Bytes.uint(bin, col(s"${pfx}q") + lit(o), 4, col("_gle")))
     }
     // Codegen-span break (r11): the staged chain up to here plus the
     // fold below compile into ONE fused whole-stage method, and that
@@ -1377,7 +1316,7 @@ object Multimodal {
     out
       .withColumn("valid_exif", valid)
       .withColumn("datetime_original",
-        ifOk(bin.substr((col("_gbase") + col("_dtp")).cast("int"), lit(19))
+        ifOk(bin.substr(Bytes.pos(bin, col("_gbase") + col("_dtp")), lit(19))
           .cast("string")))
       .withColumn("lat_mas", ifOk(mas("_la") *
         when(col("_latr") === "N", 1L).otherwise(-1L)))
@@ -1404,11 +1343,9 @@ object Multimodal {
   def mmExifGps(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir)
     val isLe = col("doc_id") % 2 === 0
-    def beHex16(c: org.apache.spark.sql.Column) = lpad(lower(hex(c)), 4, "0")
-    def x16(c: org.apache.spark.sql.Column) = when(isLe, leHex16(c)).otherwise(beHex16(c))
-    def x32(c: org.apache.spark.sql.Column) = when(isLe, leHex32(c)).otherwise(beHex32(c))
     def entry(tag: Int, tpe: Int, cnt: Int, value: org.apache.spark.sql.Column) =
-      concat(x16(lit(tag)), x16(lit(tpe)), x32(lit(cnt)), value)
+      concat(Bytes.hexField(lit(tag), 2, isLe), Bytes.hexField(lit(tpe), 2, isLe),
+        Bytes.hexField(lit(cnt), 4, isLe), value)
     // layout (offsets relative to TIFF base): header 0-7, IFD0 at 8
     // (3 entries, ends 50), Exif IFD at 50 (1 entry, ends 68), GPS
     // IFD at 68 (4 entries, ends 122), data: datetime 122, lat
@@ -1426,24 +1363,24 @@ object Multimodal {
     val east = col("doc_id") % 3 === 0
     def rats(deg: org.apache.spark.sql.Column, min: org.apache.spark.sql.Column,
         secMs: org.apache.spark.sql.Column) =
-      concat(x32(deg), x32(lit(1)), x32(min), x32(lit(1)),
-        x32(secMs), x32(lit(1000)))
+      concat(Seq(deg, lit(1), min, lit(1), secMs, lit(1000)).map(Bytes.hexField(_, 4, isLe)): _*)
     val tiff = concat(
-      when(isLe, lit("49492a00")).otherwise(lit("4d4d002a")), x32(lit(8)),
-      x16(lit(3)),
-      entry(274, 3, 1, concat(x16(lit(1)), lit("0000"))),
-      entry(34665, 4, 1, x32(lit(50))),
-      entry(34853, 4, 1, x32(lit(68))),
-      x32(lit(0)),
-      x16(lit(1)),
-      entry(36867, 2, 20, x32(lit(122))),
-      x32(lit(0)),
-      x16(lit(4)),
+      when(isLe, lit("49492a00")).otherwise(lit("4d4d002a")),
+      Bytes.hexField(lit(8), 4, isLe),
+      Bytes.hexField(lit(3), 2, isLe),
+      entry(274, 3, 1, concat(Bytes.hexField(lit(1), 2, isLe), lit("0000"))),
+      entry(34665, 4, 1, Bytes.hexField(lit(50), 4, isLe)),
+      entry(34853, 4, 1, Bytes.hexField(lit(68), 4, isLe)),
+      Bytes.hexField(lit(0), 4, isLe),
+      Bytes.hexField(lit(1), 2, isLe),
+      entry(36867, 2, 20, Bytes.hexField(lit(122), 4, isLe)),
+      Bytes.hexField(lit(0), 4, isLe),
+      Bytes.hexField(lit(4), 2, isLe),
       entry(1, 2, 2, when(north, lit("4e000000")).otherwise(lit("53000000"))),
-      entry(2, 5, 3, x32(lit(142))),
+      entry(2, 5, 3, Bytes.hexField(lit(142), 4, isLe)),
       entry(3, 2, 2, when(east, lit("45000000")).otherwise(lit("57000000"))),
-      entry(4, 5, 3, x32(lit(166))),
-      x32(lit(0)),
+      entry(4, 5, 3, Bytes.hexField(lit(166), 4, isLe)),
+      Bytes.hexField(lit(0), 4, isLe),
       hex(dt), lit("00"),
       rats(latDeg, latMin, latSecMs), rats(lonDeg, lonMin, lonSecMs))
     // APP1 length covers itself + "Exif\0\0" + the 190-byte TIFF
@@ -1468,19 +1405,19 @@ object Multimodal {
     * class (the H7 lesson) cannot strike. */
   def withFlacInfo(df: DataFrame, binCol: String): DataFrame = {
     val bin = col(binCol)
-    val magic = lower(hex(substring(bin, 1, 4))) === "664c6143" // fLaC
-    val btype = conv(hex(substring(bin, 5, 1)), 16, 10).cast("int")
-    val blockLen = conv(hex(substring(bin, 6, 3)), 16, 10).cast("int")
+    val magic = Bytes.magic(bin, lit(1), "664c6143") // fLaC
+    val btype = Bytes.u8(bin, lit(5))
+    val blockLen = Bytes.be(bin, lit(6), 3)
     val valid = (magic && btype.bitwiseAND(lit(0x7f)) === 0 &&
       blockLen === 34).cast("int")
     def ifOk(c: org.apache.spark.sql.Column) = when(valid === 1, c)
-    val hi = beU32c(bin, lit(19))
-    val lo = beU32c(bin, lit(23))
+    val hi = Bytes.be(bin, lit(19), 4)
+    val lo = Bytes.be(bin, lit(23), 4)
     val rate = shiftright(hi, 12)
     val total = hi.bitwiseAND(lit(15L)) * lit(4294967296L) + lo
     df.withColumn("valid_flac", valid)
-      .withColumn("min_block", ifOk(beU16(bin, lit(9))))
-      .withColumn("max_block", ifOk(beU16(bin, lit(11))))
+      .withColumn("min_block", ifOk(Bytes.be(bin, lit(9), 2)))
+      .withColumn("max_block", ifOk(Bytes.be(bin, lit(11), 2)))
       .withColumn("sample_rate", ifOk(rate))
       .withColumn("channels",
         ifOk(shiftright(hi, 9).bitwiseAND(lit(7L)).cast("int") + 1))
@@ -1498,8 +1435,6 @@ object Multimodal {
     * back from the BYTES; formula-derived oracle. */
   def mmFlacMeta(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir)
-    def beHex16(c: org.apache.spark.sql.Column) = lpad(lower(hex(c)), 4, "0")
-    def beHex24(c: org.apache.spark.sql.Column) = lpad(lower(hex(c)), 6, "0")
     val rate = element_at(array(lit(8000L), lit(22050L), lit(44100L)),
       (col("doc_id") % 3 + 1).cast("int"))
     val ch = (col("doc_id") % 8 + 1).cast("long")
@@ -1511,9 +1446,10 @@ object Multimodal {
     val lo = total.bitwiseAND(lit(4294967295L))
     val minF = (col("doc_id") % 1000 + 14).cast("long")
     val maxF = minF + (col("n_chars") % 512).cast("long")
-    val hx = concat(lit("664c6143"), lit("80"), beHex24(lit(34)),
-      beHex16(lit(4096)), beHex16(lit(4096)), beHex24(minF), beHex24(maxF),
-      beHex32(hi), beHex32(lo), lit("00" * 16))
+    val hx = concat(lit("664c6143"), lit("80"), Bytes.beHex(lit(34), 3),
+      Bytes.beHex(lit(4096), 2), Bytes.beHex(lit(4096), 2),
+      Bytes.beHex(minF, 3), Bytes.beHex(maxF, 3),
+      Bytes.beHex(hi, 4), Bytes.beHex(lo, 4), lit("00" * 16))
     withFlacInfo(d.select(col("doc_id"), unhex(hx).as("_bin")), "_bin")
       .select("doc_id", "valid_flac", "min_block", "max_block",
         "sample_rate", "channels", "bits_per_sample", "total_samples",
@@ -1540,13 +1476,10 @@ object Multimodal {
     * 144·bitrate/rate + padding as exact integer division. */
   def withMp3Header(df: DataFrame, binCol: String): DataFrame = {
     val bin = col(binCol)
-    val hasId3 = lower(hex(substring(bin, 1, 3))) === "494433"
-    def b7(i: Int) = conv(hex(substring(bin, i, 1)), 16, 10).cast("int")
-      .bitwiseAND(lit(0x7f))
-    val tagSize = shiftleft(b7(7), 21) + shiftleft(b7(8), 14) +
-      shiftleft(b7(9), 7) + b7(10)
+    val hasId3 = Bytes.magic(bin, lit(1), "494433")
+    val tagSize = Bytes.syncsafe(bin, lit(7))
     val frameOff = when(hasId3, tagSize + 11).otherwise(lit(1))
-    val hdr = beU32c(bin, frameOff)
+    val hdr = Bytes.be(bin, frameOff, 4)
     val sync = shiftright(hdr, 21).bitwiseAND(lit(0x7ffL)) === 0x7ffL
     val version = shiftright(hdr, 19).bitwiseAND(lit(3L))
     val layer = shiftright(hdr, 17).bitwiseAND(lit(3L))
@@ -1584,15 +1517,10 @@ object Multimodal {
     val padding = ((col("doc_id") + col("n_chars")) % 2).cast("int")
     val hasId3 = col("doc_id") % 3 =!= 0
     val tagLen = (col("doc_id") % 200 + 4).cast("int") // syncsafe payload
-    def hx2(c: org.apache.spark.sql.Column) = lpad(lower(hex(c)), 2, "0")
     val id3 = when(hasId3, concat(lit("494433" + "0400" + "00"),
-      hx2(shiftright(tagLen, 21).bitwiseAND(lit(0x7f))),
-      hx2(shiftright(tagLen, 14).bitwiseAND(lit(0x7f))),
-      hx2(shiftright(tagLen, 7).bitwiseAND(lit(0x7f))),
-      hx2(tagLen.bitwiseAND(lit(0x7f))),
-      repeat(lit("aa"), tagLen))).otherwise(lit(""))
+      Bytes.syncsafeHex(tagLen), repeat(lit("aa"), tagLen))).otherwise(lit(""))
     val byte2 = shiftleft(brIdx, 4) + shiftleft(srIdx, 2) + shiftleft(padding, 1)
-    val hx = concat(id3, lit("fffb"), hx2(byte2), lit("00"))
+    val hx = concat(id3, lit("fffb"), Bytes.beHex(byte2, 1), lit("00"))
     withMp3Header(d.select(col("doc_id"), unhex(hx).as("_bin")), "_bin")
       .select("doc_id", "valid_mp3", "has_id3", "frame_off",
         "bitrate_kbps", "sample_rate", "padding", "frame_len")
@@ -1607,19 +1535,18 @@ object Multimodal {
     * Pure codegen'd projection, no UDF, no shuffle. */
   def withIcoDims(df: DataFrame, binCol: String): DataFrame = {
     val bin = col(binCol)
-    def u8(i: Int) = conv(hex(substring(bin, i, 1)), 16, 10).cast("int")
-    val valid = (lower(hex(substring(bin, 1, 4))) === "00000100" &&
-      leU16(bin, lit(5)) >= 1).cast("int")
+    val valid = (Bytes.magic(bin, lit(1), "00000100") &&
+      Bytes.le(bin, lit(5), 2) >= 1).cast("int")
     def dim(i: Int) = {
-      val b = u8(i)
+      val b = Bytes.u8(bin, lit(i))
       when(b === 0, 256).otherwise(b)
     }
     def ifOk(c: org.apache.spark.sql.Column) = when(valid === 1, c)
     df.withColumn("valid_ico", valid)
-      .withColumn("n_images", ifOk(leU16(bin, lit(5))))
+      .withColumn("n_images", ifOk(Bytes.le(bin, lit(5), 2)))
       .withColumn("width", ifOk(dim(7)))
       .withColumn("height", ifOk(dim(8)))
-      .withColumn("bpp", ifOk(leU16(bin, lit(13))))
+      .withColumn("bpp", ifOk(Bytes.le(bin, lit(13), 2)))
   }
 
   /** H18 driver query: synthesize an ICONDIR + first entry per asset —
@@ -1637,11 +1564,11 @@ object Multimodal {
     val nImg = (col("doc_id") % 3 + 1).cast("int")
     val bpp = element_at(array(lit(1), lit(4), lit(8), lit(24), lit(32)),
       (col("doc_id") % 5 + 1).cast("int"))
-    def hx2(c: org.apache.spark.sql.Column) = lpad(lower(hex(c)), 2, "0")
     val hx = concat(lit("0000"),
       when(isCursor, lit("0200")).otherwise(lit("0100")),
-      leHex16(nImg), hx2(w), hx2(h), lit("0000"), leHex16(lit(1)),
-      leHex16(bpp), lit("00000000"), lit("16000000"))
+      Bytes.leHex(nImg, 2), Bytes.beHex(w, 1), Bytes.beHex(h, 1), lit("0000"),
+      Bytes.leHex(lit(1), 2),
+      Bytes.leHex(bpp, 2), lit("00000000"), lit("16000000"))
     withIcoDims(d.select(col("doc_id"), unhex(hx).as("_bin")), "_bin")
       .select("doc_id", "valid_ico", "n_images", "width", "height", "bpp")
   }
@@ -1671,16 +1598,14 @@ object Multimodal {
   def withOggMeta(df: DataFrame, binCol: String,
       maxSegments: Int = OggMaxSegments): DataFrame = {
     val bin = col(binCol)
-    def u8(off: org.apache.spark.sql.Column) =
-      conv(hex(bin.substr(off, lit(1))), 16, 10).cast("int")
-    val valid = (lower(hex(substring(bin, 1, 4))) === "4f676753" &&
-      u8(lit(5)) === 0).cast("int")
+    val valid = (Bytes.magic(bin, lit(1), "4f676753") &&
+      Bytes.u8(bin, lit(5)) === 0).cast("int")
     def ifOk(c: org.apache.spark.sql.Column) = when(valid === 1, c)
     var out = df.withColumn("valid_ogg", valid)
-      .withColumn("_flags", u8(lit(6)))
-      .withColumn("_nseg", u8(lit(27)))
+      .withColumn("_flags", Bytes.u8(bin, lit(6)))
+      .withColumn("_nseg", Bytes.u8(bin, lit(27)))
     val bodyLen = (0 until maxSegments).map(i =>
-      when(lit(i) < col("_nseg"), u8(lit(28 + i))).otherwise(lit(0)))
+      when(lit(i) < col("_nseg"), Bytes.u8(bin, lit(28 + i))).otherwise(lit(0)))
       .reduce(_ + _)
     out = out
       .withColumn("is_bos", ifOk(shiftright(col("_flags"), 1).bitwiseAND(lit(1))))
@@ -1690,9 +1615,9 @@ object Multimodal {
       // EOS marker), where ANSI checked multiplication throws
       // ARITHMETIC_OVERFLOW on any hi half ≥ 2^31
       .withColumn("granule",
-        ifOk(shiftleft(leU32(bin, lit(11)), 32).bitwiseOR(leU32(bin, lit(7)))))
-      .withColumn("serial", ifOk(leU32(bin, lit(15))))
-      .withColumn("page_seq", ifOk(leU32(bin, lit(19))))
+        ifOk(shiftleft(Bytes.le(bin, lit(11), 4), 32).bitwiseOR(Bytes.le(bin, lit(7), 4))))
+      .withColumn("serial", ifOk(Bytes.le(bin, lit(15), 4)))
+      .withColumn("page_seq", ifOk(Bytes.le(bin, lit(19), 4)))
       .withColumn("n_segments", ifOk(col("_nseg")))
       .withColumn("body_len",
         ifOk(when(col("_nseg") <= maxSegments, bodyLen)))
@@ -1700,11 +1625,11 @@ object Multimodal {
     // whose first lacing value covers the 30-byte packet
     val body0 = lit(28) + col("_nseg")
     val vorbis = col("is_bos") === 1 && col("_nseg") >= 1 &&
-      u8(lit(28)) >= 30 &&
-      lower(hex(bin.substr(body0, lit(7)))) === "01766f72626973"
+      Bytes.u8(bin, lit(28)) >= 30 &&
+      Bytes.magic(bin, body0, "01766f72626973")
     out
-      .withColumn("channels", when(vorbis, u8(body0 + lit(11))))
-      .withColumn("sample_rate", when(vorbis, leU32(bin, body0 + lit(12))))
+      .withColumn("channels", when(vorbis, Bytes.u8(bin, body0 + lit(11))))
+      .withColumn("sample_rate", when(vorbis, Bytes.le(bin, body0 + lit(12), 4)))
       .drop("_flags", "_nseg")
   }
 
@@ -1726,19 +1651,18 @@ object Multimodal {
     val channels = (col("doc_id") % 2 + 1).cast("int")
     val rate = element_at(
       array(OggRates.map(r => lit(r)): _*), (col("doc_id") % 5 + 1).cast("int"))
-    def hx2(c: org.apache.spark.sql.Column) = lpad(lower(hex(c)), 2, "0")
     val flags = when(bos, lit(2)).otherwise(lit(0)) +
       when(eos, lit(4)).otherwise(lit(0))
     val vorbisId = concat(lit("01"), lit("766f72626973"), lit("00000000"),
-      hx2(channels), leHex32(rate), lit("00" * 12), lit("b8"), lit("01"))
-    val segTable = when(bos, concat(lit("1e"), hx2(filler)))
-      .otherwise(hx2(filler))
+      Bytes.beHex(channels, 1), Bytes.leHex(rate, 4), lit("00" * 12), lit("b8"), lit("01"))
+    val segTable = when(bos, concat(lit("1e"), Bytes.beHex(filler, 1)))
+      .otherwise(Bytes.beHex(filler, 1))
     val body = when(bos, concat(vorbisId, repeat(lit("00"), filler)))
       .otherwise(repeat(lit("aa"), filler))
     val hx = concat(
       when(corrupt, lit("4f676758")).otherwise(lit("4f676753")), lit("00"),
-      hx2(flags), leHex32(granule), lit("00000000"),
-      leHex32(serial), leHex32(pageSeq), lit("00000000"),
+      Bytes.beHex(flags, 1), Bytes.leHex(granule, 4), lit("00000000"),
+      Bytes.leHex(serial, 4), Bytes.leHex(pageSeq, 4), lit("00000000"),
       when(bos, lit("02")).otherwise(lit("01")), segTable, body)
     withOggMeta(d.select(col("doc_id"), unhex(hx).as("_bin")), "_bin")
       .select("doc_id", "valid_ogg", "is_bos", "is_eos", "granule",
@@ -1761,17 +1685,17 @@ object Multimodal {
     * guarded projections, zero shuffle. */
   def withZipEntry(df: DataFrame, binCol: String): DataFrame = {
     val bin = col(binCol)
-    val valid = (lower(hex(substring(bin, 1, 4))) === "504b0304").cast("int")
+    val valid = Bytes.magic(bin, lit(1), "504b0304").cast("int")
     def ifOk(c: org.apache.spark.sql.Column) = when(valid === 1, c)
-    val method = leU16(bin, lit(9))
-    val nlen = leU16(bin, lit(27))
+    val method = Bytes.le(bin, lit(9), 2)
+    val nlen = Bytes.le(bin, lit(27), 2)
     df.withColumn("valid_zip", valid)
       .withColumn("method",
         ifOk(when(method === 0, "stored").when(method === 8, "deflated")
           .otherwise("other")))
-      .withColumn("crc32", ifOk(leU32(bin, lit(15))))
-      .withColumn("compressed_size", ifOk(leU32(bin, lit(19))))
-      .withColumn("uncompressed_size", ifOk(leU32(bin, lit(23))))
+      .withColumn("crc32", ifOk(Bytes.le(bin, lit(15), 4)))
+      .withColumn("compressed_size", ifOk(Bytes.le(bin, lit(19), 4)))
+      .withColumn("uncompressed_size", ifOk(Bytes.le(bin, lit(23), 4)))
       .withColumn("name_len", ifOk(nlen))
       .withColumn("filename",
         ifOk(when(nlen <= ZipMaxName, bin.substr(lit(31), nlen).cast("string"))))
@@ -1797,9 +1721,9 @@ object Multimodal {
     val crc = (col("doc_id") * 2654435761L % 4294967296L).cast("long")
     val hx = concat(
       when(corrupt, lit("504b0306")).otherwise(lit("504b0304")),
-      lit("1400"), lit("0000"), leHex16(method), lit("0000"), lit("0000"),
-      leHex32(crc), leHex32(csize), leHex32(usize),
-      leHex16(length(name)), lit("0000"), lower(hex(name)))
+      lit("1400"), lit("0000"), Bytes.leHex(method, 2), lit("0000"), lit("0000"),
+      Bytes.leHex(crc, 4), Bytes.leHex(csize, 4), Bytes.leHex(usize, 4),
+      Bytes.leHex(length(name), 2), lit("0000"), lower(hex(name)))
     withZipEntry(d.select(col("doc_id"), unhex(hx).as("_bin")), "_bin")
       .select("doc_id", "valid_zip", "method", "crc32",
         "compressed_size", "uncompressed_size", "name_len", "filename")
@@ -1823,7 +1747,7 @@ object Multimodal {
   def withTarHeader(df: DataFrame, binCol: String): DataFrame = {
     val bin = col(binCol)
     // "ustar\0" at byte offset 257 (1-based substr position 258)
-    val valid = (lower(hex(substring(bin, 258, 6))) === "757374617200").cast("int")
+    val valid = Bytes.magic(bin, lit(258), "757374617200").cast("int")
     def ifOk(c: org.apache.spark.sql.Column) = when(valid === 1, c)
     def octalAt(off: Int, len: Int) =
       conv(regexp_extract(substring(bin, off, len).cast("string"),
@@ -1886,17 +1810,16 @@ object Multimodal {
     * blocked variants that ARE splittable unlike plain gzip. */
   def withGzipHeader(df: DataFrame, binCol: String): DataFrame = {
     val bin = col(binCol)
-    val valid = (lower(hex(substring(bin, 1, 3))) === "1f8b08").cast("int")
+    val valid = Bytes.magic(bin, lit(1), "1f8b08").cast("int")
     def ifOk(c: org.apache.spark.sql.Column) = when(valid === 1, c)
-    def u8(off: Int) = conv(hex(bin.substr(lit(off), lit(1))), 16, 10).cast("int")
-    val flg = u8(4)
-    val xfl = u8(9)
-    val os = u8(10)
+    val flg = Bytes.u8(bin, lit(4))
+    val xfl = Bytes.u8(bin, lit(9))
+    val os = Bytes.u8(bin, lit(10))
     df.withColumn("valid_gzip", valid)
       .withColumn("has_name", ifOk((flg.bitwiseAND(8) =!= 0).cast("int")))
       .withColumn("has_extra", ifOk((flg.bitwiseAND(4) =!= 0).cast("int")))
       .withColumn("is_text", ifOk((flg.bitwiseAND(1) =!= 0).cast("int")))
-      .withColumn("mtime", ifOk(leU32(bin, lit(5))))
+      .withColumn("mtime", ifOk(Bytes.le(bin, lit(5), 4)))
       .withColumn("xfl_hint",
         ifOk(when(xfl === 2, "best").when(xfl === 4, "fastest").otherwise("none")))
       .withColumn("os_name",
@@ -1925,7 +1848,7 @@ object Multimodal {
       .otherwise(lit(""))
     val hx = concat(
       when(corrupt, lit("1f8c08")).otherwise(lit("1f8b08")),
-      flgHex, leHex32(mtime), xflHex, osHex, nameHex,
+      flgHex, Bytes.leHex(mtime, 4), xflHex, osHex, nameHex,
       lit("4b4c4c")) // a few deflate payload bytes
     withGzipHeader(d.select(col("doc_id"), unhex(hx).as("_bin")), "_bin")
       .select("doc_id", "valid_gzip", "has_name", "has_extra", "is_text",
@@ -1954,20 +1877,15 @@ object Multimodal {
   def withId3Tags(df: DataFrame, binCol: String,
       maxFrames: Int = Id3MaxFrames): DataFrame = {
     val bin = col(binCol)
-    def b7(off: org.apache.spark.sql.Column) =
-      conv(hex(bin.substr(off, lit(1))), 16, 10).cast("int").bitwiseAND(lit(0x7f))
-    def syncsafe(off: org.apache.spark.sql.Column) =
-      shiftleft(b7(off), 21) + shiftleft(b7(off + 1), 14) +
-        shiftleft(b7(off + 2), 7) + b7(off + 3)
     var out = df
-      .withColumn("_i3ok", lower(hex(substring(bin, 1, 3))) === "494433")
-      .withColumn("_i3end", lit(10) + syncsafe(lit(7))) // last tag byte, 1-based
+      .withColumn("_i3ok", Bytes.magic(bin, lit(1), "494433"))
+      .withColumn("_i3end", lit(10) + Bytes.syncsafe(bin, lit(7))) // last tag byte, 1-based
       .withColumn("_fo0", lit(11))
     for (i <- 0 until maxFrames) {
       val fo = col(s"_fo$i")
       out = out
         .withColumn(s"_fid$i", bin.substr(fo, lit(4)).cast("string"))
-        .withColumn(s"_fsz$i", syncsafe(fo + 4))
+        .withColumn(s"_fsz$i", Bytes.syncsafe(bin, fo + 4))
         // liveness = header AND declared payload fit inside the tag
         // (header-only would let a truncated tag's oversized size
         // field pull post-tag audio bytes out as frame text);
@@ -2011,14 +1929,8 @@ object Multimodal {
     val title = concat(lit("Title_"), (col("doc_id") % 50).cast("string"))
     val artist = concat(lit("Artist_"), (col("doc_id") % 20).cast("string"))
     val album = concat(lit("Album_"), (col("doc_id") % 7).cast("string"))
-    def hx2(c: org.apache.spark.sql.Column) = lpad(lower(hex(c)), 2, "0")
-    def ss4(c: org.apache.spark.sql.Column) = concat(
-      hx2(shiftright(c, 21).bitwiseAND(lit(0x7f))),
-      hx2(shiftright(c, 14).bitwiseAND(lit(0x7f))),
-      hx2(shiftright(c, 7).bitwiseAND(lit(0x7f))),
-      hx2(c.bitwiseAND(lit(0x7f))))
     def frame(id: String, v: org.apache.spark.sql.Column) = concat(
-      hex(lit(id)), ss4(length(v) + 1), lit("0000"), lit("00"), hex(v))
+      hex(lit(id)), Bytes.syncsafeHex(length(v) + 1), lit("0000"), lit("00"), hex(v))
     val tit = frame("TIT2", title)
     val tpe = frame("TPE1", artist)
     val alb = when(hasAlb, frame("TALB", album)).otherwise(lit(""))
@@ -2027,7 +1939,7 @@ object Multimodal {
         .otherwise(concat(tpe, tit)), alb)
     val padBytes = (col("doc_id") % 9 + 1).cast("int")
     val tagSize = (length(frames) / 2).cast("int") + padBytes
-    val hx = when(hasTag, concat(lit("494433" + "0400" + "00"), ss4(tagSize),
+    val hx = when(hasTag, concat(lit("494433" + "0400" + "00"), Bytes.syncsafeHex(tagSize),
       frames, repeat(lit("00"), padBytes))).otherwise(lit("ff00"))
     withId3Tags(d.select(col("doc_id"), unhex(hx).as("_bin")), "_bin")
       .select("doc_id", "valid_id3", "n_frames", "title", "artist", "album")
@@ -2043,18 +1955,18 @@ object Multimodal {
     * projections — the PNG/GIF header shape plus the bit split. */
   def withMidiHeader(df: DataFrame, binCol: String): DataFrame = {
     val bin = col(binCol)
-    val magicOk = lower(hex(substring(bin, 1, 4))) === "4d546864" // MThd
-    val lenOk = beU32(bin, 5) === 6
+    val magicOk = Bytes.magic(bin, lit(1), "4d546864") // MThd
+    val lenOk = Bytes.be(bin, lit(5), 4) === 6
     val valid = (magicOk && lenOk).cast("int")
     def ifm(c: org.apache.spark.sql.Column) = when(valid === 1, c)
-    val divRaw = beU16(bin, lit(13))
-    val trkOk = lower(hex(substring(bin, 15, 4))) === "4d54726b" // MTrk
+    val divRaw = Bytes.be(bin, lit(13), 2)
+    val trkOk = Bytes.magic(bin, lit(15), "4d54726b") // MTrk
     df.withColumn("valid_midi", valid)
-      .withColumn("format", ifm(beU16(bin, lit(9))))
-      .withColumn("ntrks", ifm(beU16(bin, lit(11))))
+      .withColumn("format", ifm(Bytes.be(bin, lit(9), 2)))
+      .withColumn("ntrks", ifm(Bytes.be(bin, lit(11), 2)))
       .withColumn("smpte", ifm(shiftright(divRaw, 15).bitwiseAND(lit(1))))
       .withColumn("division", ifm(divRaw.bitwiseAND(lit(0x7fff))))
-      .withColumn("first_track_len", ifm(when(trkOk, beU32(bin, 19))))
+      .withColumn("first_track_len", ifm(when(trkOk, Bytes.be(bin, lit(19), 4))))
   }
 
   /** H23 driver query: synthesize a 22-byte MThd+MTrk prefix per asset
@@ -2069,13 +1981,11 @@ object Multimodal {
     val smpte = col("doc_id") % 4 === 0
     val divRaw = when(smpte, divTicks + 32768).otherwise(divTicks)
     val trkLen = (col("n_chars") % 4096).cast("int")
-    def beHex16(c: org.apache.spark.sql.Column) = lpad(lower(hex(c)), 4, "0")
-    def beHex32(c: org.apache.spark.sql.Column) = lpad(lower(hex(c)), 8, "0")
     val hx = concat(
       when(corrupt, lit("4d546900")).otherwise(lit("4d546864")),
       lit("00000006"),
-      beHex16(fmt), beHex16(ntrks), beHex16(divRaw),
-      lit("4d54726b"), beHex32(trkLen))
+      Bytes.beHex(fmt, 2), Bytes.beHex(ntrks, 2), Bytes.beHex(divRaw, 2),
+      lit("4d54726b"), Bytes.beHex(trkLen, 4))
     withMidiHeader(d.select(col("doc_id"), unhex(hx).as("_bin")), "_bin")
       .select("doc_id", "valid_midi", "format", "ntrks", "smpte",
         "division", "first_track_len")
@@ -2174,11 +2084,9 @@ object Multimodal {
     * pre-allocation. Pure codegen'd projection, no UDF, no shuffle. */
   def withZstdHeader(df: DataFrame, binCol: String): DataFrame = {
     val bin = col(binCol)
-    def u8(off: org.apache.spark.sql.Column) =
-      conv(hex(bin.substr(off, lit(1))), 16, 10).cast("int")
-    val valid = (lower(hex(substring(bin, 1, 4))) === "28b52ffd").cast("int")
+    val valid = Bytes.magic(bin, lit(1), "28b52ffd").cast("int")
     def ifOk(c: org.apache.spark.sql.Column) = when(valid === 1, c)
-    val fhd = u8(lit(5))
+    val fhd = Bytes.u8(bin, lit(5))
     val fcsFlag = shiftright(fhd, 6).bitwiseAND(3)
     val singleSeg = shiftright(fhd, 5).bitwiseAND(1)
     val checksum = shiftright(fhd, 2).bitwiseAND(1)
@@ -2186,7 +2094,7 @@ object Multimodal {
     val dictBytes = when(dictFlag === 3, 4).otherwise(dictFlag)
     // window descriptor (1 byte) present only when NOT single-segment
     val wdOff = lit(6)
-    val wd = u8(wdOff)
+    val wd = Bytes.u8(bin, wdOff)
     val wExp = shiftright(wd, 3)
     val wMant = wd.bitwiseAND(7)
     // 2^(10+exp) is exact in a double up to exp 43 — far past the
@@ -2194,14 +2102,14 @@ object Multimodal {
     val wBase = pow(lit(2.0), (wExp + 10).cast("double")).cast("long")
     val dictOff = wdOff + (lit(1) - singleSeg)
     val fcsOff = dictOff + dictBytes
-    val dictId = when(dictFlag === 1, u8(dictOff).cast("long"))
-      .when(dictFlag === 2, leU16(bin, dictOff).cast("long"))
-      .when(dictFlag === 3, leU32(bin, dictOff))
-    val contentSize = when(fcsFlag === 0 && singleSeg === 1, u8(fcsOff).cast("long"))
-      .when(fcsFlag === 1, leU16(bin, fcsOff).cast("long") + 256L)
-      .when(fcsFlag === 2, leU32(bin, fcsOff))
-      .when(fcsFlag === 3, leU32(bin, fcsOff) +
-        leU32(bin, fcsOff + 4) * lit(4294967296L))
+    val dictId = when(dictFlag === 1, Bytes.u8(bin, dictOff).cast("long"))
+      .when(dictFlag === 2, Bytes.le(bin, dictOff, 2).cast("long"))
+      .when(dictFlag === 3, Bytes.le(bin, dictOff, 4))
+    val contentSize =
+      when(fcsFlag === 0 && singleSeg === 1, Bytes.u8(bin, fcsOff).cast("long"))
+      .when(fcsFlag === 1, Bytes.le(bin, fcsOff, 2).cast("long") + 256L)
+      .when(fcsFlag === 2, Bytes.le(bin, fcsOff, 4))
+      .when(fcsFlag === 3, Bytes.le(bin, fcsOff, 8))
     df.withColumn("valid_zstd", valid)
       .withColumn("single_segment", ifOk(singleSeg))
       .withColumn("has_checksum", ifOk(checksum))
@@ -2222,20 +2130,18 @@ object Multimodal {
     val d = Tables.documents(spark, dir)
     val corrupt = col("doc_id") % 7 === 0
     val leg = col("doc_id") % 3
-    def hx8(c: org.apache.spark.sql.Column) =
-      lpad(lower(hex(c.bitwiseAND(lit(255)))), 2, "0")
     val fhdHex = when(leg === 0, lit("20")) // single-segment, 1-byte FCS
       .when(leg === 1, lit("44"))           // 2-byte FCS + checksum
       .otherwise(lit("02"))                 // 2-byte dict id, no FCS
     val wExp = when(leg === 1, col("n_chars") % 12).otherwise(col("doc_id") % 10)
     val wMant = when(leg === 1, col("doc_id") % 8).otherwise(lit(0))
-    val wdHex = when(leg === 0, lit("")).otherwise(hx8(wExp * 8 + wMant))
+    val wdHex = when(leg === 0, lit("")).otherwise(Bytes.beHex(wExp * 8 + wMant, 1))
     val fcs1 = col("doc_id") % 200 + 10
     val fcs2 = col("n_chars") % 60000
     val dictU16 = col("doc_id") % 65536
-    val tailHex = when(leg === 0, hx8(fcs1))
-      .when(leg === 1, leHex16(fcs2))
-      .otherwise(leHex16(dictU16))
+    val tailHex = when(leg === 0, Bytes.beHex(fcs1, 1))
+      .when(leg === 1, Bytes.leHex(fcs2, 2))
+      .otherwise(Bytes.leHex(dictU16, 2))
     val hx = concat(
       when(corrupt, lit("28b52ffe")).otherwise(lit("28b52ffd")),
       fhdHex, wdHex, tailHex,
@@ -2259,11 +2165,9 @@ object Multimodal {
     * magic+version+reserved-bit checks already reject non-LZ4 bytes. */
   def withLz4Header(df: DataFrame, binCol: String): DataFrame = {
     val bin = col(binCol)
-    def u8(off: org.apache.spark.sql.Column) =
-      conv(hex(bin.substr(off, lit(1))), 16, 10).cast("int")
-    val flg = u8(lit(5))
+    val flg = Bytes.u8(bin, lit(5))
     val version = shiftright(flg, 6).bitwiseAND(3)
-    val valid = (lower(hex(substring(bin, 1, 4))) === "04224d18" &&
+    val valid = (Bytes.magic(bin, lit(1), "04224d18") &&
       version === 1).cast("int")
     def ifOk(c: org.apache.spark.sql.Column) = when(valid === 1, c)
     val bIndep = shiftright(flg, 5).bitwiseAND(1)
@@ -2271,14 +2175,13 @@ object Multimodal {
     val hasCSize = shiftright(flg, 3).bitwiseAND(1)
     val cChecksum = shiftright(flg, 2).bitwiseAND(1)
     val hasDict = flg.bitwiseAND(1)
-    val bmaxCode = shiftright(u8(lit(6)), 4).bitwiseAND(7)
+    val bmaxCode = shiftright(Bytes.u8(bin, lit(6)), 4).bitwiseAND(7)
     val bmaxKb = when(bmaxCode === 4, 64).when(bmaxCode === 5, 256)
       .when(bmaxCode === 6, 1024).when(bmaxCode === 7, 4096)
     val csOff = lit(7)
-    val contentSize = when(hasCSize === 1,
-      leU32(bin, csOff) + leU32(bin, csOff + 4) * lit(4294967296L))
+    val contentSize = when(hasCSize === 1, Bytes.le(bin, csOff, 8))
     val dictOff = csOff + hasCSize * 8
-    val dictId = when(hasDict === 1, leU32(bin, dictOff))
+    val dictId = when(hasDict === 1, Bytes.le(bin, dictOff, 4))
     df.withColumn("valid_lz4", valid)
       .withColumn("block_indep", ifOk(bIndep))
       .withColumn("block_checksum", ifOk(bChecksum))
@@ -2297,20 +2200,17 @@ object Multimodal {
     val d = Tables.documents(spark, dir)
     val corrupt = col("doc_id") % 8 === 0
     val leg = col("doc_id") % 3
-    def hx8(c: org.apache.spark.sql.Column) =
-      lpad(lower(hex(c.bitwiseAND(lit(255)))), 2, "0")
     val flgHex = when(leg === 0, lit("68")) // v1, indep, content size
       .when(leg === 1, lit("54"))           // v1, blk+content checksums
       .otherwise(lit("49"))                 // v1, content size + dict id
-    val bdHex = when(leg === 0, hx8((col("doc_id") % 2 + 4) * 16))
+    val bdHex = when(leg === 0, Bytes.beHex((col("doc_id") % 2 + 4) * 16, 1))
       .when(leg === 1, lit("70")).otherwise(lit("50"))
     val cs0 = col("n_chars") % 100000 + 5
     val cs2 = col("n_chars") % 1000 + 1
     val dictU32 = col("doc_id") % 100000
-    def le64(c: org.apache.spark.sql.Column) = concat(leHex32(c), lit("00000000"))
-    val tailHex = when(leg === 0, le64(cs0))
+    val tailHex = when(leg === 0, Bytes.leHex(cs0, 8))
       .when(leg === 1, lit(""))
-      .otherwise(concat(le64(cs2), leHex32(dictU32)))
+      .otherwise(concat(Bytes.leHex(cs2, 8), Bytes.leHex(dictU32, 4)))
     val hx = concat(
       when(corrupt, lit("04224d19")).otherwise(lit("04224d18")),
       flgHex, bdHex, tailHex,
@@ -2331,18 +2231,16 @@ object Multimodal {
     * (pages × page size). Pure codegen'd projection. */
   def withSqliteHeader(df: DataFrame, binCol: String): DataFrame = {
     val bin = col(binCol)
-    def u8(off: Int) = conv(hex(bin.substr(lit(off), lit(1))), 16, 10).cast("int")
-    val valid = (lower(hex(substring(bin, 1, 16))) ===
-      "53514c69746520666f726d6174203300").cast("int")
+    val valid = Bytes.magic(bin, lit(1), "53514c69746520666f726d6174203300").cast("int")
     def ifOk(c: org.apache.spark.sql.Column) = when(valid === 1, c)
-    val rawPs = beU16(bin, lit(17))
+    val rawPs = Bytes.be(bin, lit(17), 2)
     val pageSize = when(rawPs === 1, 65536).otherwise(rawPs)
-    val nPages = beU32c(bin, lit(29))
-    val encCode = beU32c(bin, lit(57))
+    val nPages = Bytes.be(bin, lit(29), 4)
+    val encCode = Bytes.be(bin, lit(57), 4)
     df.withColumn("valid_sqlite", valid)
       .withColumn("page_size", ifOk(pageSize))
       .withColumn("write_version",
-        ifOk(when(u8(19) === 2, "wal").otherwise("legacy")))
+        ifOk(when(Bytes.u8(bin, lit(19)) === 2, "wal").otherwise("legacy")))
       .withColumn("n_pages", ifOk(nPages))
       .withColumn("encoding", ifOk(when(encCode === 1, "utf8")
         .when(encCode === 2, "utf16le").when(encCode === 3, "utf16be")
@@ -2357,10 +2255,6 @@ object Multimodal {
     val d = Tables.documents(spark, dir)
     val corrupt = col("doc_id") % 9 === 0
     val big = col("doc_id") % 5 === 0
-    def beHex16(c: org.apache.spark.sql.Column) =
-      lpad(lower(hex(c.bitwiseAND(lit(0xffff)))), 4, "0")
-    def beHex32v(c: org.apache.spark.sql.Column) =
-      lpad(lower(hex(c.bitwiseAND(lit(0xffffffffL)))), 8, "0")
     // page sizes are powers of two 512..32768; the big leg writes the
     // literal 1 that means 65536
     val psExp = col("doc_id") % 7 + 9                  // 2^9..2^15
@@ -2373,12 +2267,12 @@ object Multimodal {
     val hx = concat(
       when(corrupt, lit("53514c69746520666f726d6174203200"))
         .otherwise(lit("53514c69746520666f726d6174203300")),
-      beHex16(psField), verHex,
+      Bytes.beHex(psField, 2), verHex,
       lit("00" * 4),                     // reserved + payload fractions
-      beHex32v(lit(7)),                  // change counter (offset 24)
-      beHex32v(nPages),                  // db size in pages (offset 28)
+      Bytes.beHex(lit(7), 4),            // change counter (offset 24)
+      Bytes.beHex(nPages, 4),            // db size in pages (offset 28)
       lit("00" * 24),                    // freelist/schema fields
-      beHex32v(enc))                     // text encoding (offset 56)
+      Bytes.beHex(enc, 4))               // text encoding (offset 56)
     withSqliteHeader(d.select(col("doc_id"), unhex(hx).as("_bin")), "_bin")
       .select("doc_id", "valid_sqlite", "page_size", "write_version",
         "n_pages", "encoding", "db_bytes")
@@ -2393,24 +2287,21 @@ object Multimodal {
     * timestamps. Reads version, snaplen, and the LINKTYPE_* id. */
   def withPcapHeader(df: DataFrame, binCol: String): DataFrame = {
     val bin = col(binCol)
-    val m = lower(hex(substring(bin, 1, 4)))
+    val m = Bytes.hexAt(bin, lit(1), 4)
     // file bytes d4c3b2a1 = a LITTLE-endian writer of magic 0xa1b2c3d4
     val isLe = m === "d4c3b2a1" || m === "4d3cb2a1"
     val isNs = m === "a1b23c4d" || m === "4d3cb2a1"
     val valid = (isLe || m === "a1b2c3d4" || m === "a1b23c4d").cast("int")
     def ifOk(c: org.apache.spark.sql.Column) = when(valid === 1, c)
-    def u16e(off: Int) = when(isLe, leU16(bin, lit(off)))
-      .otherwise(beU16(bin, lit(off)))
-    def u32e(off: Int) = when(isLe, leU32(bin, lit(off)))
-      .otherwise(beU32c(bin, lit(off)))
-    val link = u32e(21)
+    val link = Bytes.uint(bin, lit(21), 4, isLe)
     df.withColumn("valid_pcap", valid)
       .withColumn("byte_order", ifOk(when(isLe, "le").otherwise("be")))
       .withColumn("ts_resolution", ifOk(when(isNs, "ns").otherwise("us")))
       .withColumn("version",
-        ifOk(concat(u16e(5).cast("string"), lit("."), u16e(7).cast("string"))))
-      .withColumn("snaplen", ifOk(u32e(17)))
-      .withColumn("linktype", ifOk(link.cast("int")))
+        ifOk(concat(Bytes.uint(bin, lit(5), 2, isLe).cast("string"), lit("."),
+          Bytes.uint(bin, lit(7), 2, isLe).cast("string"))))
+      .withColumn("snaplen", ifOk(Bytes.uint(bin, lit(17), 4, isLe)))
+      .withColumn("linktype", ifOk(link.try_cast("int")))
       .withColumn("link_name", ifOk(when(link === 1, "ethernet")
         .when(link === 101, "raw_ip").when(link === 105, "ieee802_11")
         .when(link === 113, "linux_sll").otherwise("other")))
@@ -2423,20 +2314,6 @@ object Multimodal {
     val d = Tables.documents(spark, dir)
     val corrupt = col("doc_id") % 10 === 0
     val leg = col("doc_id") % 3
-    def leHex16s(c: org.apache.spark.sql.Column) = {
-      def b(x: org.apache.spark.sql.Column) =
-        lpad(lower(hex(x.bitwiseAND(lit(255)))), 2, "0")
-      concat(b(c), b(shiftright(c, 8)))
-    }
-    def leHex32s(c: org.apache.spark.sql.Column) = {
-      def b(x: org.apache.spark.sql.Column) =
-        lpad(lower(hex(x.bitwiseAND(lit(255)))), 2, "0")
-      concat(b(c), b(shiftright(c, 8)), b(shiftright(c, 16)), b(shiftright(c, 24)))
-    }
-    def beHex16s(c: org.apache.spark.sql.Column) =
-      lpad(lower(hex(c.bitwiseAND(lit(0xffff)))), 4, "0")
-    def beHex32s(c: org.apache.spark.sql.Column) =
-      lpad(lower(hex(c.bitwiseAND(lit(0xffffffffL)))), 8, "0")
     val isLe = leg =!= 1
     val magic = when(corrupt, lit("a1b2c3d5"))
       .when(leg === 0, lit("d4c3b2a1"))   // LE writer, µs
@@ -2445,14 +2322,10 @@ object Multimodal {
     val snap = col("n_chars") % 65536 + 64
     val linkIds = Seq(1, 101, 105, 113, 228)
     val link = element_at(typedLit(linkIds), (col("doc_id") % linkIds.size + 1).cast("int"))
-    def fld16(c: org.apache.spark.sql.Column) =
-      when(isLe, leHex16s(c)).otherwise(beHex16s(c))
-    def fld32(c: org.apache.spark.sql.Column) =
-      when(isLe, leHex32s(c)).otherwise(beHex32s(c))
     val hx = concat(magic,
-      fld16(lit(2)), fld16(lit(4)),       // version 2.4
-      fld32(lit(0)), fld32(lit(0)),       // thiszone, sigfigs
-      fld32(snap), fld32(link))
+      Bytes.hexField(lit(2), 2, isLe), Bytes.hexField(lit(4), 2, isLe), // version 2.4
+      Bytes.hexField(lit(0), 4, isLe), Bytes.hexField(lit(0), 4, isLe), // thiszone, sigfigs
+      Bytes.hexField(snap, 4, isLe), Bytes.hexField(link, 4, isLe))
     withPcapHeader(d.select(col("doc_id"), unhex(hx).as("_bin")), "_bin")
       .select("doc_id", "valid_pcap", "byte_order", "ts_resolution",
         "version", "snaplen", "linktype", "link_name")
@@ -2468,11 +2341,11 @@ object Multimodal {
   def withParquetTrailer(df: DataFrame, binCol: String): DataFrame = {
     val bin = col(binCol)
     val flen = length(bin)
-    val valid = (lower(hex(substring(bin, 1, 4))) === "50415231" &&
-      lower(hex(bin.substr(flen - 3, lit(4)))) === "50415231" &&
+    val valid = (Bytes.magic(bin, lit(1), "50415231") &&
+      Bytes.magic(bin, flen - 3, "50415231") &&
       flen >= 12).cast("int")
     def ifOk(c: org.apache.spark.sql.Column) = when(valid === 1, c)
-    val footerLen = leU32(bin, flen - 7)
+    val footerLen = Bytes.le(bin, flen - 7, 4)
     df.withColumn("valid_parquet", valid)
       .withColumn("file_bytes", ifOk(flen.cast("long")))
       .withColumn("footer_len", ifOk(footerLen))
@@ -2494,7 +2367,7 @@ object Multimodal {
     val hx = concat(
       lit("50415231"),
       repeat(lit("00"), fill),
-      leHex32(declared),
+      Bytes.leHex(declared, 4),
       when(corrupt, lit("50415232")).otherwise(lit("50415231")))
     withParquetTrailer(d.select(col("doc_id"), unhex(hx).as("_bin")), "_bin")
       .select("doc_id", "valid_parquet", "file_bytes", "footer_len",
@@ -2519,21 +2392,22 @@ object Multimodal {
       maxRecords: Int = TfMaxRecords): DataFrame = {
     val bin = col(binCol)
     val flen = length(bin).cast("long")
-    def u64(off: org.apache.spark.sql.Column) =
-      leU32(bin, off.cast("int")) + leU32(bin, off.cast("int") + 4) * lit(4294967296L)
-    var out = df.withColumn("_o1", lit(1L))
+    // record offsets stay int: the next one is taken only after a record
+    // that fits, so it never passes flen + 1
+    var out = df.withColumn("_o1", lit(1))
     for (i <- 1 to maxRecords) {
       val o = col(s"_o$i")
       out = out
-        .withColumn(s"_len$i", u64(o))
+        .withColumn(s"_len$i", Bytes.le(bin, o, 8))
         // the length field itself is readable
         .withColumn(s"_hdr$i", coalesce(o + 7L <= flen, lit(false)))
         // the record is live iff its FULL envelope fits
         .withColumn(s"_ok$i", coalesce(
-          col(s"_hdr$i") && o + 15L + col(s"_len$i") <= flen, lit(false)))
+          col(s"_hdr$i") && col(s"_len$i") <= flen - o - 15L, lit(false)))
         // readable header whose envelope does NOT fit = truncation
         .withColumn(s"_tr$i", col(s"_hdr$i") && !col(s"_ok$i"))
-        .withColumn(s"_o${i + 1}", o + 16L + col(s"_len$i"))
+        .withColumn(s"_o${i + 1}",
+          when(col(s"_ok$i"), (o + 16L + col(s"_len$i")).cast("int")))
     }
     val nRec = (1 to maxRecords).map(i => col(s"_ok$i").cast("int")).reduce(_ + _)
     val payload = (1 to maxRecords)
@@ -2563,10 +2437,9 @@ object Multimodal {
     val l1 = (col("doc_id") % 40 + 1).cast("int")
     val l2 = (col("n_chars") % 60 + 1).cast("int")
     val l3 = (col("doc_id") % 20 + 1).cast("int")
-    def le64(c: org.apache.spark.sql.Column) = concat(leHex32(c), lit("00000000"))
     def rec(len: org.apache.spark.sql.Column,
         cut: org.apache.spark.sql.Column) = concat(
-      le64(len), lit("aabbccdd"),                 // masked len crc (hopped)
+      Bytes.leHex(len, 8), lit("aabbccdd"),       // masked len crc (hopped)
       repeat(lit("00"), greatest(len - cut, lit(0)).cast("int")),
       when(cut > 0, lit("")).otherwise(lit("eeff0011"))) // data crc unless cut
     val full = concat(
@@ -2597,12 +2470,11 @@ object Multimodal {
     val bin = col(binCol)
     val flen = length(bin).cast("long")
     val out = df
-      .withColumn("_hlen",
-        leU32(bin, lit(1)) + leU32(bin, lit(5)) * lit(4294967296L))
+      .withColumn("_hlen", Bytes.le(bin, lit(1), 8))
       .withColumn("_jok", coalesce(
-        col("_hlen") > 0L && col("_hlen") + 8L <= flen, lit(false)))
+        col("_hlen") > 0L && col("_hlen") <= flen - 8L, lit(false)))
       .withColumn("_json", when(col("_jok"),
-        decode(bin.substr(lit(9), col("_hlen").cast("int")), "UTF-8")))
+        bin.substr(lit(9), col("_hlen").cast("int")).cast("string")))
     val json = col("_json")
     val valid = (col("_jok") && substring(json, 1, 1) === "{").cast("int")
     def ifOk(c: org.apache.spark.sql.Column) = when(valid === 1, c)
@@ -2616,12 +2488,12 @@ object Multimodal {
           .cast("int")))
       .withColumn("dtype", ifOk(get_json_object(json, "$.w.dtype")))
       .withColumn("t_rows", ifOk(
-        get_json_object(json, "$.w.shape[0]").cast("int")))
+        get_json_object(json, "$.w.shape[0]").try_cast("int")))
       .withColumn("t_cols", ifOk(
-        get_json_object(json, "$.w.shape[1]").cast("int")))
+        get_json_object(json, "$.w.shape[1]").try_cast("int")))
       .withColumn("declared_bytes", ifOk(greatest(
-        coalesce(get_json_object(json, "$.w.data_offsets[1]").cast("long"), lit(0L)),
-        coalesce(get_json_object(json, "$.b.data_offsets[1]").cast("long"), lit(0L)))))
+        coalesce(get_json_object(json, "$.w.data_offsets[1]").try_cast("long"), lit(0L)),
+        coalesce(get_json_object(json, "$.b.data_offsets[1]").try_cast("long"), lit(0L)))))
       .withColumn("truncated", ifOk(
         (col("declared_bytes") > flen - 8L - col("_hlen")).cast("int")))
       .drop("_hlen", "_jok", "_json")
@@ -2662,7 +2534,7 @@ object Multimodal {
     val avail = when(truncate, shiftright(declared, 1)).otherwise(declared)
     val bin = when(garbage, unhex(lit("ffffffff0000000000")))
       .otherwise(concat(
-        unhex(concat(leHex32(length(json)), lit("00000000"))),
+        unhex(Bytes.leHex(length(json), 8)),
         encode(json, "UTF-8"),
         unhex(repeat(lit("00"), avail.cast("int")))))
     withSafetensors(d.select(col("doc_id"), bin.as("_bin")), "_bin")
@@ -2682,22 +2554,23 @@ object Multimodal {
   def withNpyHeader(df: DataFrame, binCol: String): DataFrame = {
     val bin = col(binCol)
     val flen = length(bin).cast("long")
-    val valid = (lower(hex(substring(bin, 1, 6))) === "934e554d5059" &&
-      conv(hex(substring(bin, 7, 1)), 16, 10).cast("int") === 1).cast("int")
+    val valid = (Bytes.magic(bin, lit(1), "934e554d5059") &&
+      Bytes.u8(bin, lit(7)) === 1).cast("int")
     def ifOk(c: org.apache.spark.sql.Column) = when(valid === 1, c)
     val out = df
       .withColumn("_vnpy", valid)
-      .withColumn("_hlen", leU16(bin, lit(9)))
+      .withColumn("_hlen", Bytes.le(bin, lit(9), 2))
       .withColumn("_hdr", when(col("_vnpy") === 1,
-        decode(bin.substr(lit(11), col("_hlen")), "UTF-8")))
+        bin.substr(lit(11), col("_hlen")).cast("string")))
       .withColumn("_descr",
         regexp_extract(col("_hdr"), "'descr': '([^']+)'", 1))
       .withColumn("_tup",
         regexp_extract(col("_hdr"), "'shape': \\(([0-9, ]*)\\)", 1))
-    val d1 = nullif(regexp_extract(col("_tup"), "^([0-9]+)", 1), lit("")).cast("long")
-    val d2 = nullif(regexp_extract(col("_tup"), ", ([0-9]+)", 1), lit("")).cast("long")
-    val isz = nullif(regexp_extract(col("_descr"), "([0-9]+)", 1), lit("")).cast("int")
-    val dataBytes = d1 * coalesce(d2, lit(1L)) * isz
+    val d1 = nullif(regexp_extract(col("_tup"), "^([0-9]+)", 1), lit("")).try_cast("long")
+    val d2 = nullif(regexp_extract(col("_tup"), ", ([0-9]+)", 1), lit("")).try_cast("long")
+    val isz = nullif(regexp_extract(col("_descr"), "([0-9]+)", 1), lit("")).try_cast("int")
+    // an extent past Long.MaxValue is null, not an overflow error
+    val dataBytes = try_multiply(try_multiply(d1, coalesce(d2, lit(1L))), isz)
     out
       .withColumn("valid_npy", col("_vnpy"))
       .withColumn("header_len", ifOk(col("_hlen")))
@@ -2749,7 +2622,7 @@ object Multimodal {
     val avail = when(truncate, shiftright(dataBytes, 1)).otherwise(dataBytes)
     val bin = when(garbage, unhex(lit("deadbeef00000000000000")))
       .otherwise(concat(
-        unhex(concat(lit("934e554d5059" + "0100"), leHex16(length(header)))),
+        unhex(concat(lit("934e554d5059" + "0100"), Bytes.leHex(length(header), 2))),
         encode(header, "UTF-8"),
         unhex(repeat(lit("00"), avail.cast("int")))))
     withNpyHeader(d.select(col("doc_id"), bin.as("_bin")), "_bin")
@@ -2771,31 +2644,30 @@ object Multimodal {
   def withGgufHeader(df: DataFrame, binCol: String): DataFrame = {
     val bin = col(binCol)
     val flen = length(bin).cast("long")
-    val valid = (lower(hex(substring(bin, 1, 4))) === "47475546").cast("int")
+    val valid = Bytes.magic(bin, lit(1), "47475546").cast("int")
     def ifOk(c: org.apache.spark.sql.Column) = when(valid === 1, c)
-    def u64(off: org.apache.spark.sql.Column) =
-      leU32(bin, off.cast("int")) + leU32(bin, off.cast("int") + 4) * lit(4294967296L)
     val out = df
       .withColumn("_vg", valid)
-      .withColumn("_klen", u64(lit(25L)))
+      .withColumn("_klen", Bytes.le(bin, lit(25), 8))
       .withColumn("_kok", coalesce(
-        col("_vg") === 1 && lit(32L) + col("_klen") + 12L <= flen, lit(false)))
-      .withColumn("_vlen", when(col("_kok"), u64(lit(37L) + col("_klen"))))
+        col("_vg") === 1 && col("_klen") <= flen - 44L, lit(false)))
+      .withColumn("_vlen",
+        when(col("_kok"), Bytes.le(bin, (lit(37L) + col("_klen")).cast("int"), 8)))
     out
       .withColumn("valid_gguf", col("_vg"))
-      .withColumn("version", ifOk(leU32(bin, lit(5)).cast("int")))
-      .withColumn("n_tensors", ifOk(u64(lit(9L))))
-      .withColumn("n_kv", ifOk(u64(lit(17L))))
+      .withColumn("version", ifOk(Bytes.le(bin, lit(5), 4).try_cast("int")))
+      .withColumn("n_tensors", ifOk(Bytes.le(bin, lit(9), 8)))
+      .withColumn("n_kv", ifOk(Bytes.le(bin, lit(17), 8)))
       .withColumn("key_len", ifOk(col("_klen")))
       .withColumn("first_key", when(col("_kok"),
-        decode(bin.substr(lit(33), col("_klen").cast("int")), "UTF-8")))
+        bin.substr(lit(33), col("_klen").cast("int")).cast("string")))
       .withColumn("value_type", when(col("_kok"),
-        leU32(bin, (lit(33L) + col("_klen")).cast("int")).cast("int")))
+        Bytes.le(bin, (lit(33L) + col("_klen")).cast("int"), 4).try_cast("int")))
       .withColumn("architecture", when(
         col("_kok") && col("value_type") === 8 &&
-          lit(44L) + col("_klen") + col("_vlen") <= flen,
-        decode(bin.substr((lit(45L) + col("_klen")).cast("int"),
-          col("_vlen").cast("int")), "UTF-8")))
+          col("_vlen") <= flen - 44L - col("_klen"),
+        bin.substr((lit(45L) + col("_klen")).cast("int"),
+          col("_vlen").cast("int")).cast("string")))
       .withColumn("truncated", ifOk((!col("_kok")).cast("int")))
       .drop("_vg", "_klen", "_kok", "_vlen")
   }
@@ -2815,18 +2687,16 @@ object Multimodal {
     val arch = when(col("doc_id") % 3 === 0, "llama")
       .when(col("doc_id") % 3 === 1, "gpt2").otherwise("bert")
     val key = lit("general.architecture") // 20 bytes
-    def le64(c: org.apache.spark.sql.Column) =
-      concat(leHex32(c), lit("00000000"))
     val fullTail = concat(
-      unhex(concat(le64(lit(20)))), encode(key, "UTF-8"),
-      unhex(concat(leHex32(lit(8)), le64(length(arch)))),
+      unhex(Bytes.leHex(lit(20), 8)), encode(key, "UTF-8"),
+      unhex(concat(Bytes.leHex(lit(8), 4), Bytes.leHex(length(arch), 8))),
       encode(arch, "UTF-8"))
-    val cutTail = concat(unhex(le64(lit(20))),
+    val cutTail = concat(unhex(Bytes.leHex(lit(20), 8)),
       encode(substring(key, 1, 10), "UTF-8"))
     val bin = when(garbage, unhex(lit("deadbeef")))
       .otherwise(concat(
-        unhex(concat(lit("47475546"), leHex32(version),
-          le64(nT), le64(nKv))),
+        unhex(concat(lit("47475546"), Bytes.leHex(version, 4),
+          Bytes.leHex(nT, 8), Bytes.leHex(nKv, 8))),
         when(truncate, cutTail).otherwise(fullTail)))
     withGgufHeader(d.select(col("doc_id"), bin.as("_bin")), "_bin")
       .select("doc_id", "valid_gguf", "version", "n_tensors", "n_kv",
@@ -2847,19 +2717,17 @@ object Multimodal {
   def withAvroHeader(df: DataFrame, binCol: String): DataFrame = {
     val bin = col(binCol)
     val flen = length(bin).cast("long")
-    def u8(off: org.apache.spark.sql.Column) =
-      conv(hex(bin.substr(off.cast("int"), lit(1))), 16, 10).cast("long")
     // zigzag varint at a column offset: value and its encoded width
     def vint(off: org.apache.spark.sql.Column)
         : (org.apache.spark.sql.Column, org.apache.spark.sql.Column) = {
-      val b0 = u8(off)
-      val b1 = u8(off + 1)
+      val b0 = Bytes.u8(bin, off.cast("int"))
+      val b1 = Bytes.u8(bin, (off + 1).cast("int"))
       val raw = when(b0 < 128, b0)
         .otherwise((b0.bitwiseAND(lit(127L))) + b1 * 128L)
       // zigzag: positive n encodes as 2n — decode is a halving
       (shiftright(raw, 1), when(b0 < 128, 1L).otherwise(2L))
     }
-    val valid = (lower(hex(substring(bin, 1, 4))) === "4f626a01").cast("int")
+    val valid = Bytes.magic(bin, lit(1), "4f626a01").cast("int")
     def ifOk(c: org.apache.spark.sql.Column) = when(valid === 1, c)
     val (nMeta, w0) = vint(lit(5L))
     val out0 = df
@@ -2882,8 +2750,7 @@ object Multimodal {
       .withColumn("_k2len", when(col("_k1ok"), k2len))
       .withColumn("_k2off", col("_v1off") + col("_v1len") + w3)
     val key1 = when(col("_k1ok"),
-      decode(bin.substr(col("_k1off").cast("int"),
-        col("_k1len").cast("int")), "UTF-8"))
+      bin.substr(col("_k1off").cast("int"), col("_k1len").cast("int")).cast("string"))
     // the second entry's declared key running past the file is the
     // truncated-container signature
     val trunc = coalesce(col("_k2off") + col("_k2len") - 1L > flen, lit(true))
@@ -2895,8 +2762,7 @@ object Multimodal {
       .withColumn("n_meta", ifOk(col("_n")))
       .withColumn("first_key", key1)
       .withColumn("codec", when(col("_k1ok") && key1 === "avro.codec",
-        decode(bin.substr(col("_v1off").cast("int"),
-          col("_v1len").cast("int")), "UTF-8")))
+        bin.substr(col("_v1off").cast("int"), col("_v1len").cast("int")).cast("string")))
       .withColumn("second_key_len", when(col("_k1ok"), col("_k2len")))
       .withColumn("schema_len", when(col("_k1ok") && !trunc, v2len))
       .withColumn("truncated", ifOk(trunc.cast("int")))
@@ -2927,10 +2793,10 @@ object Multimodal {
     // zigzag-varint hex of a small non-negative int (≤ 2 bytes)
     def vhex(n: org.apache.spark.sql.Column) = {
       val z = n * 2
-      when(z < 128, lpad(lower(hex(z)), 2, "0"))
+      when(z < 128, Bytes.beHex(z, 1))
         .otherwise(concat(
-          lpad(lower(hex(z.bitwiseAND(lit(127)).bitwiseOR(lit(128)))), 2, "0"),
-          lpad(lower(hex(shiftright(z, 7))), 2, "0")))
+          Bytes.beHex(z.bitwiseAND(lit(127)).bitwiseOR(lit(128)), 1),
+          Bytes.beHex(shiftright(z, 7), 1)))
     }
     val key1 = lit("avro.codec")   // 10 bytes
     val key2 = lit("avro.schema")  // 11 bytes
@@ -2962,11 +2828,10 @@ object Multimodal {
     val bin = col(binCol)
     val flen = length(bin).cast("long")
     val valid = (flen >= 18L &&
-      lower(hex(substring(bin, 1, 8))) === "4152524f57310000" &&
-      lower(hex(bin.substr((flen - 5L).cast("int"), lit(6)))) ===
-        "4152524f5731").cast("int")
+      Bytes.magic(bin, lit(1), "4152524f57310000") &&
+      Bytes.magic(bin, (flen - 5L).cast("int"), "4152524f5731")).cast("int")
     def ifOk(c: org.apache.spark.sql.Column) = when(valid === 1, c)
-    val footerLen = leU32(bin, (flen - 9L).cast("int"))
+    val footerLen = Bytes.le(bin, (flen - 9L).cast("int"), 4)
     df
       .withColumn("valid_arrow", valid)
       .withColumn("file_bytes", ifOk(flen))
@@ -2986,7 +2851,7 @@ object Multimodal {
     val hx = concat(
       lit("4152524f57310000"),
       repeat(lit("00"), fill),
-      leHex32(declared),
+      Bytes.leHex(declared, 4),
       when(corrupt, lit("4152524f5732")).otherwise(lit("4152524f5731")))
     withArrowTrailer(d.select(col("doc_id"), unhex(hx).as("_bin")), "_bin")
       .select("doc_id", "valid_arrow", "file_bytes", "footer_len",
@@ -3005,17 +2870,18 @@ object Multimodal {
   def withHdf5Superblock(df: DataFrame, binCol: String): DataFrame = {
     val bin = col(binCol)
     val flen = length(bin).cast("long")
-    def u8(off: Int) = conv(hex(substring(bin, off, 1)), 16, 10).cast("int")
-    val valid = (lower(hex(substring(bin, 1, 8))) === "894844460d0a1a0a").cast("int")
+    val valid = Bytes.magic(bin, lit(1), "894844460d0a1a0a").cast("int")
     def ifOk(c: org.apache.spark.sql.Column) = when(valid === 1, c)
-    val ver = u8(9)
+    val ver = Bytes.u8(bin, lit(9))
     val v2 = ver >= 2
-    val eof = leU32(bin, lit(29)) + leU32(bin, lit(33)) * lit(4294967296L)
+    val eof = Bytes.le(bin, lit(29), 8)
     df
       .withColumn("valid_hdf5", valid)
       .withColumn("sb_version", ifOk(ver))
-      .withColumn("offset_size", ifOk(when(v2, u8(10)).otherwise(u8(14))))
-      .withColumn("length_size", ifOk(when(v2, u8(11)).otherwise(u8(15))))
+      .withColumn("offset_size",
+        ifOk(when(v2, Bytes.u8(bin, lit(10))).otherwise(Bytes.u8(bin, lit(14)))))
+      .withColumn("length_size",
+        ifOk(when(v2, Bytes.u8(bin, lit(11))).otherwise(Bytes.u8(bin, lit(15)))))
       .withColumn("eof_addr", ifOk(when(v2, eof)))
       .withColumn("truncated", ifOk(when(v2, (eof > flen).cast("int"))))
   }
@@ -3037,16 +2903,16 @@ object Multimodal {
     val eofDecl = when(truncate, flenV2 + lit(4096)).otherwise(flenV2)
     val v2hx = concat(
       lit("894844460d0a1a0a"), lit("02"),
-      lpad(lower(hex(osz)), 2, "0"), lpad(lower(hex(osz)), 2, "0"),
+      Bytes.beHex(osz, 1), Bytes.beHex(osz, 1),
       lit("00"), repeat(lit("00"), 16),
-      leHex32(eofDecl), lit("00000000"),
+      Bytes.leHex(eofDecl, 4), lit("00000000"),
       repeat(lit("00"), 12),
       repeat(lit("00"), fill))
     // v0 layout: sig(8) ver(1)=00 fsver(1) rgver(1) res(1) shver(1)
     // osz(1 @14) lsz(1 @15) + tail
     val v0hx = concat(
       lit("894844460d0a1a0a"), lit("00"), lit("00000000"),
-      lpad(lower(hex(osz)), 2, "0"), lpad(lower(hex(osz)), 2, "0"),
+      Bytes.beHex(osz, 1), Bytes.beHex(osz, 1),
       repeat(lit("00"), 8))
     val hx = when(garbage, lit("89484446deadbeef00"))
       .otherwise(when(isV0, v0hx).otherwise(v2hx))

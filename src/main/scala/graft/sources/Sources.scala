@@ -89,13 +89,6 @@ object Sources {
     unioned.na.fill("")
   }
 
-  /** A7: re-batch records as JSON array strings (get_batches,
-    * batch_size=100) with DETERMINISTIC batch ids derived from a dense
-    * numeric key: batch_id = key / batchSize. Unlike the reference's
-    * positional slicing (meaningless under distributed row order), a
-    * key-derived id is stable across partitionings and re-runs; the
-    * only shuffle is the groupBy(batch_id), and records order inside a
-    * batch is pinned by array_sort on the key. */
   /** A14: fixed-width record reader — the mainframe/COBOL-copybook
     * wire format (and the one classic ingestion shape a delimiter
     * reader cannot express). A layout is (name, start 1-based, len,
@@ -127,6 +120,13 @@ object Sources {
     df.select(line.as("value")).write.mode("overwrite").text(path)
   }
 
+  /** A7: re-batch records as JSON array strings (get_batches,
+    * batch_size=100) with DETERMINISTIC batch ids derived from a
+    * numeric key: batch_id = floor(key / batchSize). Unlike the
+    * reference's positional slicing (meaningless under distributed row
+    * order), a key-derived id is stable across partitionings and
+    * re-runs; the only shuffle is the groupBy(batch_id), and records
+    * order inside a batch is pinned by array_sort on the key. */
   def jsonBatches(df: DataFrame, keyCol: String, batchSize: Int): DataFrame = {
     val rec = to_json(struct(df.columns.map(col): _*))
     df.select(

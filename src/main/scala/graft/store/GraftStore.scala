@@ -48,13 +48,7 @@ object GraftStore {
       // (Murmur3 + pmod), so `buckets` shuffle partitions land each
       // bucket in exactly one task → exactly one file per bucket; the
       // one build-time shuffle buys every downstream read.
-      // GRAFT_STORE_LAYOUT=legacy skips the repartition (the
-      // pre-9b0510f layout) — the A/B dial for the r16 layout probe.
-      val staged =
-        if (sys.env.get("GRAFT_STORE_LAYOUT").contains("legacy")) df
-        else df.repartition(buckets,
-          bucketCols.map(org.apache.spark.sql.functions.col): _*)
-      staged
+      df.repartition(buckets, bucketCols.map(org.apache.spark.sql.functions.col): _*)
         .write.mode("overwrite").format("parquet")
         .option("path", s"$defaultBase/$name")
         .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)

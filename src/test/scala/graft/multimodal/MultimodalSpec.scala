@@ -106,8 +106,8 @@ class MultimodalSpec extends SparkSpec {
     val df = Seq((1L, canonical), (2L, withList), (3L, notWav)).toDF("id", "hx")
       .select(col("id"), unhex(col("hx")).as("payload"))
     val scanned = Multimodal.withWavChunks(df, "payload")
-    val ch = Multimodal.leU16(col("payload"), col("fmt_off") + org.apache.spark.sql.functions.lit(2))
-    val rate = Multimodal.leU32(col("payload"), col("fmt_off") + org.apache.spark.sql.functions.lit(4))
+    val ch = Bytes.le(col("payload"), col("fmt_off") + org.apache.spark.sql.functions.lit(2), 2)
+    val rate = Bytes.le(col("payload"), col("fmt_off") + org.apache.spark.sql.functions.lit(4), 4)
     val byId = scanned
       .select(col("id"), col("valid_riff"), col("fmt_off"), col("data_size"), ch, rate)
       .collect().map { r =>
@@ -626,8 +626,8 @@ class MultimodalSpec extends SparkSpec {
     val df = Seq((1L, mp4), (2L, notMp4)).toDF("id", "hx")
       .select(col("id"), unhex(col("hx")).as("payload"))
     val scanned = Multimodal.withMp4Boxes(df, "payload")
-    val ts = Multimodal.beU32c(col("payload"), col("moov_off") + lit(28))
-    val dur = Multimodal.beU32c(col("payload"), col("moov_off") + lit(32))
+    val ts = Bytes.be(col("payload"), col("moov_off") + lit(28), 4)
+    val dur = Bytes.be(col("payload"), col("moov_off") + lit(32), 4)
     val byId = scanned
       .select(col("id"), col("valid_ftyp"), col("moov_off"), col("mdat_size"), ts, dur)
       .collect().map { r =>
@@ -691,6 +691,39 @@ class MultimodalSpec extends SparkSpec {
         .select(col("id"), unhex(col("hx")).as("payload")), "payload")
       .select("valid_riff", "fmt_off", "data_size").collect().head
     assert(wav.getInt(0) == 1 && wav.getInt(1) == 0 && wav.getLong(2) == 0L)
+  }
+
+  test("fields that do not fit their type read as null: no 64-bit or variable-width read fails the query") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, unhex}
+    def bin(hx: String) = Seq((1L, hx)).toDF("id", "hx")
+      .select(col("id"), unhex(col("hx")).as("payload"))
+    // MP4 (24 bytes): an mdat box with size32 = 1 and a largesize of
+    // 0xffffffffffffff00, past Long.MaxValue — the box size is null,
+    // so the walk freezes with no mdat size captured
+    val mp4 = Multimodal.withMp4Boxes(
+      bin("00000008" + "66747970" + "00000001" + "6d646174" + "ffffffffffffff00"), "payload")
+      .select("valid_ftyp", "moov_off", "mdat_size").collect().head
+    assert(mp4.getInt(0) == 1 && mp4.getInt(1) == 0 && (mp4.isNullAt(2) || mp4.getLong(2) == 0L),
+      s"mp4: $mp4")
+    // TFRecord: a u64le length with the top bit set — the first record
+    // cannot fit, so the shard does not validate
+    val tf = Multimodal.withTfRecords(bin("0000000000000080" + "aabbccdd" + "00" * 8), "payload")
+      .select("valid_tfrecord", "n_records", "first_len").collect().head
+    assert(tf.getInt(0) == 0 && tf.isNullAt(1) && tf.isNullAt(2), s"tfrecord: $tf")
+    // GGUF: a first key length of 0xff00000000000000 — unreadable, so
+    // the key is null and the header counts as truncated
+    val gguf = Multimodal.withGgufHeader(bin("47475546" + "03000000" + "0100000000000000" +
+      "0100000000000000" + "00000000000000ff" + "00" * 8), "payload")
+      .select("valid_gguf", "key_len", "first_key", "truncated").collect().head
+    assert(gguf.getInt(0) == 1 && gguf.isNullAt(1) && gguf.isNullAt(2) && gguf.getInt(3) == 1,
+      s"gguf: $gguf")
+    // EBML: a 4-byte EBMLVersion value of 0xffffffff does not fit the
+    // int column — null, while the walk still reads the DocType after it
+    val ebml = Multimodal.withEbmlHeader(bin("1a45dfa3" + "8f" + "4286" + "84" + "ffffffff" +
+      "4282" + "84" + "7765626d"), "payload")
+      .select("valid_ebml", "ebml_version", "doctype").collect().head
+    assert(ebml.getInt(0) == 1 && ebml.isNullAt(1) && ebml.getString(2) == "webm", s"ebml: $ebml")
   }
 
   test("H42/E20 dHash near-dup: every same-group pair verified, zero cross-group pairs, bands codegen-stable") {

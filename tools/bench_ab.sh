@@ -31,14 +31,12 @@ echo "== A: prior ($PRIOR = $(git -C "$WT" rev-parse --short HEAD)) =="
 # classes — the runner script is orthogonal to the measured code, and
 # an older tree's run.sh may hardcode the main repo's target dir
 # (the r18 lesson: that silently benches HEAD twice)
-GRAFT_CLASSES="$WT/target/scala-2.13/classes" \
-  SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} SPARK_GRAFT_SF_DIR="$SF" \
+GRAFT_CLASSES="$WT/target/scala-2.13/classes" SPARK_GRAFT_SF_DIR="$SF" \
   BENCH_OUT="$ROOT/probes/BENCH_${TAG}_ab_priorcode.json" \
   "$ROOT/tools/run.sh" graft.Bench >/dev/null
 
 echo "== B: HEAD =="
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} SPARK_GRAFT_SF_DIR="$SF" \
-  BENCH_OUT="$ROOT/probes/BENCH_${TAG}_ab_headcode.json" \
+SPARK_GRAFT_SF_DIR="$SF" BENCH_OUT="$ROOT/probes/BENCH_${TAG}_ab_headcode.json" \
   "$ROOT/tools/run.sh" graft.Bench >/dev/null
 
 echo "== diff (committed-artifact numbers; quote THESE) =="
