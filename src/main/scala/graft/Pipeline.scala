@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.{RdfXml, Sources}
@@ -50,17 +51,29 @@ object Pipeline {
     def unpersist(): Unit = standardized.unpersist()
   }
 
-  /** Driver-side listing of top-level inputs (per-file frames are
-    * required because each file has its own schema); the per-file READS
-    * are fully distributed. Caveat for million-file landing zones: this
-    * one-frame-per-file shape matches the reference's directory layout
-    * (tens of files, each its own schema); at landing-zone scale, group
-    * files by schema first and hand each GROUP to one reader as a path
-    * list — Spark parallelizes the listing and splits within a single
-    * load, which a per-file loop would serialize on the driver. */
-  private def files(dir: String, ext: String): Seq[String] =
-    Option(new java.io.File(dir).listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith(ext)).map(_.getAbsolutePath).sorted
+  /** Driver-side listing of top-level inputs by extension (per-file
+    * frames are required because each file has its own schema); the
+    * per-file READS are fully distributed. The listing goes through the
+    * directory's Hadoop FileSystem, like every read, so a `file:` URI or
+    * a cluster path lists what the readers see. A missing directory, or
+    * one with no supported file, fails here, naming the directory.
+    * Caveat for million-file landing zones: this one-frame-per-file
+    * shape matches the reference's directory layout (tens of files, each
+    * its own schema); at landing-zone scale, group files by schema first
+    * and hand each GROUP to one reader as a path list — Spark
+    * parallelizes the listing and splits within a single load, which a
+    * per-file loop would serialize on the driver. */
+  private def inputs(spark: SparkSession, dir: String): Map[String, Seq[String]] = {
+    val exts = Seq(".csv", ".tsv", ".json", ".xml")
+    val path = new Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(fs.isDirectory(path), s"Pipeline.run: input directory $dir does not exist")
+    val names = fs.listStatus(path).map(_.getPath.toString).sorted.toSeq
+    val byExt = exts.map(ext => ext -> names.filter(_.endsWith(ext))).toMap
+    require(byExt.values.exists(_.nonEmpty),
+      s"Pipeline.run: input directory $dir holds no ${exts.mkString(", ")} file")
+    byExt
+  }
 
   def run(spark: SparkSession, dataDir: String,
       chain: LlmChains.Chain = LlmChains.StubChain,
@@ -71,10 +84,11 @@ object Pipeline {
     // frames; malformed files degrade to a _corrupt_record-only frame
     // and are skipped, like the reference's try/except per file
     // (data_ingestion_batch.py:121-127)
+    val files = inputs(spark, dataDir)
     val tabular = (
-      files(dataDir, ".csv").map(p => Sources.csv(spark, p)) ++
-      files(dataDir, ".tsv").map(p => Sources.tsv(spark, p)) ++
-      files(dataDir, ".json").map(p => Sources.json(spark, p, multiLine = true))
+      files(".csv").map(p => Sources.csv(spark, p)) ++
+      files(".tsv").map(p => Sources.tsv(spark, p)) ++
+      files(".json").map(p => Sources.json(spark, p, multiLine = true))
     ).filter(df => df.columns.nonEmpty && df.columns.toSeq != Seq("_corrupt_record"))
     val records = if (tabular.nonEmpty) Sources.unionHeterogeneous(tabular)
       else spark.emptyDataFrame
@@ -98,7 +112,7 @@ object Pipeline {
 
     // 3b. RDF/XML triples (already structured → no LLM pass)
     val rdf =
-      if (files(dataDir, ".xml").isEmpty) None
+      if (files(".xml").isEmpty) None
       else Some(RdfXml.rdfTriples(spark, s"$dataDir/*.xml")
         .select(col("subject"), lit("entity").as("subject_type"),
           col("xml_label").as("relation"),

@@ -1042,7 +1042,7 @@ object GraphQueries {
     val pkey = concat(
       substring(md5(concat(lit("match|"), col("u"), lit("|"), col("v"))), 1, 12),
       lit("|"), col("u"), lit("|"), col("v"))
-    Graphs.maximalMatching(und.select(col("u"), col("v"), pkey.as("pkey")),
+    Graphs.maximalMatchingGuarded(und.select(col("u"), col("v"), pkey.as("pkey")),
       MatchRounds)
   }
 

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** DataFrame-native graph analytics (SURVEY §2 C1-C7) over the
@@ -28,6 +28,8 @@ import org.apache.spark.sql.functions._
   *    checkpoint and its one aggregate action, and the rounds report
   *    ([[lastRoundsExecuted]]). kCore and the fixed-iteration families
   *    (pageRank, katz, hits, walks) keep plain `for` loops.
+  *  - Pair-scale inputs under [[DriverMaxRows]] skip the distributed
+  *    rounds: the guarded-local paths solve them on the driver.
   */
 object Graphs {
 
@@ -122,9 +124,9 @@ object Graphs {
     * loop that runs on [[superstep]]: [[connectedComponents]],
     * [[lubyMis]], [[jpColoring]], [[maximalMatching]], [[kTruss]],
     * [[dagLayers]], [[sccColoring]], [[onion]] (all of its stages) and
-    * [[boruvkaMsf]]. Observability for the early-exit contract
-    * (GraphSpec pins rounds-executed == rounds-needed, not the caller's
-    * budget). A loop that runs another loop inside its rounds
+    * [[boruvkaMsf]] — and [[maximalMatchingGuarded]]'s local rounds.
+    * Observability for the early-exit contract (GraphSpec pins
+    * rounds-executed == rounds-needed, not the caller's budget). A loop that runs another loop inside its rounds
     * (boruvkaMsf's CC fallback) reports its own rounds, not the inner
     * loop's. */
   private val lastRounds = new ThreadLocal[Int]
@@ -165,6 +167,15 @@ object Graphs {
   private val rowCount: DataFrame => Long = _.count()
   private val drained: (Long, Long) => Boolean = (_, n) => n == 0
 
+  /** The graph driver guard: the most rows a guarded-local path collects
+    * to the driver and solves in plain Scala, instead of paying a
+    * distributed loop's fixed per-job overhead. The guarded paths —
+    * [[componentsGuarded]], the Borůvka label merge in [[boruvkaMsf]],
+    * [[louvainMoveGuarded]] and [[maximalMatchingGuarded]] — all run on
+    * pair-scale inputs (survivor pairs, one row per component, condensed
+    * community graphs, the geo graph), metadata-scale at any corpus size. */
+  val DriverMaxRows: Long = 1L << 20
+
   /** Driver union-find with min-label union: every final root is the
     * MINIMUM of its component under `ord`, whatever order the pairs
     * arrive in — exactly the star contraction's fixed point, so labels
@@ -200,7 +211,7 @@ object Graphs {
     * star contraction's fixed point. Above the guard: the distributed
     * CC, unchanged. One scalar count action decides. */
   def componentsGuarded(pairs: DataFrame,
-      maxDriverRows: Long = MsfLocalMergeMax): DataFrame = {
+      maxDriverRows: Long = DriverMaxRows): DataFrame = {
     // checkpoint ONCE: the guard count, the collect (or the fallback's
     // iterations) must not each re-run the caller's verification
     // pipeline that produced the pairs
@@ -516,6 +527,53 @@ object Graphs {
     } { (next, _) => active = next }
     out.getOrElse(edges.limit(0).select(col("u"), col("v"),
       lit(0).as("matched_round")))
+  }
+
+  /** [[maximalMatching]] behind the [[DriverMaxRows]] guard (the
+    * [[louvainMoveGuarded]] discipline): the distributed rounds pay 8
+    * jobs each, pure fixed overhead on a graph of a few thousand edges.
+    * The string edge list is checkpointed once, and one count (which
+    * fills the checkpoint) decides; at or under the guard one collect
+    * brings the edges to the driver and the SAME rounds run in Scala, so
+    * building the result runs 3 jobs in all. The rows are identical BY
+    * CONSTRUCTION: an edge matches iff its key is the minimum at both
+    * endpoints, keys comparing as Spark orders strings (UTF-8 bytes, not
+    * UTF-16 units); matched endpoints retire with every incident edge; a
+    * row with a null endpoint or key drops out in its first round, as the
+    * joins drop it; and the loop exits once no edge is left, reporting its
+    * rounds through [[lastRoundsExecuted]] as [[superstep]] does. Above
+    * the guard, or for non-string columns, the distributed rounds run
+    * unchanged. */
+  def maximalMatchingGuarded(edges: DataFrame, rounds: Int,
+      localMax: Long = DriverMaxRows): DataFrame = {
+    import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val e = edges.select(col("u"), col("v"), col("pkey"))
+    if (!e.schema.forall(_.dataType == StringType)) return maximalMatching(e, rounds)
+    val cp = e.localCheckpoint(eager = false)
+    if (cp.count() > localMax) return maximalMatching(cp, rounds)
+    var active = cp.collect().toSeq.map(r =>
+      (r.getString(0), r.getString(1), Option(r.getString(2)).map(UTF8String.fromString).orNull))
+    val out = Seq.newBuilder[Row]
+    lastRounds.set(0)
+    var i = 1
+    while (i <= rounds && active.nonEmpty) {
+      val vmin = scala.collection.mutable.HashMap.empty[String, UTF8String]
+      def offer(x: String, k: UTF8String): Unit =
+        if (x != null && k != null && vmin.get(x).forall(_.compareTo(k) > 0)) vmin(x) = k
+      active.foreach { case (u, v, k) => offer(u, k); offer(v, k) }
+      val (matched, rest) = active
+        .filter { case (u, v, k) => u != null && v != null && k != null }
+        .partition { case (u, v, k) => vmin(u) == k && vmin(v) == k }
+      val taken = matched.flatMap { case (u, v, _) => Seq(u, v) }.toSet
+      matched.foreach { case (u, v, _) => out += Row(u, v, i) }
+      active = rest.filterNot { case (u, v, _) => taken(u) || taken(v) }
+      lastRounds.set(i)
+      i += 1
+    }
+    val schema = StructType(Seq(e.schema("u"), e.schema("v"),
+      StructField("matched_round", IntegerType, nullable = false)))
+    e.sparkSession.createDataFrame(java.util.Arrays.asList(out.result(): _*), schema)
   }
 
   /** Weighted PageRank: contributions split proportionally to edge
@@ -1132,12 +1190,6 @@ object Graphs {
     out
   }
 
-  /** Driver guard for the local Louvain sweep — pair-scale like
-    * [[componentsGuarded]]'s: level-2+ CONDENSED graphs have one
-    * vertex per level-1 community, so their edge lists are
-    * metadata-scale at any corpus size. */
-  val LouvainLocalMaxEdges: Long = 1L << 20
-
   /** [[louvainMove]] behind the componentsGuarded discipline (r16):
     * when the (one-direction) edge list fits the driver guard, the
     * SAME integer-gain sweep runs in plain Scala — the distributed
@@ -1153,7 +1205,7 @@ object Graphs {
     * distributed symmetrization's contribution. Above the guard the
     * distributed sweep runs unchanged. One scalar count decides. */
   def louvainMoveGuarded(undirected: DataFrame, iterations: Int,
-      localMax: Long = LouvainLocalMaxEdges): DataFrame = {
+      localMax: Long = DriverMaxRows): DataFrame = {
     val one = undirected.select(col("u"), col("v"), col("w"))
       .localCheckpoint(eager = true)
     if (one.count() > localMax) louvainMove(one, iterations)
@@ -1676,11 +1728,6 @@ object Graphs {
     * shuffles carry only the |V|-row label frame and the ≤ C picked
     * edges. One scalar driver action per round (the emptiness guard).
     * Returns the forest as (u, v, w): |V| − #components rows. */
-  /** Component-pair rows the Borůvka label merge may union-find on the
-    * driver (one row per component picking an edge that round — the
-    * same metadata scale as a manifest's file list). */
-  val MsfLocalMergeMax: Long = 1L << 20
-
   def boruvkaMsf(weighted: DataFrame, maxRounds: Int = 16): DataFrame = {
     val e0 = weighted.select(col("u"), col("v"), col("w"))
       .localCheckpoint(eager = true)
@@ -1724,7 +1771,7 @@ object Graphs {
         // size (r11, measured: 12.7 s → 5 s) — remains the fallback
         // for a first round on a graph with ≥ millions of components.
         val merged: DataFrame =
-          if (nChosen <= MsfLocalMergeMax) {
+          if (nChosen <= DriverMaxRows) {
             val labels = minLabelComponents(chosen.select(col("cu"), col("cv"))
               .collect().toSeq.map(r => (r.getString(0), r.getString(1))))
             import e0.sparkSession.implicits._

@@ -70,7 +70,7 @@ object Bpe {
     * vocab-scale (a 100 TB corpus has tens of millions of distinct
     * words, not billions), but only a bounded table may collect:
     * 2²¹ ≈ 2M words × ~50 B ≈ 100 MB driver-side, the same budget
-    * class as Graphs.LouvainLocalMaxEdges. Above it, distributed
+    * class as Graphs.DriverMaxRows. Above it, distributed
     * rounds. */
   val BpeLocalMaxWords: Long = 1L << 21
 

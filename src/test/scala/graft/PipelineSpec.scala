@@ -34,6 +34,27 @@ class PipelineSpec extends SparkSpec {
     out.unpersist()
   }
 
+  test("Pipeline.run lists its directory through Hadoop: a file: URI gives the plain path's records and triples") {
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val plain = Pipeline.run(spark, kgDataDir)
+    val uri = Pipeline.run(spark, s"file://$kgDataDir")
+    assert(rows(uri.records) == rows(plain.records))
+    assert(rows(uri.triples) == rows(plain.triples))
+    assert(rows(uri.triples).size > 100)
+    Seq(plain, uri).foreach(_.unpersist())
+  }
+
+  test("Pipeline.run fails naming the directory when it is missing or holds no supported file") {
+    val empty = Files.createTempDirectory("pipeline-empty")
+    Files.writeString(empty.resolve("notes.txt"), "not an input")
+    val missing = empty.resolve("missing").toString
+    val e1 = intercept[IllegalArgumentException](Pipeline.run(spark, missing))
+    assert(e1.getMessage.contains(s"input directory $missing does not exist"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](Pipeline.run(spark, empty.toString))
+    assert(e2.getMessage.contains(s"input directory $empty holds no .csv, .tsv, .json, .xml file"),
+      e2.getMessage)
+  }
+
   test("RetryingChain retries transient failures with backoff then succeeds") {
     class Flaky(failures: Int) extends LlmChains.Chain {
       // executor-local state: fails the first `failures` calls

@@ -33,6 +33,37 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def countExchanges(df: org.apache.spark.sql.DataFrame): Int =
     graft.monitor.PlanAudit.audit(df).shuffleExchanges
 
+  /** Spark jobs launched by `body`: its jobs carry a job tag, so jobs
+    * of earlier work whose events are still queued on the async listener
+    * bus are not counted; the count is read once it has settled. */
+  def countJobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = s"jobcount-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag))) n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try {
+      body
+      var last = -1
+      var stable = 0
+      while (stable < 3) {
+        Thread.sleep(100)
+        val c = n.get()
+        if (c == last) stable += 1 else { stable = 0; last = c }
+      }
+      n.get()
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   /** Disable BOTH broadcast thresholds for `body`: AQE has its own
     * spark.sql.adaptive.autoBroadcastJoinThreshold and will happily
     * convert a join to broadcast (making "no shuffle" trivially true,

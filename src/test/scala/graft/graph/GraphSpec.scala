@@ -1030,37 +1030,6 @@ class GraphSpec extends SparkSpec {
       assert(!(mis(u) && mis(v)), s"adjacent MIS pair $u-$v") }
   }
 
-  /** Spark jobs launched by `body`: its jobs carry a job tag, so jobs
-    * of earlier work whose events are still queued on the async listener
-    * bus are not counted; the count is read once it has settled. */
-  private def countJobs(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = s"jobcount-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-            .exists(_.split(",").contains(tag))) n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.addJobTag(tag)
-    try {
-      body
-      var last = -1
-      var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        val c = n.get()
-        if (c == last) stable += 1 else { stable = 0; last = c }
-      }
-      n.get()
-    } finally {
-      sc.removeJobTag(tag)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("C17/C28/C29/C38/C40 convergence loops pin their Spark jobs per executed round") {
     import spark.implicits._
     // a 12-vertex path with priorities rising along it: MIS, coloring

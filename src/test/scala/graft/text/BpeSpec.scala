@@ -45,30 +45,6 @@ class BpeSpec extends SparkSpec {
     df.collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
       .sortBy(_._1).toSeq
 
-  /** Count Spark jobs launched while `body` runs (listener bus is
-    * async: waits for the count to settle). */
-  private def countJobs(body: => Unit): Int = {
-    val n0 = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n0.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      var last = -1
-      var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        val c = n0.get()
-        if (c == last) stable += 1 else { stable = 0; last = c }
-      }
-      n0.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("G31 cost model: learning k rules stays within the pinned job budgets on both paths") {
     import spark.implicits._
     // the contract the scaladoc pins (r20, two-path): BPE's merge

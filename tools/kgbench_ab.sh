@@ -16,14 +16,18 @@
 # quartiles, how many pairs the checkout wins (by the metric's "better"
 # direction; ties count for neither), and whether that is a gain: a win
 # in at least nine tenths of the pairs and medians further apart than
-# the distance between the commit side's quartiles.
+# the distance between the commit side's quartiles. For query_fleet it
+# also prints each query's median seconds per side, from the line before
+# each run's result.
 #
 # Per-layer mode (--layers, --trace 1): one traced run per side on the
 # same seed (default 1001), commit side first. It prints every per-layer
 # metric of BENCHMARK.json side by side with the change, and flags with
 # `!` the deterministic counters that differ (Spark jobs, stages and
 # tasks, the reread factor, model calls, build and upsert counts): those
-# name the layer a timing change came from.
+# name the layer a timing change came from. For query_fleet it then
+# prints each query's construction seconds and eager Spark jobs in the
+# traced pass, from both sides' .kgbench/traces/ span files.
 set -euo pipefail
 LAYERS=0
 if [[ "${1:-}" == "--layers" ]]; then LAYERS=1; shift; fi
@@ -45,15 +49,20 @@ git -C "$ROOT" archive "$BASE" | tar -x -C "$WORK/base"
 echo "== $WORKLOAD, $PAIRS pairs, --trace $TRACE, ${SECONDS_PER_RUN} s runs: base $(git -C "$ROOT" rev-parse --short "$BASE") vs checkout $(git -C "$ROOT" rev-parse --short HEAD)$(git -C "$ROOT" diff --quiet HEAD || echo '+edits') =="
 
 run() {  # <side> <dir> <seed>
-  local line
-  line=$(cd "$2" && python3 kgbench/run.py --workload "$WORKLOAD" --seed "$3" \
-    --seconds "$SECONDS_PER_RUN" --trace "$TRACE" 2>>"$WORK/$1.log" | tail -n 1) || true
+  local out line info
+  out=$(cd "$2" && python3 kgbench/run.py --workload "$WORKLOAD" --seed "$3" \
+    --seconds "$SECONDS_PER_RUN" --trace "$TRACE" 2>>"$WORK/$1.log" | tail -n 2) || true
+  # the last line is the result; the one before it carries per-query times
+  line=$(tail -n 1 <<<"$out")
+  info=$(head -n 1 <<<"$out")
+  if [[ "$line" != "{"* || "$info" != "{"* || "$info" == "$line" ]]; then info='{}'; fi
   if [[ "$line" != "{"* ]]; then
     tail -n 20 "$WORK/$1.log" >&2
     line='{"correct": false, "attempted": 0, "failed": 0, "metrics": {}}'
   fi
   echo "$1 seed=$3 $line"
-  echo "{\"side\": \"$1\", \"seed\": $3, \"result\": $line}" >>"$WORK/results.jsonl"
+  echo "{\"side\": \"$1\", \"seed\": $3, \"dir\": \"$2\", \"result\": $line, \"info\": $info}" \
+    >>"$WORK/results.jsonl"
 }
 
 for ((i = 0; i < PAIRS; i++)); do
@@ -65,10 +74,11 @@ for ((i = 0; i < PAIRS; i++)); do
   fi
 done
 
-python3 - "$ROOT/BENCHMARK.json" "$WORK/results.jsonl" "$LAYERS" <<'EOF'
+python3 - "$ROOT/BENCHMARK.json" "$WORK/results.jsonl" "$LAYERS" "$WORKLOAD" <<'EOF'
 import json, sys
 
 spec = json.load(open(sys.argv[1]))
+spec_workload = sys.argv[4]
 runs = [json.loads(l) for l in open(sys.argv[2])]
 side = {s: {r["seed"]: r["result"] for r in runs if r["side"] == s} for s in ("base", "change")}
 seeds = sorted(side["base"])
@@ -91,6 +101,16 @@ for s in ("base", "change"):
     print(f"{s}: {len(side[s]) - len(bad)}/{len(side[s])} runs correct"
           f"{' (failing seeds ' + str(bad) + ')' if bad else ''}, {failed}/{attempted} operations failed")
 
+def per_query(s):
+    """Each query's seconds per seed (query_fleet's info line)."""
+    out = {}
+    for r in runs:
+        if r["side"] == s:
+            for q, t in ((r.get("info") or {}).get("query_s") or {}).items():
+                out.setdefault(q, []).append(t)
+    return out
+
+
 if sys.argv[3] == "1":
     # counters that do not depend on timing (timings end in _s): a
     # difference is a change in work
@@ -105,6 +125,24 @@ if sys.argv[3] == "1":
             continue
         differs = k.startswith(exact) and not k.endswith("_s") and fmt(b, k) != fmt(c, k)
         print(f"{'!' if differs else ' '} {k:<28} {fmt(b, k):>12} {fmt(c, k):>12}  ({m['unit']}, {m['better']} is better)")
+    # per query of the traced pass: construction seconds and the Spark
+    # jobs it ran eagerly, from each side's span trace
+    def construct(s):
+        r = next(r for r in runs if r["side"] == s)
+        try:
+            spans = json.load(open(f"{r['dir']}/.kgbench/traces/{spec_workload}-seed{r['seed']}.json"))["spans"]
+        except (OSError, ValueError, KeyError):
+            return {}
+        by_id = {x["id"]: x for x in spans}
+        return {by_id[x["parent"]]["name"]: (x["dur_s"], x["counters"]["jobs"])
+                for x in spans if x["pass"] == 2 and x["name"] == "construct"
+                and by_id.get(x["parent"], {}).get("layer") != "pass"}
+    cb, cc = construct("base"), construct("change")
+    if cb or cc:
+        print(f"  {'query':<28} {'construct_s':>23} {'eager jobs':>15}")
+        for q in list(cb) + [q for q in cc if q not in cb]:
+            (bs, bj), (cs, cj) = cb.get(q, (0, 0)), cc.get(q, (0, 0))
+            print(f"{'!' if bj != cj else ' '} {q:<28} {bs:>11.3f} {cs:>11.3f} {bj:>7.0f} {cj:>7.0f}")
     sys.exit(0)
 
 print(f"{'metric':<20} {'base q1/med/q3':>26} {'change q1/med/q3':>26} {'wins':>6}  gain")
@@ -122,4 +160,11 @@ for m in spec["end_to_end"]:
     fmt = lambda q: "/".join(f"{v:.4g}" for v in q)
     print(f"{name:<20} {fmt(b):>26} {fmt(c):>26} {wins:>3}/{len(pairs):<2}  {'yes' if gain else 'no'}"
           f"  ({m['unit']}, {m['better']} is better)")
+
+qb, qc = per_query("base"), per_query("change")
+if qb or qc:
+    print(f"{'query':<20} {'base median':>26} {'change median':>26}  (s)")
+    for q in list(qb) + [q for q in qc if q not in qb]:
+        med = lambda xs: f"{quartiles(xs)[1]:.4g}" if xs else "-"
+        print(f"{q:<20} {med(qb.get(q, [])):>26} {med(qc.get(q, [])):>26}")
 EOF
