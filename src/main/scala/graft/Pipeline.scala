@@ -21,34 +21,48 @@ import graft.kg.{GraphBuilder, LlmChains, Normalize}
   *  5. MERGE-build nodes/edges; optionally export neo4j bulk CSVs.
   *
   * Every stage is a narrow or single-shuffle transformation, with no
-  * driver-side loops. The standardized triples are persisted and `nodes`
-  * and `edges` are built over that one frame, so the first action on any
-  * of them fills the cache and every later one reads it: sources,
+  * driver-side loops. The standardized triples and the `nodes` and
+  * `edges` built over them are three persisted frames, so the first
+  * action on any of them fills its cache and every later one, the bulk
+  * export's and the Cypher batches' among them, reads it: sources,
   * batching, the chain, recovery and normalization run once per run, the
-  * chain once per prompt. The caller releases the cache
-  * (`KgOutputs.unpersist()`).
+  * chain once per prompt, and each aggregate once. The caller releases
+  * the three caches (`KgOutputs.unpersist()`).
   */
 object Pipeline {
 
   /** The pipeline's outputs. `triples` is the standardized triples,
-    * persisted (MEMORY_AND_DISK, no job) when `triples`, `nodes` or
-    * `edges` is first asked for, and `nodes` and `edges` read that one
-    * frame: the outputs hold the cache until `unpersist()`, which the
-    * caller owns. `records` is a plain lazy frame, so a caller that reads
-    * only the records plans and caches nothing more. */
+    * and `nodes` and `edges` are `GraphBuilder.nodes` and
+    * `GraphBuilder.edges` over that one frame. The three are registered
+    * as persisted frames (MEMORY_AND_DISK, no job) together, when any of
+    * them is first asked for, so `GraphBuilder.exportNeo4jBulk(triples)`
+    * and readers of `edges` find them in the cache too. The outputs hold
+    * the three caches until `unpersist()`, which the caller owns.
+    * `records` is a plain lazy frame, so a caller that reads only the
+    * records plans and caches nothing more. */
   final class KgOutputs private[Pipeline] (val records: DataFrame, standardized: DataFrame) {
     // persist() keeps the analyzed plan (a checkpoint would replace it),
     // so the pipeline's stages stay visible in it. A plan without the
     // chain's closure (RDF/XML only) compares equal to an earlier run's
-    // over the same files, whose cache would serve that run's rows: drop
-    // it first, so these outputs read their files
-    lazy val triples: DataFrame = { standardized.unpersist(); standardized.persist() }
-    lazy val nodes: DataFrame = GraphBuilder.nodes(triples)
-    lazy val edges: DataFrame = GraphBuilder.edges(triples)
+    // over the same files, whose cache would serve that run's rows: each
+    // frame drops an equal entry first, so these outputs read their files
+    private var held: Seq[DataFrame] = Nil
+    private def cached: Seq[DataFrame] = synchronized {
+      if (held.isEmpty) {
+        def register(df: DataFrame) = { df.unpersist(); df.persist() }
+        val t = register(standardized)
+        held = Seq(t, register(GraphBuilder.nodes(t)), register(GraphBuilder.edges(t)))
+      }
+      held
+    }
+    def triples: DataFrame = cached(0)
+    def nodes: DataFrame = cached(1)
+    def edges: DataFrame = cached(2)
 
-    /** Releases the triples cache; the outputs stay usable and recompute
-      * from the files when read again. */
-    def unpersist(): Unit = standardized.unpersist()
+    /** Releases the three caches, the aggregates before the triples they
+      * read; the outputs stay usable and recompute from the files when
+      * read again. */
+    def unpersist(): Unit = synchronized { held.reverse.foreach(_.unpersist()) }
   }
 
   /** Driver-side listing of top-level inputs by extension (per-file
@@ -132,7 +146,7 @@ object Pipeline {
       .standardizeRelations(normalized, "relation", "relation_std")
       .drop("relation").withColumnRenamed("relation_std", "relation")
 
-    // 5. MERGE-build, over the one persisted triples frame
+    // 5. MERGE-build, persisted with the triples it reads
     new KgOutputs(records, standardized)
   }
 }

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** DataFrame-native graph analytics (SURVEY §2 C1-C7) over the
   * property graph GraphBuilder emits (typed endpoints (label, name)).
@@ -176,6 +177,12 @@ object Graphs {
     * community graphs, the geo graph), metadata-scale at any corpus size. */
   val DriverMaxRows: Long = 1L << 20
 
+  /** Spark's string order, by UTF-8 bytes. `String.compareTo` orders
+    * UTF-16 units, which differs once a string mixes characters above
+    * the surrogate range (`ａ`) with supplementary ones (`😀`). */
+  private val sparkStringOrder: Ordering[String] = (a, b) =>
+    UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+
   /** Driver union-find with min-label union: every final root is the
     * MINIMUM of its component under `ord`, whatever order the pairs
     * arrive in — exactly the star contraction's fixed point, so labels
@@ -223,7 +230,7 @@ object Graphs {
     val idOrder: Ordering[Any] = (a, b) => (a, b) match {
       case (x: java.lang.Long, y: java.lang.Long) => x.compareTo(y)
       case (x: java.lang.Integer, y: java.lang.Integer) => x.compareTo(y)
-      case (x: String, y: String) => x.compareTo(y)
+      case (x: String, y: String) => sparkStringOrder.compare(x, y)
       case _ => a.toString.compareTo(b.toString)
     }
     val labels = minLabelComponents(p.collect().toSeq.map(r => (r.get(0), r.get(1))))(idOrder)
@@ -547,7 +554,6 @@ object Graphs {
   def maximalMatchingGuarded(edges: DataFrame, rounds: Int,
       localMax: Long = DriverMaxRows): DataFrame = {
     import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
-    import org.apache.spark.unsafe.types.UTF8String
     val e = edges.select(col("u"), col("v"), col("pkey"))
     if (!e.schema.forall(_.dataType == StringType)) return maximalMatching(e, rounds)
     val cp = e.localCheckpoint(eager = false)
@@ -1773,7 +1779,7 @@ object Graphs {
         val merged: DataFrame =
           if (nChosen <= DriverMaxRows) {
             val labels = minLabelComponents(chosen.select(col("cu"), col("cv"))
-              .collect().toSeq.map(r => (r.getString(0), r.getString(1))))
+              .collect().toSeq.map(r => (r.getString(0), r.getString(1))))(sparkStringOrder)
             import e0.sparkSession.implicits._
             broadcast(labels.toDF("c_str", "component"))
           } else {

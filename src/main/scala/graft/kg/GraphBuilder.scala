@@ -22,15 +22,16 @@ object GraphBuilder {
 
   private def nonEmpty(c: String) = col(c).isNotNull && trim(col(c)) =!= ""
 
-  /** Distinct nodes: (label, name). */
+  /** Distinct nodes: (label, name). Both endpoints of a triple leave
+    * one scan of `triples` through one generator, so a cached input is
+    * read (and filled) once. */
   def nodes(triples: DataFrame): DataFrame = {
-    val subj = triples.filter(nonEmpty("subject"))
-      .select(Normalize.normalizeLabel(col("subject_type")).as("label"),
-        col("subject").as("name"))
-    val obj = triples.filter(nonEmpty("object"))
-      .select(Normalize.normalizeLabel(col("object_type")).as("label"),
-        col("object").as("name"))
-    subj.unionAll(obj).distinct()
+    def end(name: String, tpe: String) =
+      struct(Normalize.normalizeLabel(col(tpe)).as("label"), col(name).as("name"))
+    triples
+      .select(inline(array(end("subject", "subject_type"), end("object", "object_type"))))
+      .filter(nonEmpty("name"))
+      .distinct()
   }
 
   /** Distinct weighted edges keyed by TYPED endpoints:
@@ -58,20 +59,17 @@ object GraphBuilder {
     * nodes `id:ID,name,:LABEL`, rels `:START_ID,:END_ID,:TYPE,weight`.
     * Node ids are md5(label|name) — stable, mergeable across runs. */
   def exportNeo4jBulk(triples: DataFrame, outDir: String): Unit = {
+    val id = (label: String, name: String) => md5(concat_ws("|", col(label), col(name)))
     val n = nodes(triples)
-      .select(md5(concat_ws("|", col("label"), col("name"))).as("id:ID"),
-        col("name"), col("label").as(":LABEL"))
-    // edge endpoints resolve to the md5 id of the matching node; the
-    // (label,name) → id mapping is recomputed expression-side (no join).
-    val labelOf = (side: String, typeCol: String) =>
-      md5(concat_ws("|", Normalize.normalizeLabel(col(typeCol)), col(side)))
-    val e = triples
-      .filter(nonEmpty("subject") && nonEmpty("object"))
-      .select(labelOf("subject", "subject_type").as(":START_ID"),
-        labelOf("object", "object_type").as(":END_ID"),
-        Normalize.normalizeRelation(col("relation")).as(":TYPE"))
-      .groupBy(":START_ID", ":END_ID", ":TYPE")
-      .agg(count(lit(1)).as("weight"))
+      .select(id("label", "name").as("id:ID"), col("name"), col("label").as(":LABEL"))
+    // relationships regroup `edges` on their endpoints' node ids: two
+    // typed edges whose ids coincide (a label or name holding `|`) merge
+    // and add their weights, as grouping the triples on the ids would.
+    // Over a `Pipeline.run` output both groups read its cached frames
+    val e = edges(triples)
+      .groupBy(id("src_label", "src").as(":START_ID"), id("dst_label", "dst").as(":END_ID"),
+        col("rel").as(":TYPE"))
+      .agg(sum("weight").as("weight"))
     // neo4j-admin import expects ONE header, not one per CSV part:
     // write headerless data parts plus a separate single-line header
     // file per group (the neo4j-admin `--nodes=header.csv,data/` form),

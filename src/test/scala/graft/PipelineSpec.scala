@@ -1,9 +1,15 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 import graft.kg.{GraphBuilder, LlmChains, Neo4jUpsert}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 
 class PipelineSpec extends SparkSpec {
@@ -146,19 +152,95 @@ class PipelineSpec extends SparkSpec {
       val dir = Files.createTempDirectory("graft_kgdata")
       Files.list(Path.of(kgDataDir)).filter(f => keep(f.getFileName.toString)).forEach(f =>
         Files.copy(f, dir.resolve(f.getFileName), StandardCopyOption.REPLACE_EXISTING))
-      def labels(out: Pipeline.KgOutputs) =
-        out.triples.select("subject").union(out.triples.select("object"))
-          .collect().map(_.getString(0)).toSet
+      def strings(df: DataFrame) = df.collect().map(_.getString(0)).toSet
+      // the names in the triples, the nodes and the edges; reading them
+      // fills all three caches
+      def labels(out: Pipeline.KgOutputs) = Seq(
+        strings(out.triples.select("subject").union(out.triples.select("object"))),
+        strings(out.nodes.select("name")),
+        strings(out.edges.select("src").union(out.edges.select("dst"))))
       val first = Pipeline.run(spark, dir.toString)
-      assert(labels(first).contains("The Port of Saint-Tropez"))
+      assert(labels(first).forall(_.contains("The Port of Saint-Tropez")))
       val xml = dir.resolve("ITA_130_027.xml")
       Files.writeString(xml, Files.readString(xml).replace("Saint-Tropez", "Collioure"))
       val second = Pipeline.run(spark, dir.toString)
-      val seen = labels(second)
-      assert(seen.contains("The Port of Collioure") && !seen.contains("The Port of Saint-Tropez"),
-        s"the second run over $dir read the first run's cached triples")
+      Seq("triples", "nodes", "edges").zip(labels(second)).foreach { case (frame, seen) =>
+        assert(seen.contains("The Port of Collioure") && !seen.contains("The Port of Saint-Tropez"),
+          s"the second run over $dir read the first run's cached $frame")
+      }
       Seq(first, second).foreach(_.unpersist())
     }
+  }
+
+  test("KgOutputs registers its three caches without a job, and unpersist leaves no entry of the run") {
+    val out = Pipeline.run(spark, kgDataDir)
+    assert(countJobs(out.nodes) == 0)
+    val frames = Seq(out.triples, out.nodes, out.edges)
+    assert(frames.forall(_.storageLevel == StorageLevel.MEMORY_AND_DISK))
+    out.edges.count()
+    out.unpersist()
+    // nor do equal plans built afresh find one
+    val fresh = Seq(GraphBuilder.nodes(out.triples), GraphBuilder.edges(out.triples))
+    assert((frames ++ fresh).forall(_.storageLevel == StorageLevel.NONE))
+  }
+
+  test("the bulk export and the Cypher batches fill each cache once and aggregate the triples twice") {
+    val out = Pipeline.run(spark, kgDataDir)
+    try {
+      val plans = executedPlans {
+        GraphBuilder.exportNeo4jBulk(out.triples, Files.createTempDirectory("graft_pipeline").toString)
+        Neo4jUpsert.run(Neo4jUpsert.edgeUpsertBatchesBySize(out.edges, 500), DiscardingTransport)
+      }
+      assert(plans.size >= 3, s"${plans.size} executed plans seen for two writes and one upsert")
+      val Seq(t, n, e) = Seq(out.triples, out.nodes, out.edges).map(cacheOf)
+      def reads(plan: SparkPlan, c: InMemoryRelation) =
+        cacheScans(plan).count(_.relation.cacheBuilder eq c.cacheBuilder)
+      // the writes and the upsert read the nodes and edges caches, never the triples
+      assert(plans.map(reads(_, n)).sum > 0 && plans.map(reads(_, e)).sum > 0)
+      assert(plans.map(reads(_, t)).sum == 0)
+      // the triples are read once by each aggregate that fills a cache
+      Seq(n, e).foreach(c => assert(reads(c.cacheBuilder.cachedPlan, t) == 1))
+      // each cache is filled once: it built as many rows as it holds
+      Seq(out.triples -> t, out.nodes -> n, out.edges -> e).foreach { case (df, c) =>
+        val built = c.cacheBuilder.rowCountStats.value
+        assert(c.cacheBuilder.isCachedColumnBuffersLoaded)
+        assert(built == df.count(), s"$built rows built")
+      }
+    } finally out.unpersist()
+  }
+
+  /** The cache that serves `df`. */
+  private def cacheOf(df: DataFrame): InMemoryRelation =
+    df.queryExecution.withCachedData.collectFirst { case r: InMemoryRelation => r }.get
+
+  /** The cache scans of an executed plan, through adaptive plans, query
+    * stages and write commands. */
+  private def cacheScans(p: SparkPlan): Seq[InMemoryTableScanExec] = p match {
+    case s: InMemoryTableScanExec => Seq(s)
+    case a: AdaptiveSparkPlanExec => cacheScans(a.executedPlan)
+    case q: QueryStageExec => cacheScans(q.plan)
+    case other => (other.children ++ other.innerChildren.collect { case c: SparkPlan => c })
+      .flatMap(cacheScans)
+  }
+
+  /** The executed plans of the queries `body` runs, once the listener bus
+    * has delivered them. */
+  private def executedPlans(body: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      var (last, stable) = (-1, 0)
+      while (stable < 3) {
+        Thread.sleep(100)
+        if (plans.size == last) stable += 1 else { stable = 0; last = plans.size }
+      }
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
   }
 }
 

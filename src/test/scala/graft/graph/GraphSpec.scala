@@ -40,6 +40,16 @@ class GraphSpec extends SparkSpec {
     assert(toMap(Graphs.componentsGuarded(le, maxDriverRows = 0L)) == gl)
   }
 
+  test("C2 componentsGuarded labels by Spark's UTF-8 string order, as the distributed CC does") {
+    // "ａ" (U+FF41) sorts below "😀" (U+1F600) in UTF-8 bytes, above it in UTF-16 units
+    val e = edgesDf("😀" -> "ａ", "ａ" -> "😀ｂ")
+    def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val dist = toMap(Graphs.connectedComponents(e))
+    assert(dist.values.toSet == Set("ａ"))
+    assert(toMap(Graphs.componentsGuarded(e)) == dist)
+  }
+
   test("C2 connected components: long chain needs log-round convergence") {
     val chain = (0 until 64).map(i => (f"v$i%03d", f"v${i + 1}%03d"))
     val cc = Graphs.connectedComponents(edgesDf(chain: _*)).collect()

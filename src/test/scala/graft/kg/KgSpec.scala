@@ -61,6 +61,51 @@ object FailingChain extends LlmChains.Chain {
   }
 }
 
+/** The graph build as it was before `nodes` read its input in one scan
+  * and the bulk export regrouped `edges`: the reference both are
+  * checked against. */
+object TwoScanGraph {
+  import org.apache.spark.sql.DataFrame
+
+  private def nonEmpty(c: String) = col(c).isNotNull && trim(col(c)) =!= ""
+
+  /** Nodes as the union of a filtered scan per endpoint. */
+  def nodes(triples: DataFrame): DataFrame = {
+    val subj = triples.filter(nonEmpty("subject"))
+      .select(Normalize.normalizeLabel(col("subject_type")).as("label"),
+        col("subject").as("name"))
+    val obj = triples.filter(nonEmpty("object"))
+      .select(Normalize.normalizeLabel(col("object_type")).as("label"),
+        col("object").as("name"))
+    subj.unionAll(obj).distinct()
+  }
+
+  /** The bulk export with relationships aggregated from the triples
+    * directly, on the endpoints' md5 ids. */
+  def exportNeo4jBulk(triples: DataFrame, outDir: String): Unit = {
+    val n = nodes(triples)
+      .select(md5(concat_ws("|", col("label"), col("name"))).as("id:ID"),
+        col("name"), col("label").as(":LABEL"))
+    val labelOf = (side: String, typeCol: String) =>
+      md5(concat_ws("|", Normalize.normalizeLabel(col(typeCol)), col(side)))
+    val e = triples
+      .filter(nonEmpty("subject") && nonEmpty("object"))
+      .select(labelOf("subject", "subject_type").as(":START_ID"),
+        labelOf("object", "object_type").as(":END_ID"),
+        Normalize.normalizeRelation(col("relation")).as(":TYPE"))
+      .groupBy(":START_ID", ":END_ID", ":TYPE")
+      .agg(count(lit(1)).as("weight"))
+    def writeGroup(df: DataFrame, sub: String): Unit = {
+      df.write.mode("overwrite").option("header", "false").csv(s"$outDir/$sub/data")
+      val header = java.nio.file.Path.of(s"$outDir/$sub/header")
+      Files.createDirectories(header)
+      Files.writeString(header.resolve("part-00000"), df.columns.mkString(",") + "\n")
+    }
+    writeGroup(n, "nodes")
+    writeGroup(e, "relationships")
+  }
+}
+
 class KgSpec extends SparkSpec {
 
   private def triplesDf(rows: (String, String, String, String, String)*) = {
@@ -118,10 +163,51 @@ class KgSpec extends SparkSpec {
     assert(ids.contains(s) && ids.contains(e))
   }
 
+  /** Every line of a bulk export, per group and part kind. */
+  private def exportLines(dir: String): Map[String, Seq[String]] =
+    (for (g <- Seq("nodes", "relationships"); k <- Seq("header", "data"))
+      yield s"$g/$k" -> readDirText(s"$dir/$g/$k").sorted).toMap
+
+  /** Exports `t` and the reference; returns the export's lines. */
+  private def assertExportsLikeReference(t: org.apache.spark.sql.DataFrame): Map[String, Seq[String]] = {
+    val (got, want) = (Files.createTempDirectory("graft_neo4j").toString,
+      Files.createTempDirectory("graft_neo4j_ref").toString)
+    GraphBuilder.exportNeo4jBulk(t, got)
+    TwoScanGraph.exportNeo4jBulk(t, want)
+    val (g, w) = (exportLines(got), exportLines(want))
+    assert(w("nodes/data").nonEmpty && w("relationships/data").nonEmpty)
+    g.keys.foreach(k => assert(g(k) == w(k), s"$k differs from the reference"))
+    g
+  }
+
+  test("B8 neo4j bulk export writes the reference's lines on the pipeline's triples") {
+    val out = graft.Pipeline.run(spark, kgDataDir)
+    try assertExportsLikeReference(out.triples)
+    finally out.unpersist()
+  }
+
+  test("B8 neo4j bulk export writes the reference's lines on odd triples") {
+    // "c" typed "a|b" and "b|c" typed "a" share the node id md5("A|b|c"),
+    // so their edges to "X" merge into one relationship of weight 2
+    val t = triplesDf(
+      ("c", "a|b", "painted", "X", "artwork"),
+      ("b|c", "a", "painted", "X", "artwork"),
+      ("Torino", "city", "located in", "Torino", "museum"),
+      ("Torino", "museum", "located in", "Torino", "museum"),
+      (null, "artist", "painted", "OnlyObject", "painting"),
+      ("OnlySubject", "artist", "painted", "", "painting"),
+      ("Blank", "artist", "painted", "  ", null),
+      ("\t", null, null, "Tab", ""),
+      (" padded ", "art_work", "same-as", "X", "artwork"),
+    )
+    val rels = assertExportsLikeReference(t)("relationships/data")
+    assert(rels.exists(_.endsWith(",PAINTED,2")), s"the colliding ids did not merge: $rels")
+  }
+
   private def readDirText(dir: String): Seq[String] = {
     val d = new java.io.File(dir)
     d.listFiles().filter(f => f.getName.startsWith("part-") && !f.getName.endsWith(".crc"))
-      .toSeq.flatMap(f => scala.io.Source.fromFile(f).getLines().toSeq)
+      .toSeq.flatMap(f => scala.io.Source.fromFile(f, "UTF-8").getLines().toSeq)
   }
 
   test("B9 chain runs partition-wise and tolerant parser survives noise") {
