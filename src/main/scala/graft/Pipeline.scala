@@ -21,48 +21,43 @@ import graft.kg.{GraphBuilder, LlmChains, Normalize}
   *  5. MERGE-build nodes/edges; optionally export neo4j bulk CSVs.
   *
   * Every stage is a narrow or single-shuffle transformation, with no
-  * driver-side loops. The standardized triples and the `nodes` and
-  * `edges` built over them are three persisted frames, so the first
-  * action on any of them fills its cache and every later one, the bulk
-  * export's and the Cypher batches' among them, reads it: sources,
-  * batching, the chain, recovery and normalization run once per run, the
-  * chain once per prompt, and each aggregate once. The caller releases
-  * the three caches (`KgOutputs.unpersist()`).
+  * driver-side loops. The standardized triples and the `edges` built
+  * over them are two persisted frames, so the first action on either
+  * fills its cache and every later one, the bulk export's and the Cypher
+  * batches' among them, reads it: sources, batching, the chain, recovery
+  * and normalization run once per run, the chain once per prompt, and
+  * the edge aggregate once. The caller releases the two caches
+  * (`KgOutputs.unpersist()`).
   */
 object Pipeline {
 
   /** The pipeline's outputs. `triples` is the standardized triples,
     * and `nodes` and `edges` are `GraphBuilder.nodes` and
-    * `GraphBuilder.edges` over that one frame. The three are registered
-    * as persisted frames (MEMORY_AND_DISK, no job) together, when any of
-    * them is first asked for, so `GraphBuilder.exportNeo4jBulk(triples)`
-    * and readers of `edges` find them in the cache too. The outputs hold
-    * the three caches until `unpersist()`, which the caller owns.
-    * `records` is a plain lazy frame, so a caller that reads only the
-    * records plans and caches nothing more. */
+    * `GraphBuilder.edges` over that one frame. The triples and the edges
+    * are registered as persisted frames (MEMORY_AND_DISK, no job)
+    * together, when any output but `records` is first asked for, so
+    * `GraphBuilder.exportNeo4jBulk(triples)` finds the edges in the cache
+    * too. `nodes` is not cached: a pass reads it once, in the export. The
+    * outputs hold the two caches until `unpersist()`, which the caller
+    * owns. `records` is a plain lazy frame, so a caller that reads only
+    * the records plans and caches nothing more. */
   final class KgOutputs private[Pipeline] (val records: DataFrame, standardized: DataFrame) {
     // persist() keeps the analyzed plan (a checkpoint would replace it),
     // so the pipeline's stages stay visible in it. A plan without the
     // chain's closure (RDF/XML only) compares equal to an earlier run's
     // over the same files, whose cache would serve that run's rows: each
     // frame drops an equal entry first, so these outputs read their files
-    private var held: Seq[DataFrame] = Nil
-    private def cached: Seq[DataFrame] = synchronized {
-      if (held.isEmpty) {
-        def register(df: DataFrame) = { df.unpersist(); df.persist() }
-        val t = register(standardized)
-        held = Seq(t, register(GraphBuilder.nodes(t)), register(GraphBuilder.edges(t)))
-      }
-      held
+    lazy val (triples, edges) = {
+      def register(df: DataFrame) = { df.unpersist(); df.persist() }
+      val t = register(standardized)
+      (t, register(GraphBuilder.edges(t)))
     }
-    def triples: DataFrame = cached(0)
-    def nodes: DataFrame = cached(1)
-    def edges: DataFrame = cached(2)
+    lazy val nodes: DataFrame = GraphBuilder.nodes(triples)
 
-    /** Releases the three caches, the aggregates before the triples they
-      * read; the outputs stay usable and recompute from the files when
-      * read again. */
-    def unpersist(): Unit = synchronized { held.reverse.foreach(_.unpersist()) }
+    /** Releases the two caches, the edges before the triples they read;
+      * the outputs stay usable and recompute from the files when read
+      * again. */
+    def unpersist(): Unit = Seq(edges, triples).foreach(_.unpersist())
   }
 
   /** Driver-side listing of top-level inputs by extension (per-file

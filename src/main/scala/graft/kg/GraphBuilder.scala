@@ -65,7 +65,8 @@ object GraphBuilder {
     // relationships regroup `edges` on their endpoints' node ids: two
     // typed edges whose ids coincide (a label or name holding `|`) merge
     // and add their weights, as grouping the triples on the ids would.
-    // Over a `Pipeline.run` output both groups read its cached frames
+    // Over a `Pipeline.run` output the nodes read its triples cache and
+    // the relationships its edges cache
     val e = edges(triples)
       .groupBy(id("src_label", "src").as(":START_ID"), id("dst_label", "dst").as(":END_ID"),
         col("rel").as(":TYPE"))

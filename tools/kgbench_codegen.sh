@@ -19,15 +19,15 @@
 #   - the compile ms per pass: steady compiles per pass times the
 #     histogram's mean compile time at the end of the timed passes (a
 #     recency-weighted mean, so an estimate).
-# The run lasts BENCHMARK.json's run_seconds, or KGBENCH_SECONDS; the
-# sink reports once a second, so longer runs give a steadier slope.
+# Each run lasts 20 s of timed passes. The sink reports once a second,
+# so a 5 s run fits too few reports for a steady slope; the compiles per
+# pass do not depend on the run's length.
 # No file under kgbench/ changes.
 set -euo pipefail
 WORKLOAD=${1:?workload name from BENCHMARK.json}
 SEED=${2:-1001}
 ROOT=$(cd "$(dirname "$0")/.." && pwd)
-SECONDS_PER_RUN=${KGBENCH_SECONDS:-$(python3 -c \
-  'import json,sys; print(json.load(open(sys.argv[1]))["run_seconds"])' "$ROOT/BENCHMARK.json")}
+SECONDS_PER_RUN=20
 
 WORK=$(mktemp -d "${TMPDIR:-/tmp}/kgbench_codegen_XXXXXX")
 trap 'rm -rf "$WORK"' EXIT
